@@ -40,21 +40,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val warmDir = "/root/testdata/sf0.001"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // int96 (the default) carries no usable footer stats; micros makes
-      // timestamp columns skippable/meta-aggregatable like dates
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // A/B attribution knob for the join-driven skipping rule
-      .config("spark.graft.joinSkip.enabled",
-        sys.env.getOrElse("GRAFT_JOINSKIP", "true"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir)
       SparkEntry.queries.foreach { case (_, fn) =>
         try { fn(spark, warmDir).count(); () } catch { case _: Throwable => () }

@@ -404,58 +404,26 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    if (args.headOption.contains("gen")) {
-      val Array(_, baseDir, outDir, factor) = args
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
-      genCorpus(spark, baseDir, outDir, factor.toInt)
-      spark.stop()
-      return
+    def sizes = args(2).split(',').toSeq.map(_.trim.toInt)
+    def run(cpus: Int)(body: SparkSession => Unit): Unit = {
+      val spark = GraftSession(cpus)
+      try body(spark) finally spark.stop()
     }
-    if (args.headOption.contains("skew")) {
-      val spark = SparkSession.builder().master("local[32]")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      skewSweep(spark, args(1), args(2).split(',').toSeq.map(_.trim.toInt))
-      spark.stop()
-      return
+    args.headOption match {
+      case Some("gen") =>
+        val Array(_, baseDir, outDir, factor) = args
+        run(32)(genCorpus(_, baseDir, outDir, factor.toInt))
+      case Some("skew") => run(32)(skewSweep(_, args(1), sizes))
+      case Some("autoskip") => run(2)(autoskipSweep(_, args(1), sizes))
+      case Some("commit") => run(2)(commitSweep(_, args(1), sizes))
+      case _ => run(32)(probe(_, args))
     }
-    if (args.headOption.contains("autoskip")) {
-      val spark = SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      autoskipSweep(spark, args(1), args(2).split(',').toSeq.map(_.trim.toInt))
-      spark.stop()
-      return
-    }
-    if (args.headOption.contains("commit")) {
-      val spark = SparkSession.builder().master("local[2]")
-        .config("spark.ui.enabled", "false").getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
-      commitSweep(spark, args(1), args(2).split(',').toSeq.map(_.trim.toInt))
-      spark.stop()
-      return
-    }
+  }
+
+  private def probe(spark: SparkSession, args: Array[String]): Unit = {
     val Array(baseDir, workDir, factorS, queriesS) = args.take(4)
     val factor = factorS.toInt
     val queries = queriesS.split(',').toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.driver.memory", "16g")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
     val dir = s"$workDir/x$factor"
     if (!new java.io.File(s"$dir/documents.parquet").exists()) {
       val t0 = System.nanoTime()
@@ -473,6 +441,5 @@ object ScaleProbe {
       }
       println(f"""{"query":"$q","factor":$factor,"sec":${secs.min}%.3f}""")
     }
-    spark.stop()
   }
 }

@@ -24,6 +24,9 @@ import org.apache.spark.sql.functions._
   * uncapped self-join form — the oracle-gated default at test scale.
   */
 object CoPurchase {
+  /** Hot-group threshold B of the uncapped path (default 256): a
+    * positive integer, anything else is rejected. */
+  val SaltDegreeKey = "spark.graft.copurchase.saltDegree"
 
   /** Distinct item pairs co-occurring in ≥ `minSupport` groups, with
     * the co-occurrence count as `n_<groupCol>`.
@@ -53,9 +56,10 @@ object CoPurchase {
         // so counts (and the oracle hash) are unchanged. B is
         // parameterized; deg ≤ B groups pay only the degree
         // aggregation (map-side combined, |groups| rows shuffled).
-        val B = incidences.sparkSession.conf
-          .getOption("spark.graft.copurchase.saltDegree")
-          .flatMap(_.toLongOption).getOrElse(256L)
+        val B = incidences.sparkSession.conf.getOption(SaltDegreeKey).fold(256L) { v =>
+          v.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+            s"$SaltDegreeKey must be a positive integer, got '$v'"))
+        }
         val inc = incidences.select(g, col(itemCol).as("_it"))
         val deg = inc.groupBy(g).agg(count(lit(1)).as("_deg"))
         val withDeg = inc.join(deg, Seq(groupCol))

@@ -259,7 +259,7 @@ object Dedup {
     // sides re-derive the signatures) — persist it so the corpus
     // scan + WordShinglesExpr run ONCE (the BENCH_r03 regression was
     // this plan re-evaluating the scan 3×). CacheManager holds the
-    // entry until clearCache()/session stop — the Verify/Bench/RunOne
+    // entry until clearCache()/session stop — the Verify and Bench
     // harnesses clearCache after each query; a long-lived session
     // embedding this must do the same.
     val sh = shingledFrom(reps)

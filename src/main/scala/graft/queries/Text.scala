@@ -2078,12 +2078,7 @@ object Text {
         () => wh.append("bm25_doclen", nl),
         () => wh.atomicPublish("bm25_dict", dictNew),
         () => wh.atomicPublish("bm25_totals", totNew))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(ops.size)
-      try {
-        ops.map(op => pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = op()
-        })).foreach(_.get())
-      } finally pool.shutdown()
+      graft.Parallel.map(ops, ops.size)(op => op())
     } finally { batch.unpersist(); () }
   }
 

@@ -283,21 +283,8 @@ object FileStats {
         // independent ~ms metadata read, and a 30-file version read
         // sequentially was a measurable slice of every commit (guide
         // §2.6 overlap — no Spark job needed at this size)
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(8, parquetFiles.size))
-        try parquetFiles.map { f =>
-          f -> pool.submit(new java.util.concurrent.Callable[
-            (Map[String, ColStat], RowStat)] {
-            def call(): (Map[String, ColStat], RowStat) =
-              footerAll(conf, s"$versionDir/$f")
-          })
-        }.map { case (f, fut) =>
-          f -> (try fut.get() catch {
-            case e: java.util.concurrent.ExecutionException =>
-              throw Option(e.getCause).getOrElse(e)
-          })
-        }.toMap
-        finally pool.shutdown()
+        graft.Parallel.map(parquetFiles, 8)(f =>
+          f -> footerAll(conf, s"$versionDir/$f")).toMap
       }
     } else {
       val keep = Seq("fs.", "dfs.", "io.", "hadoop.", "parquet.")

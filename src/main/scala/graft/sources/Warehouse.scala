@@ -2589,7 +2589,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // create-no-overwrite on the manifest stays the commit claim; a
     // loser's already-written chunks are reaped by abort()/GC
     val built =
-      try Warehouse.prof("commit: buildManifest")(buildManifest(fs, root, n, spec))
+      try buildManifest(fs, root, n, spec)
       catch { case e: Throwable => releaseClaim(); throw e }
     val mf = new Path(root, s"_manifest_v$n")
     val out =
@@ -2718,7 +2718,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
             dvRemP, dvRemF))
       }
       toStage.foreach { stage =>
-        val staged = Warehouse.prof("commit: dv stage")(stage())
+        val staged = stage()
         stagedDv = Some(staged)
         if (!pointerStore.compareAndSet(fs, root, dvPtrName(mf.getName), None,
             staged, () => pointerStore.read(fs, root, dvPtrName(mf.getName))))
@@ -2782,7 +2782,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // `promoteBranch` release it. (Without this, a publish could reap
     // an open branch's manifest + version dir, leaving its pointer
     // dangling — a state no code path could then clean up.)
-    Warehouse.prof("commit: gc sweep") {
     val branchPinned = branchPointedManifests(fs, root).values.toSet
     // retention policy (round 12): keep the last `retain_snapshots`
     // committed manifests (default 2 = current + previous, the
@@ -2860,7 +2859,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
             case _ => ()
           }
       }
-    }
     }
   }
 
@@ -3197,10 +3195,9 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // per-version file lists and DV frames are resolved ONCE up front;
     // the loop below only composes plans (v0 = the synthetic empty set)
     val versions: Seq[(Long, Set[String])] =
-      Warehouse.prof(s"cdf: manifests v$fromV..v$toV")(
-        chainDown.reverse.map(v =>
-          v -> (if (v == 0L) Set.empty[String]
-                else readManifest(fs, manifestOf(v)).toSet)))
+      chainDown.reverse.map(v =>
+        v -> (if (v == 0L) Set.empty[String]
+              else readManifest(fs, manifestOf(v)).toSet))
     // per-version deltas are independent of each other: compose them
     // from a small driver pool (guide §2.6 — each compose mixes
     // driver-side Catalyst analysis with one or two tiny DV-pruning
@@ -3210,96 +3207,95 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     val versionPairs = versions.sliding(2).toSeq
       .collect { case Seq(a, b) => (a, b) }
     def composeOne(pv: Long, prev: Set[String], v: Long,
-        cur: Set[String]): Option[DataFrame] =
-      Warehouse.prof(s"cdf: compose v$v") {
-        val kind = commitKind(name, v)
-        if (kind.exists(k => k == "optimize" || k == "maintain")) None
-        else {
-          val addedFiles = (cur -- prev).toSeq.sorted
-          val removedFiles = (prev -- cur).toSeq.sorted
-          val dvNew = dvOf(v)
-          val dvOld = dvOf(pv)
-          // a file-name frame sized by the DELTA (never the table) —
-          // DV restriction joins against it, broadcast, instead of a
-          // literal In() that would grow with the commit
-          def fileSet(files: Seq[String]): DataFrame = {
-            import spark.implicits._
-            files.toDF("_xfile")
-          }
-          // a DV can only reference files of its OWN manifest, so
-          // "entries on surviving files" = all entries minus the
-          // delta's — the anti side is the small one by construction
-          def dvOn(dv: Option[DataFrame], delta: Seq[String],
-              keep: Boolean): Option[DataFrame] = dv.map { d =>
-            if (delta.isEmpty) { if (keep) d.limit(0) else d }
-            else d.join(broadcast(fileSet(delta)),
-              col("_file") === col("_xfile"),
-              if (keep) "left_semi" else "left_anti")
-          }
-          // rows of an explicit file list minus a DV restricted to it
-          def liveRows(files: Seq[String], dv: Option[DataFrame]): Option[DataFrame] =
-            if (files.isEmpty) None
-            else Some(dvOn(dv, files, keep = true) match {
-              case None => readFiles(name, files).drop("_file", "_pos")
-              case Some(d) =>
-                readFiles(name, files, withPos = true)
-                  .join(broadcast(d.select(col("_file").as("_dfile"),
-                    col("_pos").as("_dpos"))),
-                    col("_file") === col("_dfile") && col("_pos") === col("_dpos"),
-                    "left_anti")
-                  .drop("_file", "_pos")
-            })
-          // DV delta on surviving files: rows read back BY POSITION via
-          // an inner join against the broadcast position set. Only the
-          // DISTINCT FILE LIST is collected (bounded by the version's
-          // file count — it sizes the explicit-scan plan); the
-          // positions themselves stay a distributed frame, so a commit
-          // that deleted 10⁹ rows never stages them on the driver.
-          def rowsAt(positions: Option[DataFrame]): Option[DataFrame] =
-            positions.flatMap { p =>
-              val files = p.select(col("_file")).distinct()
-                .collect().map(_.getString(0)).toSeq.sorted
-              if (files.isEmpty) None
-              else Some(readFiles(name, files, withPos = true)
-                .join(broadcast(p.select(col("_file").as("_dfile"),
-                  col("_pos").as("_dpos"))),
-                  col("_file") === col("_dfile") && col("_pos") === col("_dpos"))
-                .drop("_file", "_pos", "_dfile", "_dpos"))
-            }
-          val dvNewC = dvOn(dvNew, addedFiles, keep = false)
-          val dvOldC = dvOn(dvOld, removedFiles, keep = false)
-          val (newlyDeleted, resurrected) = (dvNewC, dvOldC) match {
-            case (None, None)       => (None, None)
-            case (Some(n2), None)   => (Some(n2), None)
-            case (None, Some(o))    => (None, Some(o))
-            case (Some(n2), Some(o)) =>
-              (Some(n2.exceptAll(o)), Some(o.exceptAll(n2)))
-          }
-          val ins0 = Seq(liveRows(addedFiles, dvNew), rowsAt(resurrected)).flatten
-            .reduceOption(_.unionByName(_, allowMissingColumns = true))
-          val del0 = Seq(liveRows(removedFiles, dvOld), rowsAt(newlyDeleted)).flatten
-            .reduceOption(_.unionByName(_, allowMissingColumns = true))
-          // cancel rewrite churn: rows identical on both sides are not
-          // changes (multiset semantics — exceptAll keeps true
-          // duplicate-count deltas)
-          val (ins, del) = (ins0, del0) match {
-            case (Some(i), Some(d)) if collapseUnchanged =>
-              val cols = i.columns.toSet ++ d.columns.toSet
-              def widen(x: DataFrame): DataFrame = cols.diff(x.columns.toSet)
-                .foldLeft(x)((acc, c) => acc.withColumn(c, lit(null)))
-              val iw = widen(i).select(cols.toSeq.sorted.map(col): _*)
-              val dw = widen(d).select(cols.toSeq.sorted.map(col): _*)
-              (Some(iw.exceptAll(dw)), Some(dw.exceptAll(iw)))
-            case other => other
-          }
-          val tagged = Seq(
-            ins.map(_.withColumn("_change_type", lit("insert"))),
-            del.map(_.withColumn("_change_type", lit("delete")))).flatten
-          tagged.reduceOption(_.unionByName(_, allowMissingColumns = true))
-            .map(_.withColumn("_commit_version", lit(v))
-              .withColumn("_commit_timestamp", commitTsCol(name, v)))
+        cur: Set[String]): Option[DataFrame] = {
+      val kind = commitKind(name, v)
+      if (kind.exists(k => k == "optimize" || k == "maintain")) None
+      else {
+        val addedFiles = (cur -- prev).toSeq.sorted
+        val removedFiles = (prev -- cur).toSeq.sorted
+        val dvNew = dvOf(v)
+        val dvOld = dvOf(pv)
+        // a file-name frame sized by the DELTA (never the table) —
+        // DV restriction joins against it, broadcast, instead of a
+        // literal In() that would grow with the commit
+        def fileSet(files: Seq[String]): DataFrame = {
+          import spark.implicits._
+          files.toDF("_xfile")
         }
+        // a DV can only reference files of its OWN manifest, so
+        // "entries on surviving files" = all entries minus the
+        // delta's — the anti side is the small one by construction
+        def dvOn(dv: Option[DataFrame], delta: Seq[String],
+            keep: Boolean): Option[DataFrame] = dv.map { d =>
+          if (delta.isEmpty) { if (keep) d.limit(0) else d }
+          else d.join(broadcast(fileSet(delta)),
+            col("_file") === col("_xfile"),
+            if (keep) "left_semi" else "left_anti")
+        }
+        // rows of an explicit file list minus a DV restricted to it
+        def liveRows(files: Seq[String], dv: Option[DataFrame]): Option[DataFrame] =
+          if (files.isEmpty) None
+          else Some(dvOn(dv, files, keep = true) match {
+            case None => readFiles(name, files).drop("_file", "_pos")
+            case Some(d) =>
+              readFiles(name, files, withPos = true)
+                .join(broadcast(d.select(col("_file").as("_dfile"),
+                  col("_pos").as("_dpos"))),
+                  col("_file") === col("_dfile") && col("_pos") === col("_dpos"),
+                  "left_anti")
+                .drop("_file", "_pos")
+          })
+        // DV delta on surviving files: rows read back BY POSITION via
+        // an inner join against the broadcast position set. Only the
+        // DISTINCT FILE LIST is collected (bounded by the version's
+        // file count — it sizes the explicit-scan plan); the
+        // positions themselves stay a distributed frame, so a commit
+        // that deleted 10⁹ rows never stages them on the driver.
+        def rowsAt(positions: Option[DataFrame]): Option[DataFrame] =
+          positions.flatMap { p =>
+            val files = p.select(col("_file")).distinct()
+              .collect().map(_.getString(0)).toSeq.sorted
+            if (files.isEmpty) None
+            else Some(readFiles(name, files, withPos = true)
+              .join(broadcast(p.select(col("_file").as("_dfile"),
+                col("_pos").as("_dpos"))),
+                col("_file") === col("_dfile") && col("_pos") === col("_dpos"))
+              .drop("_file", "_pos", "_dfile", "_dpos"))
+          }
+        val dvNewC = dvOn(dvNew, addedFiles, keep = false)
+        val dvOldC = dvOn(dvOld, removedFiles, keep = false)
+        val (newlyDeleted, resurrected) = (dvNewC, dvOldC) match {
+          case (None, None)       => (None, None)
+          case (Some(n2), None)   => (Some(n2), None)
+          case (None, Some(o))    => (None, Some(o))
+          case (Some(n2), Some(o)) =>
+            (Some(n2.exceptAll(o)), Some(o.exceptAll(n2)))
+        }
+        val ins0 = Seq(liveRows(addedFiles, dvNew), rowsAt(resurrected)).flatten
+          .reduceOption(_.unionByName(_, allowMissingColumns = true))
+        val del0 = Seq(liveRows(removedFiles, dvOld), rowsAt(newlyDeleted)).flatten
+          .reduceOption(_.unionByName(_, allowMissingColumns = true))
+        // cancel rewrite churn: rows identical on both sides are not
+        // changes (multiset semantics — exceptAll keeps true
+        // duplicate-count deltas)
+        val (ins, del) = (ins0, del0) match {
+          case (Some(i), Some(d)) if collapseUnchanged =>
+            val cols = i.columns.toSet ++ d.columns.toSet
+            def widen(x: DataFrame): DataFrame = cols.diff(x.columns.toSet)
+              .foldLeft(x)((acc, c) => acc.withColumn(c, lit(null)))
+            val iw = widen(i).select(cols.toSeq.sorted.map(col): _*)
+            val dw = widen(d).select(cols.toSeq.sorted.map(col): _*)
+            (Some(iw.exceptAll(dw)), Some(dw.exceptAll(iw)))
+          case other => other
+        }
+        val tagged = Seq(
+          ins.map(_.withColumn("_change_type", lit("insert"))),
+          del.map(_.withColumn("_change_type", lit("delete")))).flatten
+        tagged.reduceOption(_.unionByName(_, allowMissingColumns = true))
+          .map(_.withColumn("_commit_version", lit(v))
+            .withColumn("_commit_timestamp", commitTsCol(name, v)))
       }
+    }
     // `parallelCompose` is OPT-IN (the streaming source's getBatch
     // turns it on): the SQL `changes(...)` table function reaches this
     // method from inside SessionCatalog.lookupFunction — the calling
@@ -3311,19 +3307,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       if (versionPairs.size <= 1 || !parallelCompose)
         versionPairs.flatMap { case ((pv, prev), (v, cur)) =>
           composeOne(pv, prev, v, cur) }
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(4, versionPairs.size))
-        try versionPairs.map { case ((pv, prev), (v, cur)) =>
-          pool.submit(new java.util.concurrent.Callable[Option[DataFrame]] {
-            def call(): Option[DataFrame] = composeOne(pv, prev, v, cur)
-          })
-        }.flatMap(f => try f.get() catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw Option(e.getCause).getOrElse(e)
-        })
-        finally pool.shutdown()
-      }
+      else graft.Parallel.map(versionPairs, 4) { case ((pv, prev), (v, cur)) =>
+        composeOne(pv, prev, v, cur) }.flatten
     perVersion.reduceOption(_.unionByName(_, allowMissingColumns = true))
       .getOrElse {
         // empty feed, correct schema: the current snapshot's columns
@@ -4890,11 +4875,9 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     val fs = fileSystem(root)
     val n = claimVersion(fs, root)
     val vdir = new Path(root, s"_v$n")
-    Warehouse.prof("write: parquet") {
-      val writer = df.write.mode(SaveMode.ErrorIfExists)
-      (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-        .parquet(vdir.toString)
-    }
+    val writer = df.write.mode(SaveMode.ErrorIfExists)
+    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
+      .parquet(vdir.toString)
     val rel = versionFiles(fs, root, vdir)
     // data-skipping sidecars off the parquet footers just written (no
     // data pages re-read; distributed when the version is large; ONE
@@ -4917,27 +4900,23 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // job), preserving the pinned decoded-value canonicalization
     // (AutoSkipSpec's mixed `pd=1`/`pd=01` rendering merge). Readers
     // fall back to full inference when the sidecar is absent.
-    Warehouse.prof("write: schema sidecar") {
-      val p = new Path(vdir, "_schema")
-      val out = fs.create(p, true)
-      val dataOnly = org.apache.spark.sql.types.StructType(
-        df.schema.filterNot(f => partitionCols.contains(f.name)))
-      try out.write(Warehouse.allNullable(dataOnly).json.getBytes(
-        java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-    }
-    Warehouse.prof("write: stats sidecars") {
-      val all = FileStats.collectAll(spark, vdir.toString, inner)
-      FileStats.write(fs, new Path(vdir, "_stats"),
-        all.map { case (f, (cols, _)) => f -> cols })
-      FileStats.writeRows(fs, new Path(vdir, "_rows"),
-        all.map { case (f, (_, rows)) => f -> rows })
-      // per-partition shards of the same records: a later partition-
-      // scoped commit reads only the touched partition's stats
-      FileStats.writeSharded(fs, vdir,
-        all.map { case (f, (cols, _)) => f -> cols },
-        all.map { case (f, (_, rows)) => f -> rows })
-    }
+    val p = new Path(vdir, "_schema")
+    val out = fs.create(p, true)
+    val dataOnly = org.apache.spark.sql.types.StructType(
+      df.schema.filterNot(f => partitionCols.contains(f.name)))
+    try out.write(Warehouse.allNullable(dataOnly).json.getBytes(
+      java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
+    val all = FileStats.collectAll(spark, vdir.toString, inner)
+    FileStats.write(fs, new Path(vdir, "_stats"),
+      all.map { case (f, (cols, _)) => f -> cols })
+    FileStats.writeRows(fs, new Path(vdir, "_rows"),
+      all.map { case (f, (_, rows)) => f -> rows })
+    // per-partition shards of the same records: a later partition-
+    // scoped commit reads only the touched partition's stats
+    FileStats.writeSharded(fs, vdir,
+      all.map { case (f, (cols, _)) => f -> cols },
+      all.map { case (f, (_, rows)) => f -> rows })
     (n, rel)
   }
 
@@ -4961,8 +4940,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       // sidecars land BEFORE the commit so the new chunk's header can
       // carry the merged ndv line (rebases reuse the same version dir,
       // so the sidecars survive retries)
-      Warehouse.prof("commit: ndv maintain")(
-        maintainNdvSidecars(name, n, added, base))
+      maintainNdvSidecars(name, n, added, base)
       commitAppend(name, n, added, base)
     } else {
       recover(name)
@@ -5039,8 +5017,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     val root = new Path(tablePath(name))
     val base = currentManifest(fileSystem(root), root)
     val (n, added) = writeVersion(name, df, partitionCols)
-    Warehouse.prof("commit: ndv maintain")(
-      maintainNdvSidecars(name, n, added, base))
+    maintainNdvSidecars(name, n, added, base)
     commitAppend(name, n, added, base) // pure append: rebases too
   }
 
@@ -5097,7 +5074,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // computed from the stale base (re-resolving at publish time was
     // exactly that hole)
     val (mfCap, filesCap) =
-      if (manifest) Warehouse.prof("upsert: resolve snapshot")(resolveSnapshot(name))
+      if (manifest) resolveSnapshot(name)
       else (None, Seq.empty[String])
     // captured-base expectation (streaming-sink TOCTOU guard): the
     // caller read table METADATA (e.g. the adaptive-grain prop) under
@@ -5431,18 +5408,9 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * safe by the same argument as multi-process writers). Tables must
     * be pairwise independent — none may read another's output.
     */
-  def atomicPublishAll(tables: Seq[(String, DataFrame)]): Unit = {
-    if (tables.size <= 1) { tables.foreach(t => atomicPublish(t._1, t._2)); return }
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(tables.size)
-    try {
-      val fs = tables.map { case (n, df) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = atomicPublish(n, df)
-        })
-      }
-      fs.foreach(_.get())
-    } finally pool.shutdown()
-  }
+  def atomicPublishAll(tables: Seq[(String, DataFrame)]): Unit =
+    if (tables.size <= 1) tables.foreach { case (n, df) => atomicPublish(n, df) }
+    else graft.Parallel.map(tables, tables.size) { case (n, df) => atomicPublish(n, df) }
 
   /** Partition-scoped publish: stage `df` partitioned, then swap ONLY
     * the partition directories present in the staged output; untouched
@@ -5469,8 +5437,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       val base = expectedBase.getOrElse(
         currentManifest(fileSystem(root), root))
       val (n, added) = writeVersion(name, df, partitionCols)
-      Warehouse.prof("commit: ndv maintain")(
-        maintainNdvSidecars(name, n, added, base))
+      maintainNdvSidecars(name, n, added, base)
       val touched = added.map(partitionRel).toSet
       commitSnapshot(name, n, Delta(base, touched, Set.empty, added), base,
         op = op)
@@ -5569,22 +5536,4 @@ object Warehouse {
         org.apache.spark.sql.types.StringType),
       org.apache.spark.sql.types.StructField("_pos",
         org.apache.spark.sql.types.LongType)))
-
-  /** Cost-attribution seam (`SPARK_GRAFT_SINK_PROF=1`): per-phase
-    * stderr timing of the write/commit path, so a streaming-sink cost
-    * trend decomposes into NAMED line items instead of a guess (the
-    * round-11 m33 situation). Env-gated at class-load; zero cost off.
-    */
-  private[graft] val profEnabled: Boolean =
-    sys.env.contains("SPARK_GRAFT_SINK_PROF")
-  private[graft] def prof[T](label: String)(body: => T): T =
-    if (!profEnabled) body
-    else {
-      val t0 = System.nanoTime()
-      val r = body
-      System.err.println(String.format(java.util.Locale.ROOT,
-        "[sinkprof] %-28s %8.3fs", label,
-        Double.box((System.nanoTime() - t0) / 1e9)))
-      r
-    }
 }

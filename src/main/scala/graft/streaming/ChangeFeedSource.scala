@@ -150,48 +150,49 @@ class ChangeFeedSource(spark: SparkSession, metadataPath: String,
   override def getOffset: Option[V1Offset] =
     wh.currentVersion(table).map(LongOffset(_))
 
-  override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame =
-    Warehouse.prof("cdf: getBatch compose")(getBatch0(start, end))
-
-  /** True iff `to` is the end offset of a batch the ENGINE has already
-    * committed (an entry in the checkpoint's commit log whose offset-
-    * log line for this source equals `to`). MicroBatchExecution
-    * re-fetches the last committed batch through `getBatch` once per
-    * restart purely to initialize v1 source state and then DISCARDS
-    * the frame — for this source that re-fetch re-composed the whole
-    * per-version feed window (manifest reads, DV scans, exceptAll
-    * analysis: the measured ~1 s bulk of a resumed drain's fixed
-    * cost). A committed batch is never re-executed — the commit log
-    * line is written only after the sink committed the epoch — so
-    * serving the init call an empty frame is semantics-free. Anything
-    * unreadable/unparseable fails CLOSED (full compose): a genuine
+  /** True iff this call is the engine's restart re-fetch of its last
+    * committed batch: MicroBatchExecution re-fetches that batch through
+    * `getBatch` once per restart purely to initialize v1 source state
+    * and then DISCARDS the frame — for this source that re-fetch
+    * re-composed the whole per-version feed window (manifest reads, DV
+    * scans, exceptAll analysis: the measured ~1 s bulk of a resumed
+    * drain's fixed cost). A committed batch is never re-executed — the
+    * commit log line is written only after the sink committed the
+    * epoch — so serving the re-fetch an empty frame is semantics-free.
+    *
+    * The re-fetch is always the source's FIRST `getBatch` and always
+    * ends at the HIGHEST committed batch's offset, so the verdict is
+    * taken once per source from that one offsets file; every later call
+    * composes. Matching any older committed batch, or remembering the
+    * verdict per `to`, would empty a data batch of a table rebuilt
+    * under the same checkpoint whose new versions re-reach an old end
+    * offset. Anything unreadable fails CLOSED (full compose): a genuine
     * crash-replay (offset written, commit missing) never matches.
     */
-  private def engineCommitted(to: Long): Boolean = try {
-    val mp = new org.apache.hadoop.fs.Path(metadataPath)
-    val srcIdx = mp.getName.toIntOption.getOrElse(return false)
-    val chk = Option(mp.getParent).map(_.getParent).getOrElse(return false)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val commits = new org.apache.hadoop.fs.Path(chk, "commits")
-    if (!fs.exists(commits)) return false
-    val committed = fs.listStatus(commits).map(_.getPath.getName)
-      .flatMap(_.toLongOption)
-    committed.exists { b =>
-      val of = new org.apache.hadoop.fs.Path(chk, s"offsets/$b")
-      fs.exists(of) && {
-        val in = fs.open(of)
-        val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .getLines().toList finally in.close()
-        // offset-log layout: "v1", metadata json, then one offset json
-        // per source in declaration order
-        lines.drop(2).lift(srcIdx).exists(_.trim == to.toString)
-      }
-    }
-  } catch { case scala.util.control.NonFatal(_) => false }
+  private var firstBatch = true
+  private def restartRefetch(to: Long): Boolean = firstBatch && {
+    firstBatch = false
+    try {
+      val mp = new org.apache.hadoop.fs.Path(metadataPath)
+      val srcIdx = mp.getName.toIntOption.getOrElse(return false)
+      val chk = Option(mp.getParent).map(_.getParent).getOrElse(return false)
+      val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val commits = new org.apache.hadoop.fs.Path(chk, "commits")
+      if (!fs.exists(commits)) return false
+      val latest = fs.listStatus(commits).flatMap(_.getPath.getName.toLongOption)
+        .maxOption.getOrElse(return false)
+      val in = fs.open(new org.apache.hadoop.fs.Path(chk, s"offsets/$latest"))
+      val lines = try scala.io.Source.fromInputStream(in, "UTF-8")
+        .getLines().toList finally in.close()
+      // offset-log layout: "v1", metadata json, then one offset json
+      // per source in declaration order
+      lines.drop(2).lift(srcIdx).exists(_.trim == to.toString)
+    } catch { case scala.util.control.NonFatal(_) => false }
+  }
 
-  private def getBatch0(start: Option[V1Offset], end: V1Offset): DataFrame = {
+  override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
     val to = version(end)
-    if (engineCommitted(to)) {
+    if (restartRefetch(to)) {
       // restart-init re-fetch of a committed batch: schema-only use
       return org.apache.spark.sql.graft.BatchAsStream(
         spark.createDataFrame(

@@ -102,10 +102,7 @@ class GraftTableSink(ctx: SQLContext, parameters: Map[String, String],
 
   private val wh = new Warehouse(ctx.sparkSession, root, manifest = true)
 
-  override def addBatch(batchId: Long, data: DataFrame): Unit =
-    Warehouse.prof(s"sink: addBatch($mode)")(addBatch0(batchId, data))
-
-  private def addBatch0(batchId: Long, data: DataFrame): Unit = {
+  override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val batch = org.apache.spark.sql.graft.BatchAsStream.rebatch(data)
     val ran = wh.commitIfNewEpoch(table, appId, batchId) {
       mode match {

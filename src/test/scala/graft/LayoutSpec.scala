@@ -2214,4 +2214,30 @@ class LayoutSpec extends SparkSpec {
     assert(!fs.exists(marker),
       "a successful commit must clear its superseded base's stale marker")
   }
+
+  test("atomicPublishAll: a failing table propagates its own error and leaves no live pool thread") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    val (wh, _) = mk("graft-puball")
+    // threads of a default-factory executor, as the publish pool uses
+    def poolThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.getName.matches("pool-\\d+-thread-\\d+") && t.isAlive)
+    val before = poolThreads()
+    val boom = udf((k: Long) => { if (k == 3L) throw new IllegalStateException("boom-publish"); k })
+    // the sibling publish is still running its job when the failure lands
+    val slow = udf((k: Long) => { Thread.sleep(15000); k })
+    val e = intercept[Throwable] {
+      wh.atomicPublishAll(Seq(
+        "bad" -> spark.range(0, 10).select(boom($"id").as("k")),
+        "slow" -> spark.range(0, 1, 1, 1).select(slow($"id").as("k"))))
+    }
+    assert(!e.isInstanceOf[java.util.concurrent.ExecutionException],
+      "the task's own error must surface, not the pool's wrapper")
+    assert(Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("boom-publish"))), e)
+    val deadline = System.nanoTime() + 5000000000L
+    while ((poolThreads() -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert((poolThreads() -- before).isEmpty,
+      "the pool must be shut down now, its running sibling interrupted")
+  }
 }

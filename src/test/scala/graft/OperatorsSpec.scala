@@ -330,15 +330,29 @@ class OperatorsSpec extends SparkSpec {
     val key = (d: org.apache.spark.sql.DataFrame) =>
       d.select($"p1".cast("long"), $"p2".cast("long"), $"n_cust")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    spark.conf.set("spark.graft.copurchase.saltDegree", "100000")
-    val plain = key(graft.operators.CoPurchase.pairs(inc, "cust", "part", 1))
-    spark.conf.set("spark.graft.copurchase.saltDegree", "64")
     try {
+      spark.conf.set("spark.graft.copurchase.saltDegree", "100000")
+      val plain = key(graft.operators.CoPurchase.pairs(inc, "cust", "part", 1))
+      spark.conf.set("spark.graft.copurchase.saltDegree", "64")
       val salted = key(graft.operators.CoPurchase.pairs(inc, "cust", "part", 1))
       assert(salted === plain,
         "salted pair generation must be output-identical to the plain join")
       assert(plain.size >= 600L * 599 / 2,
         "hub pairs must all be present (nothing dropped by salting)")
     } finally spark.conf.unset("spark.graft.copurchase.saltDegree")
+  }
+
+  test("CoPurchase uncapped: a saltDegree that is not a positive integer is rejected") {
+    import spark.implicits._
+    val inc = Seq((1L, 1L), (1L, 2L)).toDF("cust", "part")
+    try {
+      for (bad <- Seq("0", "-5", "many", "1.5")) {
+        spark.conf.set(graft.operators.CoPurchase.SaltDegreeKey, bad)
+        val e = intercept[IllegalArgumentException] {
+          graft.operators.CoPurchase.pairs(inc, "cust", "part", 1)
+        }
+        assert(e.getMessage.contains(graft.operators.CoPurchase.SaltDegreeKey), bad)
+      }
+    } finally spark.conf.unset(graft.operators.CoPurchase.SaltDegreeKey)
   }
 }

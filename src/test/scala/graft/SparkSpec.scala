@@ -11,19 +11,7 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // int96 (the default) carries no usable footer stats; micros makes
-      // timestamp columns skippable/meta-aggregatable like dates
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  // fixed geometry (4 threads, 4 shuffle partitions) whatever
+  // SPARK_GRAFT_CPUS says, so a run's plans do not depend on the host
+  lazy val session: SparkSession = GraftSession(4)
 }

@@ -835,6 +835,46 @@ class StreamingSpec extends SparkSpec {
       "a replayed batch 0 must cover the original first trigger's window")
   }
 
+  test("change-feed source: a table rebuilt under the same checkpoint serves a batch ending at an old committed offset") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-rebuild").toString
+    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val chk = java.nio.file.Files.createTempDirectory("graft-cdc-rbchk").toString
+    val got = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
+    def run(body: => Unit): Unit = {
+      val q = wh.readChangesStream("t", startingVersion = Some(1L))
+        .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          val rows = b.select($"_commit_version", $"_change_type", $"k")
+            .as[(Long, String, Long)].collect()
+          got.synchronized { got ++= rows; () }
+        }.option("checkpointLocation", chk).start()
+      try { q.processAllAvailable(); body; q.processAllAvailable() }
+      finally q.stop()
+    }
+    def build(base: Long): Unit = {
+      wh.atomicPublish("t", spark.range(base, base + 5).toDF("k"))       // v1
+      wh.setSnapshotRetention("t", 10)
+    }
+    def more(base: Long): Unit = {
+      wh.append("t", spark.range(base + 10, base + 15).toDF("k"))        // v2
+      wh.append("t", spark.range(base + 20, base + 25).toDF("k"))        // v3
+    }
+    build(0L)
+    run(more(0L)) // committed batches end at offsets 1 and 3
+    wh.dropTable("t")
+    build(100L)
+    got.synchronized(got.clear())
+    // the restart re-fetches the last committed batch (ending at 3) and
+    // discards it; the rebuilt table then commits v2 and v3 again, so a
+    // new data batch ends at offset 3 — an offset an older committed
+    // batch ended at — and must carry its rows
+    run(more(100L))
+    val expect = (110L until 115L).map(k => (2L, "insert", k)).toSet ++
+      (120L until 125L).map(k => (3L, "insert", k))
+    assert(got.synchronized(got.toSet) === expect,
+      "only the restart re-fetch of the last committed batch may be served empty")
+  }
+
   test("change-feed source: an explicit startingVersion beyond current+1 is rejected") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-future").toString

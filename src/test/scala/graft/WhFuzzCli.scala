@@ -59,12 +59,7 @@ object WhFuzzCli {
       val rnd = new scala.util.Random(args(2).toLong)
       val nOps = args(3).toInt
       val role = if (args.length > 4) args(4) else "mutator"
-      val spark = org.apache.spark.sql.SparkSession.builder()
-        .master("local[2]")
-        .config("spark.sql.shuffle.partitions", "2")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("ERROR")
+      val spark = GraftSession(2)
       import spark.implicits._
       val wh = new graft.sources.Warehouse(spark, dir, manifest = true,
         pointerStore = new graft.sources.GenFencedPointerStore,

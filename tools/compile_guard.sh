@@ -6,12 +6,23 @@
 #
 # Run this before ANY end-of-round / milestone commit:
 #   tools/compile_guard.sh && git commit ...
-# Exit 0 = `sbt compile` (main + test sources) is green; nonzero
-# otherwise, with the tail of the compiler output on stderr. ~2 min
+# Exit 0 = no stray session builder in main code and `sbt compile`
+# (main + test sources) is green; nonzero otherwise, with the offending
+# lines or the tail of the compiler output on stderr. ~2 min
 # warm — there is no excuse to skip it even when the full ~25-min gate
 # battery doesn't fit before a snapshot.
 set -u
 cd "$(dirname "$0")/.."
+# One session factory: no main code outside GraftSession.scala may call
+# SparkSession.builder. Comment lines (a doc example) are exempt.
+builders=$(grep -rn --include='*.scala' 'SparkSession\.builder' src/main/scala \
+  | grep -v '^src/main/scala/graft/GraftSession\.scala:' \
+  | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)')
+if [ -n "$builders" ]; then
+  echo "compile_guard: RED — SparkSession.builder outside GraftSession.scala:" >&2
+  echo "$builders" >&2
+  exit 1
+fi
 log=$(mktemp /tmp/compile_guard.XXXXXX.log)
 if sbt -batch "compile; Test/compile" >"$log" 2>&1; then
   echo "compile_guard: GREEN (main + test compile)"
