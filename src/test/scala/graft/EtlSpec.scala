@@ -202,6 +202,47 @@ class EtlSpec extends SparkSpec {
       !factDir.listFiles().exists(_.getName.startsWith("fiscal_year=")))
   }
 
+  /** Rows in `name`. An ingest with no fact rows leaves a schema-less
+    * `financial_data` dir that `wh.read` cannot open: 0 when it holds no
+    * partition.
+    */
+  private def tableRows(wh: Warehouse, tmp: String, name: String): Long = {
+    val parts = Option(new java.io.File(s"$tmp/$name").listFiles()).getOrElse(Array.empty)
+    if (name == "financial_data" && !parts.exists(_.getName.startsWith("fiscal_year="))) 0L
+    else wh.read(name).count()
+  }
+
+  test("ingest: a filing missing every report or every company field lands no report, quarantines nothing") {
+    // (fields dropped, companies expected): with no report fields the
+    // company still lands; with no company fields the report has no
+    // company to join on doc_id, so it and its facts drop. Neither is an
+    // invalid candidate, so nothing is quarantined, and the item master
+    // takes the filing's financial rows either way.
+    for ((dropped, companies) <- Seq(Model.reportMapping -> 1, Model.companyMapping -> 0)) {
+      val tmp = java.nio.file.Files.createTempDirectory("graft-wh-partial").toString
+      val wh = new Warehouse(spark, tmp)
+      val raw = rawFixture().filter(!col("要素ID").isin(dropped.map(_._2): _*))
+      val q = new Ingest(spark, wh).runStaged(Standardize(raw), strict = false)
+      assert(q.count() === 0)
+      assert(tableRows(wh, tmp, "companies") === companies)
+      assert(tableRows(wh, tmp, "financial_items") === 5)
+      assert(tableRows(wh, tmp, "financial_reports") === 0)
+      assert(tableRows(wh, tmp, "financial_data") === 0)
+    }
+  }
+
+  test("ingest: strict mode with an unparsable period throws before any table exists") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-wh-strict").toString
+    val wh = new Warehouse(spark, tmp)
+    val e = intercept[Exception] {
+      new Ingest(spark, wh).runStaged(
+        Standardize(rawFixture(period = "意味のない文字列")), strict = true)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("unparsable accounting period")), e)
+    assert(new java.io.File(tmp).list().isEmpty, "no table may be created")
+  }
+
   test("config: mapping loads from an external file (change without recompile)") {
     import graft.etl.{Extract, MappingConfig}
     val p = java.nio.file.Files.createTempFile("graft-map", ".properties")
@@ -973,6 +1014,68 @@ class EtlSpec extends SparkSpec {
     assert(wh.readSnapshot("financial_reports")
       .join(wh.readSnapshot("financial_data"), Seq("report_id"), "left_anti")
       .count() === 0)
+  }
+
+  private def period2 = "第122期 第３四半期(自  2024年10月１日  至  2024年12月31日)"
+
+  test("ingest: a failed companies publish surfaces as itself, stops the pool, keeps the snapshot") {
+    import scala.jdk.CollectionConverters._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-uowfan").toString
+    val wh = new Warehouse(spark, tmp, manifest = true)
+    val tables = Seq("companies", "financial_items", "financial_reports", "financial_data")
+    new Ingest(spark, wh).runStaged(Standardize(rawFixture()), strict = false)
+    def snapshot(): Map[String, Set[Row]] =
+      tables.map(t => t -> wh.readSnapshot(t).collect().toSet).toMap
+    val first = snapshot()
+    def poolThreads(): Set[Thread] = Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.getName.matches("pool-\\d+-thread-\\d+") && t.isAlive)
+    val before = poolThreads()
+    // ingest 2 (a new period: a new report and new facts) fails at the
+    // companies commit while the other publishes are in flight
+    val boom = new IllegalStateException("simulated companies commit failure")
+    var fired = false
+    wh.commitTestHook = name => if (name == "companies" && !fired) { fired = true; throw boom }
+    val e = intercept[Throwable] {
+      new Ingest(spark, wh).runStaged(
+        Standardize(rawFixture(docId = "DOC002", period = period2)), strict = false)
+    }
+    wh.commitTestHook = _ => ()
+    assert(e eq boom, s"the hook's own exception must reach the caller, got $e")
+    val deadline = System.nanoTime() + 10000000000L
+    while ((poolThreads() -- before).nonEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    assert((poolThreads() -- before).isEmpty, "no publish pool thread may outlive the ingest")
+    assert(snapshot() === first, "snapshot readers must keep the first ingest")
+    // the retry converges and flips the DB snapshot to the new UoW
+    new Ingest(spark, wh).runStaged(
+      Standardize(rawFixture(docId = "DOC002", period = period2)), strict = false)
+    val after = snapshot()
+    assert(after("financial_reports").size === first("financial_reports").size + 1)
+    assert(after("financial_data").size > first("financial_data").size)
+    assert(tables.forall(t => wh.readSnapshot(t).count() === wh.read(t).count()))
+    assert(wh.readSnapshot("financial_reports")
+      .join(wh.readSnapshot("financial_data"), Seq("report_id"), "left_anti")
+      .count() === 0)
+  }
+
+  test("ingest: a killed ingest leaves none of its frames in the cache") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-uowcache").toString
+    val wh = new Warehouse(spark, tmp, manifest = true)
+    new Ingest(spark, wh).runStaged(Standardize(rawFixture()), strict = false)
+    spark.catalog.clearCache()
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    wh.commitTestHook = name =>
+      if (name == "financial_data") throw new RuntimeException("simulated crash")
+    intercept[RuntimeException] {
+      new Ingest(spark, wh).runStaged(
+        Standardize(rawFixture(docId = "DOC002", period = period2)), strict = false)
+    }
+    wh.commitTestHook = _ => ()
+    assert(cache.isEmpty, "runStaged must release its persisted frames on the error path")
+    // and on success: the returned quarantine is not a cached frame either
+    new Ingest(spark, wh).runStaged(
+      Standardize(rawFixture(docId = "DOC002", period = period2)), strict = false)
+    assert(cache.isEmpty)
   }
 
   test("warehouse: racing DB snapshot commits — exactly one wins") {

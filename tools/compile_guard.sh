@@ -6,21 +6,39 @@
 #
 # Run this before ANY end-of-round / milestone commit:
 #   tools/compile_guard.sh && git commit ...
-# Exit 0 = no stray session builder in main code and `sbt compile`
-# (main + test sources) is green; nonzero otherwise, with the offending
-# lines or the tail of the compiler output on stderr. ~2 min
+# Exit 0 = no stray session builder or thread pool in main code and
+# `sbt compile` (main + test sources) is green; nonzero otherwise, with
+# the offending lines or the tail of the compiler output on stderr. ~2 min
 # warm — there is no excuse to skip it even when the full ~25-min gate
 # battery doesn't fit before a snapshot.
 set -u
 cd "$(dirname "$0")/.."
+# Main-code lines matching the ERE $1, comment lines (a doc example)
+# dropped.
+code_lines() {
+  grep -rnE --include='*.scala' "$1" src/main/scala \
+    | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)'
+}
 # One session factory: no main code outside GraftSession.scala may call
-# SparkSession.builder. Comment lines (a doc example) are exempt.
-builders=$(grep -rn --include='*.scala' 'SparkSession\.builder' src/main/scala \
-  | grep -v '^src/main/scala/graft/GraftSession\.scala:' \
-  | grep -Ev '^[^:]+:[0-9]+:[[:space:]]*(//|\*|/\*)')
+# SparkSession.builder.
+builders=$(code_lines 'SparkSession\.builder' \
+  | grep -v '^src/main/scala/graft/GraftSession\.scala:')
 if [ -n "$builders" ]; then
   echo "compile_guard: RED — SparkSession.builder outside GraftSession.scala:" >&2
   echo "$builders" >&2
+  exit 1
+fi
+# One fan-out seam: driver-side concurrency goes through
+# graft.Parallel.map. The only other threads main code may create are
+# Scratch's single cleaner thread and JVM shutdown hooks (run at exit,
+# never a fan-out).
+pools=$(code_lines 'Executors\.new|new Thread\(|new ThreadPoolExecutor\(|new ForkJoinPool\(' \
+  | grep -v '^src/main/scala/graft/Parallel\.scala:' \
+  | grep -Ev '^src/main/scala/graft/sources/Scratch\.scala:[0-9]+:.*cleaner' \
+  | grep -v 'addShutdownHook(new Thread(')
+if [ -n "$pools" ]; then
+  echo "compile_guard: RED — thread pool or thread outside graft.Parallel (use Parallel.map):" >&2
+  echo "$pools" >&2
   exit 1
 fi
 log=$(mktemp /tmp/compile_guard.XXXXXX.log)
