@@ -74,18 +74,18 @@ object Cli {
           .orderBy("edinet_code")
           .show(1000, truncate = false)
 
-      // table maintenance (manifest mode): layout health, bin-pack
+      // table maintenance: layout health, bin-pack
       // compaction, multi-column z-order clustering
       case "health" :: whDir :: table :: Nil =>
-        println(new Warehouse(spark, whDir, manifest = true).tableHealth(table))
+        println(new Warehouse(spark, whDir).tableHealth(table))
 
       case "optimize" :: whDir :: table :: rest =>
-        val wh = new Warehouse(spark, whDir, manifest = true)
+        val wh = new Warehouse(spark, whDir)
         wh.compact(table, rest.headOption.map(_.toInt).getOrElse(1))
         println(wh.tableHealth(table))
 
       case "optimize-zorder" :: whDir :: table :: n :: cols if cols.size >= 2 =>
-        val wh = new Warehouse(spark, whDir, manifest = true)
+        val wh = new Warehouse(spark, whDir)
         wh.compactZOrder(table, cols, n.toInt)
         println(wh.tableHealth(table))
 
@@ -93,7 +93,7 @@ object Cli {
       // small-file count crossed the threshold (schedule this verb
       // blindly per table; it no-ops on healthy layouts)
       case "maintain" :: whDir :: table :: rest =>
-        val wh = new Warehouse(spark, whDir, manifest = true)
+        val wh = new Warehouse(spark, whDir)
         val (before, ran, after) =
           wh.maintain(table, rest.headOption.map(_.toInt).getOrElse(8))
         println(s"before: $before")
@@ -101,17 +101,17 @@ object Cli {
           else "healthy; nothing to do")
 
       case "vacuum" :: whDir :: table :: Nil =>
-        val deleted = new Warehouse(spark, whDir, manifest = true)
+        val deleted = new Warehouse(spark, whDir)
           .vacuumOrphans(table)
         println(if (deleted.isEmpty) "vacuum: nothing to reap"
           else s"vacuum reaped: ${deleted.mkString(", ")}")
 
       case "index-bloom" :: whDir :: table :: column :: Nil =>
-        new Warehouse(spark, whDir, manifest = true).buildBloom(table, column)
+        new Warehouse(spark, whDir).buildBloom(table, column)
         println(s"bloom index built for $table.$column")
 
       case "index-ndv" :: whDir :: table :: column :: Nil =>
-        val wh = new Warehouse(spark, whDir, manifest = true)
+        val wh = new Warehouse(spark, whDir)
         wh.buildNdv(table, column)
         println(s"ndv sketch built; approx distinct " +
           s"$table.$column = ${wh.statsApproxNdv(table, column).getOrElse(-1L)}")
@@ -122,7 +122,7 @@ object Cli {
       // the statement runs through the ordinary Catalyst path — the
       // "switch your SQL here" surface for a reference user
       case "sql" :: whDir :: stmt :: Nil =>
-        val wh = new Warehouse(spark, whDir, manifest = true)
+        val wh = new Warehouse(spark, whDir)
         wh.tableNames().foreach { t =>
           wh.read(t).createOrReplaceTempView(t)
         }
@@ -132,25 +132,25 @@ object Cli {
       // snapshot lifecycle: version ledger, metadata-only restore,
       // and write-audit-publish branch promotion/abandonment
       case "history" :: whDir :: table :: Nil =>
-        val h = new Warehouse(spark, whDir, manifest = true).history(table)
+        val h = new Warehouse(spark, whDir).history(table)
         if (h.isEmpty) println(s"no retained snapshots for $table")
         else h.foreach { case (v, nf, nr) =>
           println(f"v$v%-6d files=$nf%-6d rows=${nr.map(_.toString).getOrElse("unknown")}%s")
         }
 
       case "rollback" :: whDir :: table :: version :: Nil =>
-        val wh = new Warehouse(spark, whDir, manifest = true)
+        val wh = new Warehouse(spark, whDir)
         wh.rollback(table, version.toLong)
         println(s"restored $table to the snapshot of v$version " +
           s"(metadata-only); history: ${wh.history(table).map(_._1).mkString(",")}")
 
       case "branch-promote" :: whDir :: table :: branch :: Nil =>
-        new Warehouse(spark, whDir, manifest = true)
+        new Warehouse(spark, whDir)
           .promoteBranch(table, branch)
         println(s"branch '$branch' promoted on $table")
 
       case "branch-abandon" :: whDir :: table :: branch :: Nil =>
-        new Warehouse(spark, whDir, manifest = true)
+        new Warehouse(spark, whDir)
           .abandonBranch(table, branch)
         println(s"branch '$branch' abandoned on $table")
 

@@ -88,7 +88,7 @@ object ScaleProbe {
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(conf)
       fs.delete(root, true)
-      val wh = new graft.sources.Warehouse(spark, dir, manifest = true)
+      val wh = new graft.sources.Warehouse(spark, dir)
       val nParts = math.max(4, nf / 16) // ~16 files per hive partition
       def fabricate(vdir: String, names: Seq[(String, String)]): Seq[String] = {
         // names = (partition value, file name); empty data files via
@@ -199,7 +199,7 @@ object ScaleProbe {
       val root = new org.apache.hadoop.fs.Path(dir)
       val fs = root.getFileSystem(conf)
       fs.delete(root, true)
-      val wh = new graft.sources.Warehouse(spark, dir, manifest = true)
+      val wh = new graft.sources.Warehouse(spark, dir)
       // partitioned layout with SHARDED stats sidecars — what
       // writeVersion produces for real partitioned tables, and the
       // layout that keeps a narrow probe from parsing a monolithic

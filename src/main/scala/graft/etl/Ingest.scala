@@ -15,7 +15,8 @@ import graft.sources.{EdinetCsv, Warehouse}
   *   → publish concurrently: the companies, items, reports and fact
   *     upserts plus the duplicate-report quarantine collect, side by
   *     side
-  *   → (manifest mode) one DB-snapshot flip over the four tables.
+  *   → one DB-snapshot flip over the four tables, so `readSnapshot`
+  *     sees all of this ingest or none of it.
   *
   * The reference's per-document flush()-for-keys transaction (§3.2c)
   * disappears: surrogate keys are deterministic hashes of natural keys,
@@ -224,6 +225,13 @@ class Ingest(spark: SparkSession, wh: Warehouse) {
         col("fiscal_year"))
       .dropDuplicates("data_id")
 
+    // the fact's partition values for its upsert's manifest pruning,
+    // read off the cached reports: the fact inner-joins `reports`, so
+    // its fiscal years are a subset of these — a valid hint — and the
+    // upsert need not re-run the fact pipeline to learn them
+    def factYears(): Seq[Any] =
+      reports.select("fiscal_year").distinct().collect().map(_.get(0)).toSeq
+
     // ---- phase 2: publish concurrently -------------------------------
     // Distinct tables never contend on a commit CAS, so the four
     // publishes and the collect of the duplicate-report quarantine rows
@@ -237,19 +245,19 @@ class Ingest(spark: SparkSession, wh: Warehouse) {
       publish(publishItems()),
       publish(wh.upsert("financial_reports", reports.drop("doc_id"), Seq("report_id"))),
       () => dupReportDocs.collect().toSeq,
-      publish(wh.upsert("financial_data", fact, Seq("data_id"), Seq("fiscal_year"))))
+      publish(wh.upsert("financial_data", fact, Seq("data_id"), Seq("fiscal_year"),
+        touchedValsHint = Some(factYears()))))
     val dupRows = graft.Parallel.map(tasks, tasks.size)(_()).flatten
 
     // cross-table UoW (reference unitofwork.py:89-143): each publish
     // above is atomic, but they land independently and in no fixed
     // order — a crash between them would leave reports without facts
-    // for a `read` caller. In manifest mode ONE DB-pointer flip, run
-    // only after all four landed, pins the consistent four-table set
-    // for `readSnapshot` callers; until it lands they keep the
-    // previous ingest's snapshot.
-    if (wh.manifest)
-      wh.commitDbSnapshot(Seq(
-        "companies", "financial_items", "financial_reports", "financial_data"))
+    // for a `read` caller. ONE DB-pointer flip, run only after all
+    // four landed, pins the consistent four-table set for
+    // `readSnapshot` callers; until it lands they keep the previous
+    // ingest's snapshot.
+    wh.commitDbSnapshot(Seq(
+      "companies", "financial_items", "financial_reports", "financial_data"))
 
     // the (tiny) quarantine comes back as driver-local rows, so the
     // caller holds no cached frame and no lineage over `staged`

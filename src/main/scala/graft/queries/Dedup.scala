@@ -163,7 +163,7 @@ object Dedup {
     * 3-gram shingles and 64-perm MinHash signature — everything an
     * incremental probe needs, so ingest-time dedup reads the index
     * TABLE and never re-scans or re-shingles corpus text. Publish via
-    * Warehouse (manifest mode) and keep it fresh by appending each
+    * Warehouse and keep it fresh by appending each
     * accepted batch's own `buildLshIndex` rows. At 100 TB the `shs`
     * column would hold 64-bit shingle fingerprints (same confirm join,
     * ~10× smaller); strings are kept so the exact-Jaccard confirm is

@@ -1229,7 +1229,7 @@ object Relational {
         val o = t(s, dir, "orders")
           .select($"o_orderkey", $"o_totalprice")
         val wh = new graft.sources.Warehouse(s,
-          graft.sources.Scratch.dir(s, "chm"), manifest = true,
+          graft.sources.Scratch.dir(s, "chm"),
           manifestChunkSize = 8)
         wh.atomicPublish("ord_c", o.repartitionByRange(64, $"o_orderkey")
           .sortWithinPartitions($"o_orderkey"))
@@ -1271,7 +1271,7 @@ object Relational {
           .select($"o_orderkey".as("k"), dec2($"o_totalprice").as("v"),
             date_format($"o_orderdate", "yyyy").as("oy"))
         val wh = new graft.sources.Warehouse(s,
-          graft.sources.Scratch.dir(s, "incr"), manifest = true,
+          graft.sources.Scratch.dir(s, "incr"),
           manifestChunkSize = 4)
         // ~7 year partitions x 4 files each = ~28 files / ~7 chunks —
         // multi-chunk but only a handful of hive dirs per publish
@@ -1708,7 +1708,7 @@ object Relational {
         val c = t(s, dir, "customer")
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "ctv")
-        val wh = new graft.sources.Warehouse(s, root, manifest = true)
+        val wh = new graft.sources.Warehouse(s, root)
         wh.atomicPublish("cust_tvf", c)                                 // v1
         wh.setSnapshotRetention("cust_tvf", 8)
         wh.append("cust_tvf", c.filter($"c_custkey" <= 50)
@@ -1802,7 +1802,7 @@ object Relational {
         val c = t(s, dir, "customer")
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "ttvf")
-        val wh = new graft.sources.Warehouse(s, root, manifest = true)
+        val wh = new graft.sources.Warehouse(s, root)
         wh.atomicPublish("cust_t",
           c.repartitionByRange(8, $"c_custkey")
             .sortWithinPartitions($"c_custkey"))
@@ -1889,7 +1889,7 @@ object Relational {
             $"o_custkey".cast("long").as("o_custkey"),
             $"o_orderstatus")
         val root = graft.sources.Scratch.dir(s, "stvf")
-        val wh = new graft.sources.Warehouse(s, root, manifest = true)
+        val wh = new graft.sources.Warehouse(s, root)
         wh.atomicPublish("ord_stats", o.repartition(8))
         graft.sources.StatsTvf.register(s)
         s.sql(s"""SELECT col_name, min_s, max_s, nulls, rows
@@ -1925,7 +1925,7 @@ object Relational {
         val c = t(s, dir, "customer")
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "htvf")
-        val wh = new graft.sources.Warehouse(s, root, manifest = true)
+        val wh = new graft.sources.Warehouse(s, root)
         wh.atomicPublish("cust_h",
           c.filter($"c_custkey" % 2 === 0).coalesce(1))            // v1
         wh.setSnapshotRetention("cust_h", 8)
@@ -2098,7 +2098,7 @@ object Relational {
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "cat")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("cust_cat",
           c.repartitionByRange(8, $"c_custkey")
             .sortWithinPartitions($"c_custkey"))
@@ -2163,7 +2163,7 @@ object Relational {
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "scat")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("cust_s",
           c.filter($"c_custkey" % 3 === 0).repartition(2))           // v1
         wh.setSnapshotRetention("cust_s", 16)
@@ -2214,7 +2214,7 @@ object Relational {
             $"o_orderstatus")
         val root = graft.sources.Scratch.dir(s, "dmlq")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("ord_dml", o.repartition(4))
         val filesBefore = wh.history("ord_dml").last._2
         s.sql("DELETE FROM graft.wh.ord_dml WHERE o_orderkey % 5 = 0")
@@ -2280,7 +2280,7 @@ object Relational {
             $"p_brand", $"p_retailprice")
         val root = graft.sources.Scratch.dir(s, "opsq")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("part_ops",
           p.filter($"p_partkey" % 2 === 0).repartition(4))
         s.sql("CALL graft.system.set_retention(ns => 'wh', tbl => 'part_ops', snapshots => 8)")
@@ -2327,7 +2327,7 @@ object Relational {
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "corrq")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("ord_c", o.repartition(4))
         c.createOrReplaceTempView("s48_cust")
         val filesBefore = wh.history("ord_c").last._2
@@ -2396,7 +2396,7 @@ object Relational {
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "cdfq")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("cust_cdf", c.repartition(2))               // v1
         wh.setSnapshotRetention("cust_cdf", 16)
         wh.deleteRows("cust_cdf", $"c_custkey" % 10 === 0)           // v2
@@ -2467,7 +2467,7 @@ object Relational {
         val c = t(s, dir, "customer")
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "snkq")
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         val src = graft.sources.Scratch.dir(s, "snkqsrc")
         val chk = graft.sources.Scratch.dir(s, "snkqchk")
         def drain(): Unit = {
@@ -2523,7 +2523,7 @@ object Relational {
         val c = t(s, dir, "customer")
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "repq")
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("cust_src", c.repartition(2))               // v1
         wh.setSnapshotRetention("cust_src", 16)
         wh.deleteRows("cust_src", $"c_custkey" % 10 === 0)           // v2
@@ -2597,7 +2597,7 @@ object Relational {
           .select($"c_custkey".cast("long").as("c_custkey"), $"c_acctbal")
         val root = graft.sources.Scratch.dir(s, "vwq")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("cust_v", c.repartition(2))
         s.sql("CREATE VIEW graft.wh.rich AS SELECT c_custkey, c_acctbal " +
           "FROM graft.wh.cust_v WHERE c_acctbal > 1000.0")
@@ -2681,7 +2681,7 @@ object Relational {
             $"o_orderstatus")
         val root = graft.sources.Scratch.dir(s, "mrgq")
         graft.sources.Scratch.withGraftCatalog(s, root) {
-        val wh = new graft.sources.Warehouse(s, s"$root/wh", manifest = true)
+        val wh = new graft.sources.Warehouse(s, s"$root/wh")
         wh.atomicPublish("ord_mrg", o.repartition(4))
         o.filter($"o_orderkey" <= 2000)
           .select($"o_orderkey",

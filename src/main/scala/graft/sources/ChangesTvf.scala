@@ -65,7 +65,7 @@ object ChangesTvf {
     val table = String.valueOf(lit(1, "table"))
     val fromV = asLong(lit(2, "fromV"), "fromV")
     val spark = SparkSession.active
-    val wh = new Warehouse(spark, root, manifest = true)
+    val wh = new Warehouse(spark, root)
     val toV =
       if (exprs.length == 4) asLong(lit(3, "toV"), "toV")
       else wh.currentVersion(table).getOrElse(throw new IllegalArgumentException(

@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
 import java.util.Base64
 import scala.jdk.CollectionConverters._
 
-/** Per-file column min/max statistics for manifest-mode data skipping —
+/** Per-file column min/max statistics for warehouse data skipping —
   * the file-pruning layer Delta/Iceberg keep in their metadata, built
   * here from the parquet FOOTERS the write already produced (no second
   * pass over the data; row-group stats are aggregated per file).

@@ -104,7 +104,7 @@ class GraftCatalog extends CatalogPlugin with TableCatalog with SupportsNamespac
     whCache.synchronized {
       val key = (r, ns.head)
       Option(whCache.get(key)).getOrElse {
-        val w = new Warehouse(spark, s"$r/${ns.head}", manifest = true)
+        val w = new Warehouse(spark, s"$r/${ns.head}")
         whCache.put(key, w)
         w
       }

@@ -47,7 +47,7 @@ object HistoryTvf {
     val root  = lit(0, "root")
     val table = lit(1, "table")
     val spark = SparkSession.active
-    val wh = new Warehouse(spark, root, manifest = true)
+    val wh = new Warehouse(spark, root)
     val rows = wh.history(table).map { case (v, nFiles, nRows) =>
       (v, wh.commitKind(table, v).orNull,
         nFiles,

@@ -102,7 +102,7 @@ object Scratch {
 
   /** Scratch manifest Warehouse rooted per `dir(key)`. */
   def warehouse(spark: SparkSession, key: String): Warehouse =
-    new Warehouse(spark, dir(spark, key), manifest = true)
+    new Warehouse(spark, dir(spark, key))
 
   /** Scope the `graft` catalog binding to `body`: bind catalog+root,
     * run, restore the previous binding (or unset). Safe because the

@@ -57,7 +57,7 @@ object StatsTvf {
     val root  = lit(0, "root")
     val table = lit(1, "table")
     val spark = SparkSession.active
-    val wh = new Warehouse(spark, root, manifest = true)
+    val wh = new Warehouse(spark, root)
     val rows = wh.statsRowCount(table)
     val out = wh.read(table).schema.fields.toSeq.map { f =>
       val mm = wh.statsMinMax(table, f.name)

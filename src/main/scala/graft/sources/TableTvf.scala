@@ -52,7 +52,7 @@ object TableTvf {
     val root  = String.valueOf(lit(0, "root"))
     val table = String.valueOf(lit(1, "table"))
     val spark = SparkSession.active
-    val wh = new Warehouse(spark, root, manifest = true)
+    val wh = new Warehouse(spark, root)
     val df =
       if (exprs.length == 2) wh.read(table)
       else lit(2, "version") match {

@@ -8,36 +8,39 @@ import org.apache.spark.sql.expressions.Window
 /** Parquet warehouse with set-oriented write patterns replacing the
   * reference's row-at-a-time ORM (S7-S11, SURVEY.md §2.1):
   *
-  *  - append        → plain parquet append (S7)
+  *  - append        → new files committed as a snapshot delta (S7)
   *  - upsert        → union + window-dedup-by-key + atomic publish (S8;
   *                    no MERGE on vanilla parquet). For partitioned
   *                    tables the merge is PARTITION-SCOPED: only the
   *                    partitions present in `updates` are read, merged,
   *                    and republished — a daily ingest touching one
-  *                    fiscal_year rewrites one directory, not 100 TB.
+  *                    fiscal_year rewrites one partition, not 100 TB.
   *  - delete        → left_anti on keys + atomic publish (S9)
-  *  - atomicPublish → staged write + directory swap, the distributed
-  *                    stand-in for the reference's per-document
-  *                    transaction (S11 — documented semantic difference:
-  *                    single-table atomicity, not cross-table ACID)
+  *  - atomicPublish → one snapshot commit (S11)
   *
-  * Crash-window recovery: the swap is two renames (live→._old,
-  * staging→live); a crash between them leaves no live dir. Every read
-  * path first runs `recover`, which restores `._old` when live is
-  * absent (and restores any per-partition `._old_<dir>` left by a
-  * crashed partition swap). The rename swap is atomic on HDFS/local
-  * only — on object stores (S3: rename = copy+delete) pass
-  * `manifest = true`: every publish then writes data files into a NEW
-  * versioned dir (`_vN`, never renamed, never overwritten), writes a
-  * manifest file listing the snapshot's data files (new files for
-  * touched partitions, the previous snapshot's files for untouched
-  * ones), and finally flips a one-line `_CURRENT` pointer — the only
-  * mutation is one tiny-file write, which is a single atomic PUT on
-  * S3/GCS. Readers resolve pointer → manifest → explicit file list, so
-  * a reader that resolved before the flip keeps a consistent old
-  * snapshot (its files survive one publish — GC keeps the previous
+  * One commit protocol, safe on object stores (S3: rename = copy +
+  * delete): every publish writes data files into a NEW versioned dir
+  * (`_vN`, never renamed, never overwritten), writes a manifest file
+  * listing the snapshot's data files (new files for touched
+  * partitions, the previous snapshot's files for untouched ones), and
+  * finally flips a one-line `_CURRENT` pointer by compare-and-set —
+  * the only mutation is one tiny-file write, which is a single atomic
+  * PUT on S3/GCS. Readers resolve pointer → manifest → explicit file
+  * list, so a reader that resolved before the flip keeps a consistent
+  * old snapshot (its files survive one publish — GC keeps the previous
   * snapshot's versions) and a reader after the flip sees exactly the
-  * new one: old-or-new, never a mix, never a missing-dir window.
+  * new one: old-or-new, never a mix, never a missing-dir window. A
+  * crash before the flip leaves the previous snapshot current; its
+  * orphans are reaped by a later commit's GC.
+  *
+  * Cross-table atomicity (the reference's per-document transaction,
+  * unitofwork.py:89-143) is one more pointer: `commitDbSnapshot` pins
+  * every table's current manifest in a DB-level `_CURRENT`, and
+  * `readSnapshot` reads through it.
+  *
+  * A table directory written before manifests existed (plain parquet,
+  * no `_CURRENT`, no `_manifest_v*`) reads as a snapshot of its files
+  * in place; its first commit writes a manifest over them.
   *
   * Key generation: Postgres sequences (and the reference's flush()-to-
   * get-keys dance, §3.2c) are replaced by deterministic hash keys
@@ -52,7 +55,7 @@ import org.apache.spark.sql.expressions.Window
 final case class TableHealth(files: Int, totalBytes: Long, minBytes: Long,
     maxBytes: Long, smallFiles: Int, versions: Int, rows: Option[Long])
 
-class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
+class Warehouse(spark: SparkSession, dir: String,
     pointerStore: PointerStore = new FsPointerStore(),
     manifestChunkSize: Int = 1024,
     /** Batch-window ceiling for `changes` (versions per call) — see the
@@ -71,7 +74,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       */
     val autoSkip: Boolean = true) {
 
-  if (autoSkip && manifest) graft.plans.AutoSkip.install(spark)
+  if (autoSkip) graft.plans.AutoSkip.install(spark)
 
   /** The warehouse base dir (catalog/streaming splice plumbing). */
   private[graft] def rootDir: String = dir
@@ -99,15 +102,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
   def surrogateKey(naturalKey: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     abs(xxhash64(naturalKey))
 
-  /** Current-snapshot read. In manifest mode this is MERGE-ON-READ:
-    * the snapshot's deletion vector (if any) is subtracted, so every
-    * consumer — queries, `upsert`'s base scan, `compact`'s rewrite —
-    * sees deletes without special-casing them. The overlay rides the
-    * manifest lineage: `commitSnapshot` carries surviving DV entries
-    * forward across file-preserving commits, and a full rewrite
-    * (`atomicPublish`) materializes them because its input came from
-    * this very read.
-    */
   /** Catalog surface (GraftCatalog): a table exists when its directory
     * resolves a current manifest — pointer first, else highest
     * committed manifest (the same resolution every read uses).
@@ -115,7 +109,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
   def tableExists(name: String): Boolean = {
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
-    fs.exists(root) && (!manifest || currentManifest(fs, root).nonEmpty)
+    fs.exists(root) && currentManifest(fs, root).nonEmpty
   }
 
   /** Table names under this warehouse root — directories that resolve
@@ -147,8 +141,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     if (fs.exists(props)) { fs.delete(props, true); () }
   }
 
-  /** Rename a table: one directory rename (manifest tables are fully
-    * self-contained under their root) plus the props dir. Same-FS
+  /** Rename a table: one directory rename (a table is fully
+    * self-contained under its root) plus the props dir. Same-FS
     * atomic on rename-atomic stores, same caveat as every publish.
     */
   def renameTable(oldName: String, newName: String): Unit = {
@@ -162,23 +156,27 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     if (fs.exists(pFrom)) fs.rename(pFrom, new Path(dir, s"_PROPS/$newName"))
   }
 
-  def read(name: String): DataFrame =
-    if (manifest) {
-      val (mf, files) = resolveSnapshot(name)
-      readFilesMor(name, files, mf)
-    } else {
-      recover(name)
-      spark.read.parquet(tablePath(name))
-    }
+  /** Current-snapshot read, MERGE-ON-READ: the
+    * snapshot's deletion vector (if any) is subtracted, so every
+    * consumer — queries, `upsert`'s base scan, `compact`'s rewrite —
+    * sees deletes without special-casing them. The overlay rides the
+    * manifest lineage: `commitSnapshot` carries surviving DV entries
+    * forward across file-preserving commits, and a full rewrite
+    * (`atomicPublish`) materializes them because its input came from
+    * this very read.
+    */
+  def read(name: String): DataFrame = {
+    val (mf, files) = resolveSnapshot(name)
+    readFilesMor(name, files, mf)
+  }
 
-  /** Time travel (manifest mode): read the snapshot committed as
+  /** Time travel: read the snapshot committed as
     * `_manifest_v<version>`. Only the CURRENT and immediately-previous
     * snapshots are guaranteed resolvable — older manifests and the
     * version dirs only they referenced are GC'd at each publish (the
     * one-publish grace); asking for a collected snapshot fails loudly.
     */
   def readVersion(name: String, version: Long): DataFrame = {
-    require(manifest, "time travel requires manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val mf = new Path(root, s"_manifest_v$version")
@@ -291,8 +289,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
   private[graft] var lastCommitSidecarDirs: Set[String] = Set.empty
 
   /** Test seam: per-file getFileStatus RPCs issued by `tableHealth`'s
-    * fallback path — pinned to zero for manifest tables (sizes come
-    * from chunk entries or one listing per version dir).
+    * fallback path — pinned to zero (sizes come from chunk entries or
+    * one listing per version dir).
     */
   private[graft] var fileStatRpcs: Long = 0L
 
@@ -634,7 +632,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // DV anti-join's right side — or any frame a caller later joins
     // in — out of the registry: pruning a non-table scan with table
     // stats would be corruption, not optimization.
-    if (autoSkip && manifest) {
+    if (autoSkip) {
       val tp = tablePath(name)
       def vOf(f: String): String =
         if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else ""
@@ -755,7 +753,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     */
   private[graft] def pruneForPreds(name: String, mf: Option[String],
       preds: Seq[graft.plans.AutoSkip.Pred]): Option[Seq[String]] = {
-    if (!manifest || preds.isEmpty) return None
+    if (preds.isEmpty) return None
     def one(p: graft.plans.AutoSkip.Pred): (Seq[String], Int) = p match {
       case graft.plans.AutoSkip.RangePred(c, lo, hi) =>
         pruneFilesFrom(name, mf, c, lo, hi)
@@ -781,7 +779,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     kept.filter(_.size < total)
   }
 
-  /** File-level data skipping (manifest mode): the current snapshot's
+  /** File-level data skipping: the current snapshot's
     * file list filtered to files whose footer min/max for `column` can
     * overlap [lower, upper] (either bound open). Files without stats —
     * legacy layouts, pre-sidecar snapshots, nested/unsupported column
@@ -791,7 +789,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     */
   def pruneFiles(name: String, column: String, lower: Option[Any],
       upper: Option[Any]): (Seq[String], Int) = {
-    require(manifest, "data skipping requires manifest mode")
     val root = new Path(tablePath(name))
     pruneFilesFrom(name, currentManifest(fileSystem(root), root),
       column, lower, upper)
@@ -1003,7 +1000,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * type. At 100 TB this is O(files) driver metadata vs a full scan.
     */
   def statsMinMax(name: String, column: String): Option[(Any, Any)] = {
-    require(manifest, "stats queries require manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     // chunked manifests: the header's merged per-chunk stats exist for
@@ -1140,7 +1136,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * 100 TB this is O(files) driver metadata vs a full count scan.
     */
   def statsRowCount(name: String): Option[Long] = {
-    require(manifest, "stats queries require metadata mode")
     // chunked manifests carry per-chunk row sums in the HEADER: the
     // count answers in O(chunks) without opening a single chunk file
     // (let alone a data file) — the 10⁶-file metadata-count path
@@ -1164,7 +1159,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * unknown is never treated as zero).
     */
   def statsNullCount(name: String, column: String): Option[Long] = {
-    require(manifest, "stats queries require metadata mode")
     // chunked: per-chunk null sums live in the header (written only
     // when every chunk file knows the column) — O(chunks), like the
     // row count
@@ -1400,7 +1394,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       aggFn: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
       get: org.apache.spark.sql.Row => T)(
       publish: (Path, Map[String, T]) => Unit): Unit = {
-    require(manifest, "lazy column indexes require manifest mode")
     val root = new Path(tablePath(name))
     snapshotFiles(name).groupBy(f =>
         if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
@@ -1546,7 +1539,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
 
   private def maintainNdvSidecars(name: String, n: Long,
       added: Seq[String], base: Option[String]): Unit = {
-    if (!manifest || added.isEmpty || base.isEmpty) return
+    if (added.isEmpty || base.isEmpty) return
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val cov = ndvCoverage(fs, root, base.get)
@@ -1598,7 +1591,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * the whole snapshot would give.
     */
   def statsApproxNdv(name: String, column: String): Option[Long] = {
-    require(manifest, "metadata NDV requires manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     // chunked manifests carry per-chunk MERGED registers in the header
@@ -1643,7 +1635,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     */
   def pruneFilesEquals(name: String, column: String,
       values: Seq[Any]): (Seq[String], Int) = {
-    require(manifest, "data skipping requires manifest mode")
     val root = new Path(tablePath(name))
     pruneFilesEqualsFrom(name, currentManifest(fileSystem(root), root),
       column, values)
@@ -1760,39 +1751,12 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
   }
 
   def exists(name: String): Boolean = {
-    if (!manifest) recover(name)
     val p = new Path(tablePath(name))
     fileSystem(p).exists(p)
   }
 
-  /** Restore state left by a crash inside a publish swap: a table whose
-    * live dir vanished mid-swap comes back from `._old`; a partition
-    * dir mid-swap comes back from its sibling `._old_<name>`. Leftover
-    * `._old*` dirs whose target survived are cleaned up. Idempotent,
-    * driver-side metadata ops only.
-    */
-  private def recover(name: String): Unit = {
-    val live = new Path(tablePath(name))
-    val old = new Path(tablePath(name) + "._old")
-    val fs = fileSystem(live)
-    if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live)
-    else if (fs.exists(live) && fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live)) restoreOldPartitionDirs(fs, live)
-  }
-
-  private def restoreOldPartitionDirs(fs: FileSystem, d: Path): Unit =
-    fs.listStatus(d).filter(_.isDirectory).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("._old_")) {
-        val target = new Path(d, n.stripPrefix("._old_"))
-        if (!fs.exists(target)) fs.rename(st.getPath, target)
-        else fs.delete(st.getPath, true)
-      } else if (!n.startsWith(".") && !n.startsWith("_"))
-        restoreOldPartitionDirs(fs, st.getPath)
-    }
-
   // ------------------------------------------------------------------
-  // Manifest-pointer snapshots (object-store-safe publish; manifest=true)
+  // Manifest-pointer snapshots (the commit protocol)
   // ------------------------------------------------------------------
 
   private val CurrentPtr = "_CURRENT"
@@ -2863,7 +2827,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
   }
 
   // ------------------------------------------------------------------
-  // Cross-table UoW snapshot (DB-level _CURRENT; manifest mode)
+  // Cross-table UoW snapshot (DB-level _CURRENT)
   // ------------------------------------------------------------------
 
   private val DbManifestRe = "_db_manifest_v(\\d+)".r
@@ -2902,7 +2866,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * is always within that grace.
     */
   def commitDbSnapshot(tables: Seq[String]): Long = {
-    require(manifest, "cross-table snapshots require manifest mode")
     require(tables.nonEmpty, "commitDbSnapshot needs at least one table")
     val root = new Path(dir)
     val fs = fileSystem(root)
@@ -3007,22 +2970,17 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     file.toSeq.flatMap(f => partitionRel(f).split('/').toSeq
       .filter(_.contains('=')).map(_.takeWhile(_ != '=')))
 
-  /** Partition layout of the current snapshot/live dir. */
+  /** Partition layout of the current snapshot. */
   private def partitionColsOf(name: String): Seq[String] =
-    partitionColsFrom(
-      if (manifest) snapshotFiles(name).headOption
-      else {
-        val root = new Path(tablePath(name))
-        listDataFiles(fileSystem(root), root, root).headOption
-      })
+    partitionColsFrom(snapshotFiles(name).headOption)
 
   /** Compact the current snapshot: rewrite the table's content as one
     * fresh version with few large files — the maintenance op an
     * append-heavy (e.g. streaming micro-batch) table needs, since each
     * append adds small files the scan pays for forever. Content is
     * unchanged; readers see old-or-new throughout (it is just a
-    * publish); in manifest mode the version dirs and manifests also
-    * collapse — with the standard one-publish grace: the pre-compaction
+    * publish); the version dirs and manifests also collapse — with
+    * the standard one-publish grace: the pre-compaction
     * versions stay on disk until the NEXT publish so an in-flight
     * reader of the old snapshot keeps its files. Partitioned layouts
     * are re-detected from the file paths and preserved, with data
@@ -3033,15 +2991,12 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // captured-base CAS: compacting is read-modify-write too — a
     // commit racing the rewrite must abort this publish, never be
     // silently replaced by data computed from the stale snapshot
-    val (snap, base) =
-      if (manifest) {
-        val (mf, files) = resolveSnapshot(name)
-        (readFilesMor(name, files, mf), Some(mf))
-      } else (read(name), None)
+    val (mf, files) = resolveSnapshot(name)
+    val snap = readFilesMor(name, files, mf)
     val arranged =
       if (parts.isEmpty) snap.coalesce(numFiles)
       else snap.repartition(parts.map(col): _*)
-    atomicPublish(name, arranged, parts, base, op = "optimize")
+    atomicPublish(name, arranged, parts, Some(mf), op = "optimize")
   }
 
   /** Row-level diff between two committed snapshots (CDC-lite, the
@@ -3058,7 +3013,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * the diff for all its duplicates).
     */
   def diffVersions(name: String, v1: Long, v2: Long): (DataFrame, DataFrame) = {
-    require(manifest, "snapshot diff requires manifest mode")
     val a = readVersion(name, v1)
     val b = readVersion(name, v2)
     require(a.columns.toSet == b.columns.toSet,
@@ -3127,7 +3081,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
   def changes(name: String, fromV: Long, toV: Long,
       collapseUnchanged: Boolean = true,
       parallelCompose: Boolean = false): DataFrame = {
-    require(manifest, "the change feed requires manifest mode")
     require(fromV >= 0 && fromV <= toV,
       s"changes($name): need 0 <= fromV <= toV, got ($fromV, $toV)")
     require(toV - fromV <= changesMaxWindow,
@@ -3391,7 +3344,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * trusting a table again — O(files) driver work, no data read.
     */
   def fsck(name: String): Seq[String] = {
-    require(manifest, "fsck audits manifest tables")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val issues = scala.collection.mutable.ListBuffer[String]()
@@ -3456,7 +3408,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * operator's log.
     */
   def vacuumOrphans(name: String): Seq[String] = {
-    require(manifest, "vacuumOrphans audits manifest tables")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val current = currentManifest(fs, root)
@@ -3598,8 +3549,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
         fs.getFileStatus(new Path(root, f)).getLen
       })
     }
-    val (files, sizes) = (if (manifest) currentManifest(fs, root)
-        .flatMap(m => manifestChunks(fs, new Path(root, m))) else None) match {
+    val (files, sizes) = currentManifest(fs, root)
+        .flatMap(m => manifestChunks(fs, new Path(root, m))) match {
       case Some(chunks) =>
         val entries = chunks.flatMap(ch => chunkEntries(fs, root, ch.name))
         (entries.map(_._1), entries.map { case (f, sz) =>
@@ -3617,7 +3568,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       if (sizes.isEmpty) 0L else sizes.min,
       if (sizes.isEmpty) 0L else sizes.max,
       sizes.count(_ < smallBytes), versions,
-      if (manifest) statsRowCount(name) else None)
+      statsRowCount(name))
   }
 
   /** Auto-maintenance policy: ONE decision composing the maintenance
@@ -3647,11 +3598,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       // until someone remembers to re-run `buildNdv` by hand
       val root = new Path(tablePath(name))
       val fs = fileSystem(root)
-      val covered: Map[String, Int] =
-        if (manifest)
-          currentManifest(fs, root)
-            .map(m => ndvCoverage(fs, root, m)).getOrElse(Map.empty)
-        else Map.empty
+      val covered: Map[String, Int] = currentManifest(fs, root)
+        .map(m => ndvCoverage(fs, root, m)).getOrElse(Map.empty)
       val nFiles = math.max(1L,
         (before.totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
       compact(name, nFiles)
@@ -3675,14 +3623,10 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       bits: Int = 8): Unit = {
     require(partitionColsOf(name).isEmpty,
       "z-order compaction targets unpartitioned layouts")
-    if (manifest) {
-      val (mf, files) = resolveSnapshot(name)
-      atomicPublish(name,
-        ZOrder.cluster(readFilesMor(name, files, mf), cols, numFiles, bits),
-        expectedBase = Some(mf), op = "optimize")
-    } else
-      atomicPublish(name, ZOrder.cluster(read(name), cols, numFiles, bits),
-        op = "optimize")
+    val (mf, files) = resolveSnapshot(name)
+    atomicPublish(name,
+      ZOrder.cluster(readFilesMor(name, files, mf), cols, numFiles, bits),
+      expectedBase = Some(mf), op = "optimize")
   }
 
   /** Write `df` into a fresh `_vN` dir and return (n, its files).
@@ -3737,7 +3681,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * pre-delete snapshots have aged out of GC.
     */
   def rollback(name: String, toVersion: Long): Unit = {
-    require(manifest, "rollback requires manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val expected = currentManifest(fs, root)
@@ -4151,7 +4094,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
 
   private def deleteRowsCore(name: String,
       hitFilter: DataFrame => DataFrame): Long = {
-    require(manifest, "deletion vectors require manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     // A row-level delete IS a snapshot commit (the Iceberg/Delta
@@ -4234,7 +4176,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
   private def updateRowsCore(name: String,
       hitFilter: DataFrame => DataFrame,
       assignments: Map[String, org.apache.spark.sql.Column]): Long = {
-    require(manifest, "row-level update requires manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val (mfCap, filesCap) = resolveSnapshot(name)
@@ -4326,7 +4267,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       evolveCols: Seq[org.apache.spark.sql.types.StructField] = Nil)
       : (Long, Long, Long) = {
     import Warehouse.{MergeClause, MergeDeleteClause, MergeInsertClause, MergeUpdateClause}
-    require(manifest, "mergeRows requires manifest mode")
     require(keyPairs.nonEmpty, "mergeRows needs at least one ON key pair")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
@@ -4527,7 +4467,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * pre-MOR API.
     */
   def readMor(name: String): DataFrame = {
-    require(manifest, "deletion vectors require manifest mode")
     read(name)
   }
 
@@ -4546,7 +4485,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * size.
     */
   def history(name: String): Seq[(Long, Long, Option[Long])] = {
-    require(manifest, "history reads manifest tables")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     if (!fs.exists(root)) return Nil
@@ -4598,7 +4536,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * versions) driver metadata.
     */
   def versionAtTimestamp(name: String, tsMillis: Long): Option[Long] = {
-    require(manifest, "time travel requires manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val times = history(name).map(_._1).sorted.flatMap { v =>
@@ -4619,7 +4556,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     times.filter(_._2 <= tsMillis).map(_._1).maxOption
   }
 
-  // ---- Write-audit-publish branches (manifest mode) ------------------
+  // ---- Write-audit-publish branches ----------------------------------
 
   private def branchPtrPath(root: Path, branch: String) =
     new Path(root, s"_BRANCH_$branch")
@@ -4799,7 +4736,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     */
   def publishBranch(name: String, branch: String, df: DataFrame,
       partitionCols: Seq[String] = Nil): Unit = {
-    require(manifest, "branches require manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     require(currentManifest(fs, root).isDefined,
@@ -4819,7 +4755,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * diff the branch against current before deciding.
     */
   def readBranch(name: String, branch: String): DataFrame = {
-    require(manifest, "branches require manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     readFiles(name, readManifest(fs, branchManifestPath(fs, root, branch)))
@@ -4839,7 +4774,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * with the rest of the main-line state it deleted from.
     */
   def promoteBranch(name: String, branch: String): Unit = {
-    require(manifest, "branches require manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val mf = branchManifestPath(fs, root, branch)
@@ -4857,7 +4791,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * GC shield, and pointer all removed — the audit said no.
     */
   def abandonBranch(name: String, branch: String): Unit = {
-    require(manifest, "branches require manifest mode")
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
     val mfName = readBranchPtr(fs, root, branch)
@@ -4920,32 +4853,28 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     (n, rel)
   }
 
-  /** S7: set-oriented append — one write for N rows. In manifest mode
-    * the append is itself atomic: new files land in a fresh version
-    * dir, and the snapshot (old files + new files) commits via the
-    * pointer flip — a reader never sees a half-appended batch.
+  /** S7: set-oriented append — one write for N rows, itself atomic:
+    * new files land in a fresh version dir, and the snapshot (old
+    * files + new files) commits via the pointer flip — a reader never
+    * sees a half-appended batch.
     */
-  def append(name: String, df: DataFrame): Unit =
-    if (manifest) {
-      val root = new Path(tablePath(name))
-      val base = currentManifest(fileSystem(root), root)
-      // layout-preserving: a batch appended to a partitioned table
-      // writes under the same hive layout (else the mixed layout would
-      // silently demote the table to unpartitioned); derived from the
-      // snapshot's FIRST entry (flat head or first chunk's span —
-      // header-only), so a 10^6-file append never materializes the
-      // base list: the commit is a pure Delta against `base`.
-      val parts = partitionColsFrom(snapshotHeadFile(name))
-      val (n, added) = writeVersion(name, df, parts)
-      // sidecars land BEFORE the commit so the new chunk's header can
-      // carry the merged ndv line (rebases reuse the same version dir,
-      // so the sidecars survive retries)
-      maintainNdvSidecars(name, n, added, base)
-      commitAppend(name, n, added, base)
-    } else {
-      recover(name)
-      df.write.mode(SaveMode.Append).parquet(tablePath(name))
-    }
+  def append(name: String, df: DataFrame): Unit = {
+    val root = new Path(tablePath(name))
+    val base = currentManifest(fileSystem(root), root)
+    // layout-preserving: a batch appended to a partitioned table
+    // writes under the same hive layout (else the mixed layout would
+    // silently demote the table to unpartitioned); derived from the
+    // snapshot's FIRST entry (flat head or first chunk's span —
+    // header-only), so a 10^6-file append never materializes the
+    // base list: the commit is a pure Delta against `base`.
+    val parts = partitionColsFrom(snapshotHeadFile(name))
+    val (n, added) = writeVersion(name, df, parts)
+    // sidecars land BEFORE the commit so the new chunk's header can
+    // carry the merged ndv line (rebases reuse the same version dir,
+    // so the sidecars survive retries)
+    maintainNdvSidecars(name, n, added, base)
+    commitAppend(name, n, added, base)
+  }
 
   /** Commit an append with automatic REBASE on concurrent commits —
     * the Delta/Iceberg append-append resolution: a blind append only
@@ -4993,7 +4922,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     }
   }
 
-  /** Partition evolution (the Iceberg headline feature, manifest mode):
+  /** Partition evolution (the Iceberg headline feature):
     * append a batch under an EXPLICIT hive layout that may differ from
     * every earlier version's — history is never rewritten; the new
     * files land partitioned, the old files keep their layout, and the
@@ -5013,7 +4942,6 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     */
   def appendEvolved(name: String, df: DataFrame,
       partitionCols: Seq[String]): Unit = {
-    require(manifest, "partition evolution requires manifest mode")
     val root = new Path(tablePath(name))
     val base = currentManifest(fileSystem(root), root)
     val (n, added) = writeVersion(name, df, partitionCols)
@@ -5023,10 +4951,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
 
   /** Initialize a table if absent (S10 bootstrap). */
   def create(name: String, df: DataFrame): Unit =
-    if (!exists(name)) {
-      if (manifest) atomicPublish(name, df)
-      else df.write.mode(SaveMode.ErrorIfExists).parquet(tablePath(name))
-    }
+    if (!exists(name)) atomicPublish(name, df)
 
   /** S8: upsert = union(existing, updates) → keep the update row per
     * key (window dedup ordered by source priority) → atomic publish.
@@ -5037,13 +4962,25 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     * Partitioned tables take the partition-scoped path: the distinct
     * partition values in `updates` (small — broadcast) semi-join-prune
     * the existing scan, the window-dedup runs over just those
-    * partitions, and only those directories are swapped. Keys are
+    * partitions, and only those partitions are republished. Keys are
     * assumed partition-stable (a key never moves between partitions —
     * true of the fact's (report, item, context) → fiscal_year); a key
     * that DID move would leave its old-partition row behind — pass
     * `assertPartitionStable = true` to turn that silent stale row into
     * a loud error (one extra keys⋈keys join over the existing table;
     * opt-in because it reads partitions the scoped merge would skip).
+    *
+    * `touchedValsHint` (single partition column only) hands in the
+    * partition values the batch touches, so the manifest pruning needs
+    * no distinct-values job over `updates` — which would re-execute the
+    * batch's whole lineage only to learn them. The hint must contain
+    * EVERY partition value of the batch and MAY contain more: an extra
+    * value only keeps that partition's files in the base scan, and the
+    * null-safe semi-join against the batch's own values removes their
+    * rows before the merge. A missing value would drop its partition's
+    * existing rows from the merge — data loss — so callers derive the
+    * hint from a frame the batch's values are drawn from (the streaming
+    * sink's grain probe, the reports a fact batch inner-joins).
     */
   def upsert(name: String, updates: DataFrame, keyCols: Seq[String],
       partitionCols: Seq[String] = Nil,
@@ -5073,9 +5010,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // aborts loudly instead of being silently clobbered by a merge
     // computed from the stale base (re-resolving at publish time was
     // exactly that hole)
-    val (mfCap, filesCap) =
-      if (manifest) resolveSnapshot(name)
-      else (None, Seq.empty[String])
+    val (mfCap, filesCap) = resolveSnapshot(name)
     // captured-base expectation (streaming-sink TOCTOU guard): the
     // caller read table METADATA (e.g. the adaptive-grain prop) under
     // a snapshot it captured before calling; a commit landing between
@@ -5086,7 +5021,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     // day-regrained layout). Failing HERE is loud and retryable: the
     // sink's retry loop re-reads the flipped prop.
     expectedBase.foreach { exp =>
-      if (manifest && mfCap != exp)
+      if (mfCap != exp)
         throw new java.util.ConcurrentModificationException(
           s"upsert($name): table advanced from ${exp.getOrElse("<none>")} " +
           s"to ${mfCap.getOrElse("<none>")} since the caller captured its " +
@@ -5094,41 +5029,33 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     }
     upsertTestHook(name)
     // a table previously written UNPARTITIONED has its rows in root
-    // part-files: a partition-scoped swap would leave the old rows
+    // part-files: a partition-scoped commit would leave the old rows
     // behind → one whole-table merge migrates it to the partitioned
     // layout, after which upserts are partition-scoped
-    val scoped = partitionCols.nonEmpty && (
-      if (manifest) filesCap.nonEmpty && filesCap.forall(partitionRel(_).nonEmpty)
-      else isPartitionedLayout(name))
-    val existing =
-      if (manifest) readFilesMor(name, filesCap, mfCap) else read(name)
+    val scoped = partitionCols.nonEmpty &&
+      filesCap.nonEmpty && filesCap.forall(partitionRel(_).nonEmpty)
+    val existing = readFilesMor(name, filesCap, mfCap)
     val base =
       if (!scoped) existing
       else {
         val parts = updates.select(partitionCols.map(col): _*).distinct()
-        // manifest + single partition column (the streaming-sink shape):
+        // single partition column (the streaming-sink and fact shape):
         // prune the base scan at the MANIFEST level — the merge plan
         // then lists only the touched partitions' files, deterministic
         // driver metadata rather than hoping runtime DPP fires through
         // the explicit-file-list scan (StreamingSpec pins it with the
-        // corrupted-untouched-partition trick). The values collect is
-        // bounded by the batch's distinct partitions — the same small
-        // set the semi-join broadcasts. The semi-join STAYS as the
-        // exactness boundary: pruning is may-contain (legacy files
+        // corrupted-untouched-partition trick). The semi-join STAYS as
+        // the exactness boundary: pruning is may-contain (legacy files
         // without a parseable partition segment are kept), so rows of
         // untouched partitions that survive pruning are still filtered
         // before the merge.
-        // bounded collect: a sane batch touches few partitions; a
-        // pathological one (backfill rewriting 10⁵ partitions) skips
-        // manifest pruning rather than hauling the value list to the
-        // driver — the semi-join below still scopes the merge.
-        // `touchedValsHint` lets a caller that ALREADY ran a
-        // distinct-partitions action over the batch (the streaming
-        // sink's grain-observation probe) hand the values in, saving
-        // this job entirely — the hint must be the batch's complete
-        // distinct partition-value set.
+        // bounded values collect (skipped when `touchedValsHint` is
+        // given): a sane batch touches few partitions; a pathological
+        // one (backfill rewriting 10⁵ partitions) skips manifest
+        // pruning rather than hauling the value list to the driver —
+        // the semi-join below still scopes the merge.
         val touchedVals =
-          (if (manifest && partitionCols.size == 1)
+          (if (partitionCols.size == 1)
             touchedValsHint.filter(_.size <= 10000).orElse(
               Some(parts.limit(10001).collect().map(_.get(0)).toSeq)
                 .filter(_.size <= 10000))
@@ -5166,7 +5093,7 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
         // NULL-SAFE semi-join (<=>), found round 13: a plain equi-join
         // never matches null = null, so base rows whose partition
         // value is null were silently EXCLUDED from the merge — and
-        // publishPartitions then swapped the hive null dir with only
+        // publishPartitions then replaced the hive null dir with only
         // the batch's rows, losing every pre-existing null-partition
         // row. With <=> the null partition merges like any other.
         val partsR = partitionCols.foldLeft(parts)((d, pc) =>
@@ -5181,10 +5108,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     val merged = keyed.withColumn("_rn", row_number().over(w))
       .filter(col("_rn") === 1)
       .drop("_src", "_rn")
-    if (scoped) publishPartitions(name, merged, partitionCols,
-      if (manifest) Some(mfCap) else None)
-    else atomicPublish(name, merged, partitionCols,
-      if (manifest) Some(mfCap) else None, op = "upsert")
+    if (scoped) publishPartitions(name, merged, partitionCols, Some(mfCap))
+    else atomicPublish(name, merged, partitionCols, Some(mfCap), op = "upsert")
   }
 
   /** S8+: slowly-changing-dimension type-2 upsert — the
@@ -5219,10 +5144,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     def fp(cols: Seq[String]) = md5(to_json(struct(cols.sorted.map(col): _*)))
     // captured-base CAS, like upsert: the merge below reads THIS
     // snapshot and the publish compares against THIS manifest
-    val (scd2Base, scd2Files) =
-      if (manifest) resolveSnapshot(name) else (None, Seq.empty[String])
-    val existing = (if (manifest) readFilesMor(name, scd2Files, scd2Base)
-      else read(name)).persist(
+    val (scd2Base, scd2Files) = resolveSnapshot(name)
+    val existing = readFilesMor(name, scd2Files, scd2Base).persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     var curCached: Option[DataFrame] = None
     try {
@@ -5263,8 +5186,8 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       val merged = hist.unionByName(untouched, allowMissingColumns = true)
         .unionByName(closed, allowMissingColumns = true)
         .unionByName(opened, allowMissingColumns = true)
-      atomicPublish(name, merged, partitionColsOf(name),
-        if (manifest) Some(scd2Base) else None, op = "upsert")
+      atomicPublish(name, merged, partitionColsOf(name), Some(scd2Base),
+        op = "upsert")
     } finally {
       existing.unpersist()
       curCached.foreach(_.unpersist())
@@ -5296,33 +5219,16 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
       }).toSeq.distinct
   }
 
-  /** True iff the live table dir holds no root-level part-files (i.e.
-    * data lives under partition directories). In manifest mode the
-    * check is against the current snapshot's file paths.
-    */
-  private def isPartitionedLayout(name: String): Boolean =
-    if (manifest) {
-      val fs = snapshotFiles(name)
-      fs.nonEmpty && fs.forall(f => partitionRel(f).nonEmpty)
-    } else {
-      val live = new Path(tablePath(name))
-      !fileSystem(live).listStatus(live)
-        .exists(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    }
-
   /** S9: delete-by-key as one anti-join. The base snapshot is captured
     * once so the publish CAS covers the whole read-filter-publish span
     * (see atomicPublish's expectedBase).
     */
-  def delete(name: String, keys: DataFrame, keyCols: Seq[String]): Unit =
-    if (manifest) {
-      val (mf, files) = resolveSnapshot(name)
-      atomicPublish(name,
-        readFilesMor(name, files, mf).join(keys, keyCols, "left_anti"),
-        expectedBase = Some(mf), op = "delete")
-    } else
-      atomicPublish(name, read(name).join(keys, keyCols, "left_anti"),
-        op = "delete")
+  def delete(name: String, keys: DataFrame, keyCols: Seq[String]): Unit = {
+    val (mf, files) = resolveSnapshot(name)
+    atomicPublish(name,
+      readFilesMor(name, files, mf).join(keys, keyCols, "left_anti"),
+      expectedBase = Some(mf), op = "delete")
+  }
 
   /** Bucketed table: pre-shuffled, per-bucket-sorted layout on the join
     * key, registered in the session catalog (bucketing metadata lives
@@ -5348,47 +5254,29 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     */
   def readBucketed(name: String): DataFrame = spark.table(name)
 
-  /** S11: staged write + swap. Materialize to `<table>._staging`, then
-    * rename over the live dir — readers see either the old or the new
-    * table, never a partial write. (Single-table atomicity only, and
-    * only on rename-atomic filesystems; see class doc for the crash
-    * window and its `recover` path. The reference's per-document
-    * multi-table transaction has no vanilla-parquet equivalent —
-    * quarantine + idempotent re-ingest via deterministic keys covers
-    * the retry story instead.)
+  /** S11: one snapshot commit of `df` as the table's whole content —
+    * readers see either the old or the new table, never a partial
+    * write. Single-table atomicity; `commitDbSnapshot` pins several
+    * tables together.
+    *
+    * `expectedBase` (when given) is the snapshot the CALLER's
+    * computation actually read — read-modify-write ops (upsert,
+    * delete, compact) pass it so the commit CAS compares against THAT,
+    * not a re-resolve at publish time. Re-resolving here would let a
+    * commit that landed between the caller's read and this publish
+    * slip past the strictness contract: the CAS would compare against
+    * the racer's manifest and silently clobber its changes with data
+    * computed from the stale base.
     */
   def atomicPublish(name: String, df: DataFrame,
       partitionCols: Seq[String] = Nil,
       expectedBase: Option[Option[String]] = None,
       op: String = "overwrite"): Unit = {
-    if (manifest) {
-      // `expectedBase` (when given) is the snapshot the CALLER's
-      // computation actually read — read-modify-write ops (upsert,
-      // delete, compact) pass it so the commit CAS compares against
-      // THAT, not a re-resolve at publish time. Re-resolving here
-      // would let a commit that landed between the caller's read and
-      // this publish slip past the strictness contract: the CAS would
-      // compare against the racer's manifest and silently clobber its
-      // changes with data computed from the stale base.
-      val root = new Path(tablePath(name))
-      val expected = expectedBase.getOrElse(
-        currentManifest(fileSystem(root), root))
-      val (n, files) = writeVersion(name, df, partitionCols)
-      commitSnapshot(name, n, FullList(files), expected, op = op)
-      return
-    }
-    val live = new Path(tablePath(name))
-    val staging = new Path(tablePath(name) + "._staging")
-    val old = new Path(tablePath(name) + "._old")
-    val fs = fileSystem(live)
-    if (fs.exists(staging)) fs.delete(staging, true)
-    val writer = df.write.mode(SaveMode.Overwrite)
-    (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
-      .parquet(staging.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(live)) fs.rename(live, old)
-    fs.rename(staging, live)
-    fs.delete(old, true)
+    val root = new Path(tablePath(name))
+    val expected = expectedBase.getOrElse(
+      currentManifest(fileSystem(root), root))
+    val (n, files) = writeVersion(name, df, partitionCols)
+    commitSnapshot(name, n, FullList(files), expected, op = op)
   }
 
   /** Approximate on-disk volume of `name` (all retained versions'
@@ -5412,67 +5300,28 @@ class Warehouse(spark: SparkSession, dir: String, val manifest: Boolean = false,
     if (tables.size <= 1) tables.foreach { case (n, df) => atomicPublish(n, df) }
     else graft.Parallel.map(tables, tables.size) { case (n, df) => atomicPublish(n, df) }
 
-  /** Partition-scoped publish: stage `df` partitioned, then swap ONLY
-    * the partition directories present in the staged output; untouched
-    * live partitions are never rewritten. The per-partition backup dir
-    * is `._old_<partdir>` (dot-prefixed so a concurrent reader's
-    * partition discovery ignores it); `recover` restores it if the
-    * swap crashes between renames.
+  /** Partition-scoped publish: new files for the partitions present
+    * in `df`, the previous snapshot's files for every other partition
+    * — untouched data is REFERENCED, never copied. The base is the
+    * snapshot the caller's merge actually READ (`expectedBase`, see
+    * atomicPublish) so the commit CAS covers the whole
+    * read-merge-publish span, not just the write; resolving here is
+    * only the fallback for callers that stage fresh data.
     */
   def publishPartitions(name: String, df: DataFrame,
       partitionCols: Seq[String],
       expectedBase: Option[Option[String]] = None,
       op: String = "upsert"): Unit = {
     require(partitionCols.nonEmpty, "publishPartitions needs partition columns")
-    if (manifest) {
-      // partition-scoped snapshot: new files for the partitions present
-      // in `df`, the previous snapshot's files for every other
-      // partition — untouched data is REFERENCED, never copied (the
-      // object-store property a rename-swap can't give). The base is
-      // the snapshot the caller's merge actually READ (`expectedBase`,
-      // see atomicPublish) so the commit CAS covers the whole
-      // read-merge-publish span, not just the write; resolving here is
-      // only the fallback for callers that stage fresh data.
-      val root = new Path(tablePath(name))
-      val base = expectedBase.getOrElse(
-        currentManifest(fileSystem(root), root))
-      val (n, added) = writeVersion(name, df, partitionCols)
-      maintainNdvSidecars(name, n, added, base)
-      val touched = added.map(partitionRel).toSet
-      commitSnapshot(name, n, Delta(base, touched, Set.empty, added), base,
-        op = op)
-      return
-    }
-    val live = new Path(tablePath(name))
-    val fs = fileSystem(live)
-    if (!fs.exists(live)) { atomicPublish(name, df, partitionCols); return }
-    val staging = new Path(tablePath(name) + "._staging")
-    if (fs.exists(staging)) fs.delete(staging, true)
-    df.write.mode(SaveMode.Overwrite).partitionBy(partitionCols: _*)
-      .parquet(staging.toString)
-    leafPartitionDirs(fs, staging, partitionCols.length).foreach { sp =>
-      val rel = sp.toUri.getPath.stripPrefix(staging.toUri.getPath).stripPrefix("/")
-      val target = new Path(live, rel)
-      val backup = new Path(target.getParent, "._old_" + target.getName)
-      fs.mkdirs(target.getParent)
-      if (fs.exists(backup)) fs.delete(backup, true)
-      if (fs.exists(target)) fs.rename(target, backup)
-      fs.rename(sp, target)
-      fs.delete(backup, true)
-    }
-    fs.delete(staging, true)
+    val root = new Path(tablePath(name))
+    val base = expectedBase.getOrElse(
+      currentManifest(fileSystem(root), root))
+    val (n, added) = writeVersion(name, df, partitionCols)
+    maintainNdvSidecars(name, n, added, base)
+    val touched = added.map(partitionRel).toSet
+    commitSnapshot(name, n, Delta(base, touched, Set.empty, added), base,
+      op = op)
   }
-
-  /** The `depth`-level partition directories under `base` (skipping
-    * metadata files/dirs like _SUCCESS).
-    */
-  private def leafPartitionDirs(fs: FileSystem, base: Path, depth: Int): Seq[Path] =
-    if (depth == 0) Seq(base)
-    else fs.listStatus(base).toSeq
-      .filter(st => st.isDirectory && !st.getPath.getName.startsWith(".")
-        && !st.getPath.getName.startsWith("_old"))
-      .map(_.getPath)
-      .flatMap(p => leafPartitionDirs(fs, p, depth - 1))
 }
 
 object Warehouse {

@@ -75,7 +75,7 @@ object ChangeFeedProvider {
     val table = parameters.getOrElse("table",
       throw new IllegalArgumentException(
         "graft-changes source: option 'table' is required"))
-    (new Warehouse(spark, root, manifest = true), table)
+    (new Warehouse(spark, root), table)
   }
 }
 

@@ -106,10 +106,10 @@ object EventStream {
     * + keyed upsert. The standard Spark recipe — the checkpoint makes
     * redelivery AT-LEAST-once with a stable batchId, and the keyed
     * upsert makes re-applying a batch a no-op (same keys → same merged
-    * rows), so the composition is exactly-once in effect. Composes with
-    * `Warehouse(manifest = true)` for object stores: each micro-batch
-    * commit is one snapshot-pointer flip, and a crashed batch re-runs
-    * against the last committed snapshot.
+    * rows), so the composition is exactly-once in effect. Each
+    * micro-batch commit is one snapshot-pointer flip (object-store
+    * safe), and a crashed batch re-runs against the last committed
+    * snapshot.
     *
     * `partitionCols` scope each micro-batch's merge to the partitions
     * it touches (the S8 partition-scoped upsert) — at a real event rate
@@ -290,7 +290,7 @@ object EventStream {
     // aborts loudly on the stale base and the sink's retry loop
     // re-enters here, re-reading the flipped prop).
     val expectedBase: Option[Option[String]] =
-      if (wh.manifest && wh.exists(table)) Some(wh.currentSnapshotId(table))
+      if (wh.exists(table)) Some(wh.currentSnapshotId(table))
       else None
     // PERSIST the micro-batch (Spark's documented foreachBatch rule for
     // multi-action bodies): a batch DataFrame re-executes its whole

@@ -100,7 +100,7 @@ class GraftTableSink(ctx: SQLContext, parameters: Map[String, String],
   require(!Set("upsert", "cdc").contains(mode) || keys.nonEmpty,
     s"graft-table sink: mode=$mode requires option 'keys' (comma-separated)")
 
-  private val wh = new Warehouse(ctx.sparkSession, root, manifest = true)
+  private val wh = new Warehouse(ctx.sparkSession, root)
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = {
     val batch = org.apache.spark.sql.graft.BatchAsStream.rebatch(data)

@@ -15,7 +15,7 @@ class AutoSkipSpec extends SparkSpec {
 
   private def mk(tag: String): Warehouse = {
     val tmp = java.nio.file.Files.createTempDirectory(tag).toString
-    new Warehouse(spark, tmp, manifest = true)
+    new Warehouse(spark, tmp)
   }
 
   /** 10k rows in 8 contiguous-range files on k. */
@@ -155,7 +155,7 @@ class AutoSkipSpec extends SparkSpec {
   test("auto-skip: off-switch keeps plans untouched") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-autoskip7").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, autoSkip = false)
+    val wh = new Warehouse(spark, tmp, autoSkip = false)
     wh.atomicPublish("t", clustered())
     val q = wh.read("t").where($"k" <= 100L)
     assert(prunedCounts(q) === ((-1, -1)), "autoSkip=false must not register scans")
@@ -301,7 +301,7 @@ class AutoSkipSpec extends SparkSpec {
   test("graft_table TVF: SQL reads, time travel, pruning and meta-count compose") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-tvf-t").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.atomicPublish("t", clustered())                               // v1
     graft.sources.TableTvf.register(spark)
 
@@ -335,7 +335,7 @@ class AutoSkipSpec extends SparkSpec {
   test("graft_stats TVF: metadata-only column statistics, no data scan") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-tvf-s").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.atomicPublish("t", clustered())
     graft.sources.StatsTvf.register(spark)
 
@@ -355,7 +355,7 @@ class AutoSkipSpec extends SparkSpec {
   test("graft_history TVF: metadata ledger — version, op, files, raw rows") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-tvf-h").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 100).toDF("k").coalesce(1)) // v1
     wh.setSnapshotRetention("t", 8)
     wh.append("t", spark.range(100, 150).toDF("k").coalesce(1))      // v2
@@ -445,7 +445,7 @@ class AutoSkipSpec extends SparkSpec {
   test("auto-skip: date-partition chunk headers skip unopened chunks (pdate)") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-pdate").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     // 40 day-partitions, one file each → 10 chunks of 4; a 4-day probe
     // must decide chunk membership from the header's pdate stats and
     // OPEN only the 1-2 chunks those days can live in
@@ -585,7 +585,7 @@ class AutoSkipSpec extends SparkSpec {
   test("stats/history TVF freshness: frozen per analysis, refreshed per sql() call") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-tvf-fresh").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 100).toDF("k").coalesce(1))
     graft.sources.StatsTvf.register(spark)
     graft.sources.HistoryTvf.register(spark)
@@ -625,9 +625,9 @@ class AutoSkipSpec extends SparkSpec {
     val whs = for ((layout, df) <- dataOf.toSeq) yield {
       val t1 = java.nio.file.Files.createTempDirectory(s"graft-asf-$layout").toString
       val t2 = java.nio.file.Files.createTempDirectory(s"graft-asf2-$layout").toString
-      val on = new Warehouse(spark, t1, manifest = true,
+      val on = new Warehouse(spark, t1,
         manifestChunkSize = if (layout == "chunked") 4 else 1024)
-      val off = new Warehouse(spark, t2, manifest = true, autoSkip = false)
+      val off = new Warehouse(spark, t2, autoSkip = false)
       val pc = if (layout == "parts") Seq("pd") else Nil
       on.atomicPublish("t", df, partitionCols = pc)
       off.atomicPublish("t", df, partitionCols = pc)

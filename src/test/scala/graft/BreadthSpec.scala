@@ -345,7 +345,7 @@ class BreadthSpec extends SparkSpec {
     val d = Tables.load(spark, dir, "documents")
       .select($"doc_id", graft.operators.TextOps.tokens($"text").as("toks"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-bm25-fuzz").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     val allIds = d.select($"doc_id").as[Long].collect().toSet
     var live = allIds.filter(_ < 250)
     var unused = allIds -- live
@@ -359,7 +359,7 @@ class BreadthSpec extends SparkSpec {
         .select($"term", $"doc_id", $"sterm")
         .as[(String, Long, Double)].collect().toSet
       val fresh = new graft.sources.Warehouse(spark,
-        s"$tmp/fresh_$ctx", manifest = true)
+        s"$tmp/fresh_$ctx")
       Text.publishBm25(fresh, d.filter($"doc_id".isin(live.toSeq: _*)))
       val want = Text.servedSterms(fresh, qterms)
         .select($"term", $"doc_id", $"sterm")

@@ -50,7 +50,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
     assert(spark.sql("SHOW NAMESPACES IN graft2").collect()
       .map(_.getString(0)).contains("hn"))
     // deletes + catalog reads compose through the scheme too
-    val wh = new Warehouse(spark, s"$root/hn", manifest = true)
+    val wh = new Warehouse(spark, s"$root/hn")
     wh.deleteRows("t", col("k") === 2L)
     assert(spark.sql("SELECT sum(k) AS s FROM graft2.hn.t").head.getLong(0) === 4L)
     spark.sql("DROP TABLE graft2.hn.t")
@@ -61,11 +61,11 @@ class CatalogDdlDmlSpec extends SparkSpec {
     import spark.implicits._
     spark.sql("CREATE TABLE graft.ddl2.ev (k BIGINT, v DOUBLE)")
     spark.sql("INSERT INTO graft.ddl2.ev VALUES (1, 1.5), (2, 2.5)")
-    val before = new Warehouse(spark, s"$base/ddl2", manifest = true)
+    val before = new Warehouse(spark, s"$base/ddl2")
       .history("ev").size
     spark.sql("ALTER TABLE graft.ddl2.ev ADD COLUMN tag STRING")
     // metadata action: no new snapshot committed
-    assert(new Warehouse(spark, s"$base/ddl2", manifest = true)
+    assert(new Warehouse(spark, s"$base/ddl2")
       .history("ev").size === before)
     val r1 = spark.sql(
       "SELECT k, tag FROM graft.ddl2.ev ORDER BY k").collect()
@@ -87,7 +87,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
     spark.sql("""INSERT INTO graft.ddl2.pt
       SELECT id AS k, CASE WHEN id % 2 = 0 THEN 'even' ELSE 'odd' END AS grp
       FROM range(0, 1000)""")
-    val wh = new Warehouse(spark, s"$base/ddl2", manifest = true)
+    val wh = new Warehouse(spark, s"$base/ddl2")
     // layout: every data file sits under a grp=... dir
     val q = spark.sql(
       "SELECT count(*) AS n FROM graft.ddl2.pt WHERE grp = 'even'")
@@ -159,7 +159,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("join-skip fires when BOTH star sides resolve through catalog names") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/js", manifest = true)
+    val wh = new Warehouse(spark, s"$base/js")
     wh.atomicPublish("fact",
       spark.range(0, 10000).toDF("fk").withColumn("v", ($"fk" * 3).cast("double"))
         .repartitionByRange(8, $"fk").sortWithinPartitions($"fk"))
@@ -189,7 +189,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("readStream.table: catalog streaming read with checkpoint restart") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/str", manifest = true)
+    val wh = new Warehouse(spark, s"$base/str")
     wh.atomicPublish("ev", spark.range(0, 100).toDF("k").coalesce(1)) // v1
     wh.setSnapshotRetention("ev", 16)
     wh.append("ev", spark.range(100, 150).toDF("k").coalesce(1))      // v2
@@ -228,7 +228,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("readStream.table with readChangeFeed=true: all row kinds + CDF columns, checkpoint restart") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/cdf", manifest = true)
+    val wh = new Warehouse(spark, s"$base/cdf")
     wh.atomicPublish("t",
       spark.range(0, 10).toDF("k").withColumn("v", $"k".cast("double"))
         .coalesce(1))                                   // v1
@@ -283,7 +283,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("CALL graft.system.*: maintenance verbs from pure SQL") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/proc", manifest = true)
+    val wh = new Warehouse(spark, s"$base/proc")
     wh.atomicPublish("t", spark.range(0, 5000).toDF("k")
       .withColumn("s", format_string("s%05d", $"k")).repartition(8))
     wh.append("t", spark.range(5000, 6000).toDF("k")
@@ -318,7 +318,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("DELETE FROM: deletion-vector commit, no rewrite; arbitrary predicate") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dml", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dml")
     wh.atomicPublish("d",
       spark.range(0, 1000).toDF("k")
         .withColumn("v", $"k" * 2.0).repartition(4))
@@ -352,7 +352,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
     import spark.implicits._
     spark.sql("CREATE TABLE graft.ddl2.dc (k BIGINT, v DOUBLE, tag STRING)")
     spark.sql("INSERT INTO graft.ddl2.dc VALUES (1, 1.5, 'a'), (2, 2.5, 'b')")
-    val wh = new Warehouse(spark, s"$base/ddl2", manifest = true)
+    val wh = new Warehouse(spark, s"$base/ddl2")
     val before = wh.history("dc").size
     spark.sql("ALTER TABLE graft.ddl2.dc DROP COLUMN tag")
     assert(wh.history("dc").size === before, "drop is a metadata action")
@@ -378,10 +378,10 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("UPDATE racing a concurrent commit aborts loudly, nothing torn") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/race", manifest = true)
+    val wh = new Warehouse(spark, s"$base/race")
     wh.atomicPublish("u", spark.range(0, 1000).toDF("k")
       .withColumn("v", $"k".cast("double")).repartition(4))
-    val wh2 = new Warehouse(spark, s"$base/race", manifest = true)
+    val wh2 = new Warehouse(spark, s"$base/race")
     wh.updateTestHook = { _ =>
       wh2.append("u", spark.range(1000, 1100).toDF("k")
         .withColumn("v", $"k".cast("double")).coalesce(1))
@@ -402,7 +402,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("TRUNCATE TABLE: empty-snapshot commit, time travel survives") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/tr", manifest = true)
+    val wh = new Warehouse(spark, s"$base/tr")
     wh.atomicPublish("t", spark.range(0, 500).toDF("k").coalesce(1)) // v1
     wh.setSnapshotRetention("t", 8)
     spark.sql("TRUNCATE TABLE graft.tr.t")
@@ -416,7 +416,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("UPDATE: one atomic commit, cost ∝ updated rows") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dml", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dml")
     wh.atomicPublish("u",
       spark.range(0, 1000).toDF("k")
         .withColumn("v", $"k".cast("double"))
@@ -457,7 +457,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("MERGE INTO: upsert shape onto Warehouse.upsert; delete shape; negatives") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dml", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dml")
     wh.atomicPublish("m",
       spark.range(0, 100).toDF("k").withColumn("v", $"k".cast("double")))
     spark.range(50, 120).toDF("k").withColumn("v", lit(0.5))
@@ -504,7 +504,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("MERGE generic form: conditional actions, partial SET, multi-branch — one atomic commit") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dmlg", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dmlg")
     wh.atomicPublish("g",
       spark.range(0, 100).toDF("k").withColumn("v", $"k".cast("double"))
         .withColumn("w", lit("x")))
@@ -562,7 +562,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("MERGE WHEN NOT MATCHED BY SOURCE: update and delete branches") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dmlg", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dmlg")
     wh.atomicPublish("nb",
       spark.range(0, 40).toDF("k").withColumn("v", $"k".cast("double")))
     spark.range(20, 50).toDF("k").withColumn("v", lit(-1.0))
@@ -583,7 +583,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("MERGE explicit non-star assignment SET v = s.other_v executes correctly (r17 advice)") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dmlg", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dmlg")
     wh.atomicPublish("sv",
       spark.range(0, 10).toDF("k").withColumn("v", lit(0.0)))
     // source carries BOTH a same-named `v` (decoy) and `other_v`
@@ -598,7 +598,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("MERGE cardinality violation (duplicate source keys) fails loudly") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dmlg", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dmlg")
     wh.atomicPublish("cv",
       spark.range(0, 5).toDF("k").withColumn("v", lit(1.0)))
     Seq((2L, 5.0), (2L, 6.0)).toDF("k", "v").createOrReplaceTempView("cv_src")
@@ -615,7 +615,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("MERGE WITH SCHEMA EVOLUTION widens the table via the metadata AddColumn path") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dmlg", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dmlg")
     wh.atomicPublish("ev",
       spark.range(0, 10).toDF("k").withColumn("v", $"k".cast("double")))
     spark.range(5, 15).toDF("k").withColumn("v", lit(0.5))
@@ -646,7 +646,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
 
   test("correlated subquery DML: EXISTS / IN decorrelate onto the keyed commit paths") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/dmlc", manifest = true)
+    val wh = new Warehouse(spark, s"$base/dmlc")
     wh.atomicPublish("t1",
       spark.range(0, 100).toDF("k").withColumn("grp", $"k" % 10)
         .withColumn("v", $"k".cast("double")).repartition(4))
@@ -688,7 +688,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
     import spark.implicits._
     spark.sql("CREATE TABLE graft.ddl2.rc (k BIGINT, val DOUBLE, tag STRING)")
     spark.sql("INSERT INTO graft.ddl2.rc VALUES (1, 1.5, 'a'), (2, 2.5, 'b')")
-    val wh = new Warehouse(spark, s"$base/ddl2", manifest = true)
+    val wh = new Warehouse(spark, s"$base/ddl2")
     val before = wh.history("rc").size
     spark.sql("ALTER TABLE graft.ddl2.rc RENAME COLUMN val TO amount")
     assert(wh.history("rc").size === before, "rename is a metadata action")
@@ -737,11 +737,11 @@ class CatalogDdlDmlSpec extends SparkSpec {
   test("mergeRows racing a concurrent commit aborts loudly, nothing torn; Scala evolveCols") {
     import spark.implicits._
     import graft.sources.Warehouse.{MergeInsertClause, MergeUpdateClause}
-    val wh = new Warehouse(spark, s"$base/race", manifest = true)
+    val wh = new Warehouse(spark, s"$base/race")
     wh.atomicPublish("m", spark.range(0, 1000).toDF("k")
       .withColumn("v", $"k".cast("double")).repartition(4))
     val src = spark.range(500, 1200).toDF("k").withColumn("nv", lit(-7.0))
-    val wh2 = new Warehouse(spark, s"$base/race", manifest = true)
+    val wh2 = new Warehouse(spark, s"$base/race")
     wh.mergeTestHook = { _ =>
       wh2.append("m", spark.range(5000, 5100).toDF("k")
         .withColumn("v", $"k".cast("double")).coalesce(1))
@@ -826,7 +826,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
   test("TIMESTAMP AS OF is self-contained: perturbed mtimes don't move resolution; pre-label non-monotonic mtimes fail loudly") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-tt18").toString
-    val wh = new Warehouse(spark, dir, manifest = true)
+    val wh = new Warehouse(spark, dir)
     wh.setSnapshotRetention("tt", 8)
     wh.atomicPublish("tt", spark.range(0, 10).toDF("k"))
     Thread.sleep(20)
@@ -932,7 +932,7 @@ class CatalogDdlDmlSpec extends SparkSpec {
     spark.sql("INSERT INTO graft.ck.t VALUES (4, NULL)")
     assert(n() === 3L)
     // the Scala write paths enforce the same declaration
-    val wh = new Warehouse(spark, s"$base/ck", manifest = true)
+    val wh = new Warehouse(spark, s"$base/ck")
     intercept[Exception] { wh.append("t", Seq((9L, -3.0)).toDF("k", "v")) }
     intercept[Exception] {
       wh.upsert("t", Seq((1L, -9.0)).toDF("k", "v"), Seq("k"))

@@ -27,7 +27,7 @@ class DedupSimSpec extends SparkSpec {
     import graft.queries.Dedup
     val d = Tables.load(spark, dir, "documents").select($"doc_id", $"text")
     val tmp = java.nio.file.Files.createTempDirectory("graft-lshidx-spec").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     // index the corpus once, through the manifest publish (real
     // parquet round-trip — signatures and shingles come back from
     // disk, not from the lineage that computed them)

@@ -385,11 +385,10 @@ class EtlSpec extends SparkSpec {
       Seq((1L, "a", "2022"), (2L, "b", "2022"), (3L, "c", "2023"))
         .toDF("k", "v", "fy"),
       Seq("k"), Seq("fy"))
-    // part-file names are write-unique (uuid), so identical name sets ⇒
-    // the directory was not rewritten
+    // part-file names are write-unique (uuid), so identical snapshot
+    // file sets ⇒ the partition was not rewritten
     def files(fy: String): Set[String] =
-      new java.io.File(s"$tmp/t/fy=$fy").listFiles()
-        .map(_.getName).filter(_.startsWith("part-")).toSet
+      wh.read("t").where($"fy" === fy).inputFiles.toSet
     val before2022 = files("2022")
     wh.upsert("t",
       Seq((3L, "C", "2023"), (4L, "d", "2023")).toDF("k", "v", "fy"),
@@ -411,14 +410,14 @@ class EtlSpec extends SparkSpec {
     val wh = new Warehouse(spark, tmp)
     // flat layout: rows in root part-files
     wh.create("t", Seq((1L, "a", "2022"), (2L, "b", "2023")).toDF("k", "v", "fy"))
-    // a partition-scoped swap here would leave the old root rows behind;
+    // a partition-scoped commit here would keep the old flat rows;
     // instead the whole table migrates to the partitioned layout
     wh.upsert("t", Seq((2L, "B", "2023")).toDF("k", "v", "fy"), Seq("k"), Seq("fy"))
     assert(wh.read("t").orderBy("k").as[(Long, String, String)].collect()
       === Array((1L, "a", "2022"), (2L, "B", "2023")))
-    val root = new java.io.File(s"$tmp/t").listFiles()
-    assert(!root.exists(f => f.isFile && f.getName.startsWith("part-")), "not migrated")
-    assert(root.exists(f => f.isDirectory && f.getName == "fy=2022"))
+    val snap = wh.read("t").inputFiles
+    assert(snap.forall(_.contains("/fy=")), "not migrated")
+    assert(snap.exists(_.contains("/fy=2022/")))
   }
 
   test("warehouse: bucketed tables join co-located, with no exchange") {
@@ -451,7 +450,7 @@ class EtlSpec extends SparkSpec {
   test("warehouse: manifest publish — a pre-flip reader keeps the OLD snapshot") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-wh9").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.atomicPublish("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
     // a reader resolves pointer → manifest → explicit file list at
     // read() time; those files must survive the next publish (old-or-
@@ -492,8 +491,8 @@ class EtlSpec extends SparkSpec {
   test("warehouse: racing manifest commits — base-dependent publish aborts loudly") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-whcas").toString
-    val whA = new Warehouse(spark, tmp, manifest = true)
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whA = new Warehouse(spark, tmp)
+    val whB = new Warehouse(spark, tmp)
     whA.atomicPublish("t", Seq((1L, "base")).toDF("k", "v"))
     // Inject B's full commit into A's window between manifest create
     // and pointer CAS — the interleaving that, under last-PUT-wins,
@@ -528,8 +527,8 @@ class EtlSpec extends SparkSpec {
   test("warehouse: append-append race auto-rebases — both batches land, no rewrite") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-whreb").toString
-    val whA = new Warehouse(spark, tmp, manifest = true)
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whA = new Warehouse(spark, tmp)
+    val whB = new Warehouse(spark, tmp)
     whA.atomicPublish("t", Seq((1L, "base")).toDF("k", "v"))
     // B commits in A's manifest→CAS window; A's append loses the CAS
     // but is base-independent, so it REBASES onto B's snapshot and
@@ -564,8 +563,8 @@ class EtlSpec extends SparkSpec {
   test("warehouse: both writers pass the pre-check — locked CAS keeps at most one flip") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-whcas2").toString
-    val whA = new Warehouse(spark, tmp, manifest = true)
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whA = new Warehouse(spark, tmp)
+    val whB = new Warehouse(spark, tmp)
     whA.atomicPublish("t", Seq((1L, "base")).toDF("k", "v"))
     // Inject B's FULL commit after A's optimistic pre-check has already
     // PASSED — the r6 check-then-rename lost-update window: both
@@ -602,8 +601,8 @@ class EtlSpec extends SparkSpec {
     // the object-store-shaped store: CAS is a native atomic register
     // swap (If-Match semantics) — no lock files, no rename
     val store = new graft.sources.InMemoryPointerStore
-    val whA = new Warehouse(spark, tmp, manifest = true, pointerStore = store)
-    val whB = new Warehouse(spark, tmp, manifest = true, pointerStore = store)
+    val whA = new Warehouse(spark, tmp, pointerStore = store)
+    val whB = new Warehouse(spark, tmp, pointerStore = store)
     whA.atomicPublish("t", Seq((1L, "base")).toDF("k", "v"))
     assert(whA.read("t").count() === 1)
     // same lost-update interleaving as the FS-store test: both writers
@@ -714,7 +713,7 @@ class EtlSpec extends SparkSpec {
   test("warehouse: manifest partition-scoped upsert references untouched files") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-wh10").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.upsert("t",
       Seq((1L, "a", "2022"), (2L, "b", "2022"), (3L, "c", "2023"))
         .toDF("k", "v", "fy"), Seq("k"), Seq("fy"))
@@ -739,12 +738,12 @@ class EtlSpec extends SparkSpec {
   test("warehouse: legacy table migrates into manifest mode in place") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-wh11").toString
-    // written by a rename-swap warehouse: plain dir layout, no manifest
-    new Warehouse(spark, tmp).create("t", Seq((1L, "a"), (2L, "b")).toDF("k", "v"))
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    // a pre-manifest table: plain parquet dir layout, no manifest
+    Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(s"$tmp/t")
+    val wh = new Warehouse(spark, tmp)
     // read-through: legacy files ARE the snapshot
     assert(wh.read("t").count() === 2)
-    // first manifest-mode write snapshots on top without touching them
+    // the first commit snapshots on top without touching them
     wh.upsert("t", Seq((2L, "B")).toDF("k", "v"), Seq("k"))
     assert(wh.read("t").orderBy("k").as[(Long, String)].collect()
       === Array((1L, "a"), (2L, "B")))
@@ -753,7 +752,7 @@ class EtlSpec extends SparkSpec {
   test("warehouse: compaction collapses an append-heavy manifest table") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-wh13").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     (1 to 5).foreach(i => wh.append("t", Seq((i.toLong, s"v$i")).toDF("k", "v")))
     def files() = new java.io.File(s"$tmp/t").listFiles()
     assert(wh.read("t").count() === 5)
@@ -772,8 +771,8 @@ class EtlSpec extends SparkSpec {
     assert(vdirs.map(_.listFiles().count(_.getName.startsWith("part-"))).sum === 2)
     assert(wh.read("t").count() === 6)
     // partitioned layout survives appends AND compaction (append is
-    // layout-preserving in manifest mode)
-    val wh2 = new Warehouse(spark, tmp, manifest = true)
+    // layout-preserving)
+    val wh2 = new Warehouse(spark, tmp)
     wh2.upsert("p", Seq((1L, "v1", "2021")).toDF("k", "v", "fy"),
       Seq("k"), Seq("fy"))
     (2 to 4).foreach(i => wh2.append("p",
@@ -789,7 +788,7 @@ class EtlSpec extends SparkSpec {
   test("warehouse: SCD2 upsert preserves history, closes changed rows only") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-wh15").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.upsertScd2("dim", Seq((1L, "acme"), (2L, "globex")).toDF("k", "name"), Seq("k"), "2023-01-01")
     // k=1 renamed, k=2 unchanged, k=3 new
     wh.upsertScd2("dim", Seq((1L, "acme-corp"), (2L, "globex"), (3L, "initech"))
@@ -840,7 +839,7 @@ class EtlSpec extends SparkSpec {
   test("warehouse: time travel reads the previous snapshot; schema evolution reads") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-wh14").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     wh.atomicPublish("t", Seq((1L, "a")).toDF("k", "v"))
     wh.atomicPublish("t", Seq((1L, "A"), (2L, "b")).toDF("k", "v"))
     // previous snapshot is resolvable by its manifest version
@@ -861,44 +860,132 @@ class EtlSpec extends SparkSpec {
   test("warehouse: model-based fuzz — random op sequences match an in-memory model") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-wh-fuzz").toString
-    // both modes run the same seeded op sequence against the same model
-    for ((manifest, seed) <- Seq((true, 11), (false, 23))) {
-      val wh = new Warehouse(spark, s"$tmp/m$manifest", manifest = manifest)
-      val rnd = new scala.util.Random(seed)
-      var model = Map.empty[Long, String]
-      def df(rows: Map[Long, String]) = rows.toSeq.toDF("k", "v")
-      for (step <- 1 to 18) {
-        rnd.nextInt(4) match {
-          case 0 => // append fresh keys only (append semantics = no merge)
-            val fresh = (1 to 3).map(_ => rnd.nextLong(1000) + 1000 * step)
-              .map(k => k -> s"a$step").toMap -- model.keySet
-            if (fresh.nonEmpty) {
-              if (wh.exists("t")) wh.append("t", df(fresh)) else wh.create("t", df(fresh))
-              model ++= fresh
-            }
-          case 1 => // upsert: mix of existing and new keys
-            val ups = ((1 to 2).map(_ => rnd.nextLong(1000)) ++
-              model.keySet.take(2)).map(k => k -> s"u$step").toMap
-            wh.upsert("t", df(ups), Seq("k"))
-            model ++= ups
-          case 2 if model.nonEmpty => // delete a few keys
-            val dels = model.keySet.filter(_ => rnd.nextBoolean()).take(3)
-            if (dels.nonEmpty) {
-              wh.delete("t", dels.toSeq.toDF("k"), Seq("k"))
-              model --= dels
-            }
-          case 3 if manifest && model.nonEmpty => wh.compact("t")
-          case _ => ()
-        }
-        if (wh.exists("t")) {
-          // compare as sorted rows, not toMap: a stale-row duplicate —
-          // exactly the corruption this test hunts — would be silently
-          // collapsed by toMap and could mask the divergence
-          val got = wh.read("t").as[(Long, String)].collect().toSeq.sorted
-          assert(got === model.toSeq.sorted, s"mode=$manifest step=$step diverged")
-        }
+    val wh = new Warehouse(spark, tmp)
+    val rnd = new scala.util.Random(11)
+    var model = Map.empty[Long, String]
+    def df(rows: Map[Long, String]) = rows.toSeq.toDF("k", "v")
+    for (step <- 1 to 18) {
+      rnd.nextInt(4) match {
+        case 0 => // append fresh keys only (append semantics = no merge)
+          val fresh = (1 to 3).map(_ => rnd.nextLong(1000) + 1000 * step)
+            .map(k => k -> s"a$step").toMap -- model.keySet
+          if (fresh.nonEmpty) {
+            if (wh.exists("t")) wh.append("t", df(fresh)) else wh.create("t", df(fresh))
+            model ++= fresh
+          }
+        case 1 => // upsert: mix of existing and new keys
+          val ups = ((1 to 2).map(_ => rnd.nextLong(1000)) ++
+            model.keySet.take(2)).map(k => k -> s"u$step").toMap
+          wh.upsert("t", df(ups), Seq("k"))
+          model ++= ups
+        case 2 if model.nonEmpty => // delete a few keys
+          val dels = model.keySet.filter(_ => rnd.nextBoolean()).take(3)
+          if (dels.nonEmpty) {
+            wh.delete("t", dels.toSeq.toDF("k"), Seq("k"))
+            model --= dels
+          }
+        case 3 if model.nonEmpty => wh.compact("t")
+        case _ => ()
+      }
+      if (wh.exists("t")) {
+        // compare as sorted rows, not toMap: a stale-row duplicate —
+        // exactly the corruption this test hunts — would be silently
+        // collapsed by toMap and could mask the divergence
+        val got = wh.read("t").as[(Long, String)].collect().toSeq.sorted
+        assert(got === model.toSeq.sorted, s"step=$step diverged")
       }
     }
+  }
+
+  test("warehouse: a superset touchedValsHint reads the same as no hint") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-wh-hint").toString
+    val base = Seq((1L, "a", "2022"), (2L, "b", "2022"), (3L, "c", "2023"))
+      .toDF("k", "v", "fy")
+    val batch = Seq((3L, "C", "2023"), (4L, "d", "2023")).toDF("k", "v", "fy")
+    def rows(wh: Warehouse) =
+      wh.read("t").as[(Long, String, String)].collect().toSeq.sorted
+    val plain = new Warehouse(spark, s"$tmp/plain")
+    plain.upsert("t", base, Seq("k"), Seq("fy"))
+    plain.upsert("t", batch, Seq("k"), Seq("fy"))
+    val hinted = new Warehouse(spark, s"$tmp/hinted")
+    hinted.upsert("t", base, Seq("k"), Seq("fy"))
+    val files2022 = hinted.read("t").where($"fy" === "2022").inputFiles.toSet
+    // the batch touches 2023 only; the hint adds an existing untouched
+    // partition (2022) and one the table does not have (1999)
+    hinted.upsert("t", batch, Seq("k"), Seq("fy"),
+      touchedValsHint = Some(Seq("2022", "2023", "1999")))
+    assert(rows(hinted) === rows(plain))
+    assert(rows(hinted) === Seq((1L, "a", "2022"), (2L, "b", "2022"),
+      (3L, "C", "2023"), (4L, "d", "2023")))
+    assert(hinted.read("t").where($"fy" === "2022").inputFiles.toSet === files2022,
+      "an extra hinted partition is kept in the base scan, never rewritten")
+  }
+
+  /** Physical plan nodes of the SQL executions `body` starts, one
+    * `simpleString` per line per execution. A marker job
+    * run after it closes the window: the listener bus delivers events
+    * in order, so once the marker's job start arrives, so has every
+    * execution start before it.
+    */
+  private def sqlPlans(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    import scala.jdk.CollectionConverters._
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = s"sql-plans-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case st: SparkListenerSQLExecutionStart =>
+          def nodes(p: SparkPlanInfo): Seq[String] = p.simpleString +: p.children.flatMap(nodes)
+          plans.add(nodes(st.sparkPlanInfo).mkString("\n"))
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == marker))
+          seen.countDown()
+    }
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobGroup(marker, marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(seen.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      plans.asScala.toSeq
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("ingest: the fact upsert takes its fiscal years from the reports, running no partition-values job") {
+    import spark.implicits._
+    // the upsert's own partition-values probe: a collect of the batch's
+    // distinct partition values, capped at 10001
+    def probes(plans: Seq[String]) = plans.count(_.contains("CollectLimit 10001"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-hintingest").toString
+    // control: an unhinted partitioned upsert runs the probe, so the
+    // detector below sees it when it runs (a batch read from files: over
+    // a relation of known size the optimizer drops the probe's limit)
+    def batch(k: Long) = {
+      val p = s"$tmp/batch$k"
+      Seq((k, (2021 + k).toString)).toDF("k", "fy").write.parquet(p)
+      spark.read.parquet(p)
+    }
+    val ctl = new Warehouse(spark, s"$tmp/ctl")
+    ctl.upsert("t", batch(1L), Seq("k"), Seq("fy"))
+    val ctlPlans = sqlPlans(ctl.upsert("t", batch(2L), Seq("k"), Seq("fy")))
+    assert(probes(ctlPlans) === 1)
+    val wh = new Warehouse(spark, s"$tmp/wh")
+    new Ingest(spark, wh).runStaged(Standardize(rawFixture()), strict = false)
+    val facts = wh.read("financial_data").count()
+    // the second ingest upserts into the existing partitioned fact
+    val plans = sqlPlans(new Ingest(spark, wh).runStaged(
+      Standardize(rawFixture(docId = "DOC002", period = period2)), strict = false))
+    assert(plans.nonEmpty)
+    assert(probes(plans) === 0, "the fact upsert re-ran its pipeline for partition values")
+    assert(wh.read("financial_data").count() > facts)
+    assert(wh.read("financial_data").select("fiscal_year").distinct().count() === 2)
   }
 
   test("warehouse: upsert with assertPartitionStable rejects a moved key") {
@@ -921,32 +1008,12 @@ class EtlSpec extends SparkSpec {
       === Array((1L, "a", "2022"), (2L, "B", "2023")))
   }
 
-  test("warehouse: recover restores the table after a crashed swap") {
-    import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft-wh5").toString
-    val wh = new Warehouse(spark, tmp)
-    wh.create("t", Seq((1L, "a")).toDF("k", "v"))
-    // simulate a crash between rename(live→._old) and rename(staging→live)
-    assert(new java.io.File(s"$tmp/t").renameTo(new java.io.File(s"$tmp/t._old")))
-    assert(wh.exists("t")) // recover() restored ._old
-    assert(wh.read("t").as[(Long, String)].collect() === Array((1L, "a")))
-
-    // per-partition crash window: fy=2023 vanished mid-swap, backup left
-    val wh2 = new Warehouse(spark, tmp)
-    wh2.upsert("t2",
-      Seq((1L, "a", "2022"), (2L, "b", "2023")).toDF("k", "v", "fy"),
-      Seq("k"), Seq("fy"))
-    assert(new java.io.File(s"$tmp/t2/fy=2023")
-      .renameTo(new java.io.File(s"$tmp/t2/._old_fy=2023")))
-    assert(wh2.read("t2").count() === 2) // recover() restored the partition
-  }
-
   // ---- cross-table UoW snapshot (DB-level _CURRENT) ------------------
 
   test("warehouse: DB snapshot pins a consistent multi-table set across a crashed sequence") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-uow").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     // UoW 1: reports + facts published, then ONE db flip
     wh.atomicPublish("reports", Seq((1L, "r1")).toDF("report_id", "title"))
     wh.atomicPublish("facts", Seq((1L, 100L)).toDF("report_id", "value"))
@@ -974,7 +1041,7 @@ class EtlSpec extends SparkSpec {
 
   test("ingest: killed between table publishes — snapshot readers never see reports without facts") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-uowingest").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     // ingest 1 completes: the baseline consistent UoW
     new Ingest(spark, wh).runStaged(Standardize(rawFixture()), strict = false)
     val baseReports = wh.readSnapshot("financial_reports").count()
@@ -1021,7 +1088,7 @@ class EtlSpec extends SparkSpec {
   test("ingest: a failed companies publish surfaces as itself, stops the pool, keeps the snapshot") {
     import scala.jdk.CollectionConverters._
     val tmp = java.nio.file.Files.createTempDirectory("graft-uowfan").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     val tables = Seq("companies", "financial_items", "financial_reports", "financial_data")
     new Ingest(spark, wh).runStaged(Standardize(rawFixture()), strict = false)
     def snapshot(): Map[String, Set[Row]] =
@@ -1059,7 +1126,7 @@ class EtlSpec extends SparkSpec {
 
   test("ingest: a killed ingest leaves none of its frames in the cache") {
     val tmp = java.nio.file.Files.createTempDirectory("graft-uowcache").toString
-    val wh = new Warehouse(spark, tmp, manifest = true)
+    val wh = new Warehouse(spark, tmp)
     new Ingest(spark, wh).runStaged(Standardize(rawFixture()), strict = false)
     spark.catalog.clearCache()
     val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -1081,8 +1148,8 @@ class EtlSpec extends SparkSpec {
   test("warehouse: racing DB snapshot commits — exactly one wins") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-uowrace").toString
-    val whA = new Warehouse(spark, tmp, manifest = true)
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whA = new Warehouse(spark, tmp)
+    val whB = new Warehouse(spark, tmp)
     whA.atomicPublish("t", Seq((1L, "a")).toDF("k", "v"))
     whA.commitDbSnapshot(Seq("t"))
     // B's full commit lands inside A's window (after A observed its
@@ -1183,9 +1250,9 @@ class EtlSpec extends SparkSpec {
   test("gen-fenced store: plugs into the warehouse commit path, CAS race aborts the loser") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-genwh").toString
-    val whA = new Warehouse(spark, tmp, manifest = true,
+    val whA = new Warehouse(spark, tmp,
       pointerStore = new graft.sources.GenFencedPointerStore)
-    val whB = new Warehouse(spark, tmp, manifest = true,
+    val whB = new Warehouse(spark, tmp,
       pointerStore = new graft.sources.GenFencedPointerStore)
     whA.atomicPublish("t", Seq((1L, "base")).toDF("k", "v"))
     // the r6 lost-update window: both pass the pre-check, B completes a
@@ -1217,7 +1284,7 @@ class EtlSpec extends SparkSpec {
     // must all survive the mix
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-genbr").toString
-    val wh = new Warehouse(spark, tmp, manifest = true,
+    val wh = new Warehouse(spark, tmp,
       pointerStore = new graft.sources.GenFencedPointerStore)
     wh.atomicPublish("t", spark.range(0, 100).toDF("k"))               // v1
     wh.deleteRows("t", col("k") >= 90L)         // main DV via gen store

@@ -37,7 +37,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("catalog: SELECT resolves to the warehouse read; auto-skip and deletes apply") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/wh", manifest = true)
+    val wh = new Warehouse(spark, s"$base/wh")
     wh.atomicPublish("t",
       spark.range(0, 10000).toDF("k")
         .withColumn("s", format_string("s%05d", $"k"))
@@ -50,7 +50,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(q.head.getLong(0) === (1500L to 1700L).count(_ % 10 != 0))
 
     // metadata count on a CLEAN catalog table collapses (no scan)
-    val wh2c = new Warehouse(spark, s"$base/wh2", manifest = true)
+    val wh2c = new Warehouse(spark, s"$base/wh2")
     wh2c.atomicPublish("c", spark.range(0, 777).toDF("k").repartition(2))
     val mc = spark.sql("SELECT count(*) AS n FROM graft.wh2.c")
     assert(mc.queryExecution.optimizedPlan.collect {
@@ -60,7 +60,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("catalog: INSERT INTO appends through the commit path; OVERWRITE republishes") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/whi", manifest = true)
+    val wh = new Warehouse(spark, s"$base/whi")
     wh.atomicPublish("t", spark.range(0, 100).toDF("k").coalesce(1))
 
     spark.sql("INSERT INTO graft.whi.t SELECT id AS k FROM range(100, 150)")
@@ -74,7 +74,7 @@ class GraftCatalogSpec extends SparkSpec {
 
   test("catalog: VERSION AS OF time travel resolves retained snapshots") {
     import spark.implicits._
-    val wh = new Warehouse(spark, s"$base/tt", manifest = true)
+    val wh = new Warehouse(spark, s"$base/tt")
     wh.atomicPublish("t", spark.range(0, 100).toDF("k").coalesce(1)) // v1
     wh.setSnapshotRetention("t", 8)
     wh.append("t", spark.range(100, 150).toDF("k").coalesce(1))      // v2

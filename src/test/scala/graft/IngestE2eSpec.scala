@@ -35,6 +35,46 @@ class IngestE2eSpec extends SparkSpec {
     assert(math.abs(beta.getAs[Double]("operation_profit_rate") - 10.0) < 1e-9)
   }
 
+  test("the default warehouse commits an ingest's four tables as one snapshot") {
+    val tables = Seq("companies", "financial_items", "financial_reports", "financial_data")
+    val csv1 = Files.createTempDirectory("filings-tx1").toString
+    Filings.write(csv1, "S100AAAA", "E11111", "アルファ株式会社", 200000000L, 50000000L)
+    Filings.write(csv1, "S100BBBB", "E22222", "ベータ株式会社", 1000000000L, 100000000L)
+    val whDir = Files.createTempDirectory("wh-tx").toString
+    val wh = new Warehouse(spark, whDir)
+    assert(new Ingest(spark, wh).run(csv1).count() === 0)
+    def snapshot(): Map[String, Set[org.apache.spark.sql.Row]] =
+      tables.map(t => t -> wh.readSnapshot(t).collect().toSet).toMap
+    val first = snapshot()
+    // the snapshot holds exactly what the ingest wrote
+    tables.foreach(t => assert(first(t) === wh.read(t).collect().toSet, t))
+    assert(first("companies").size === 2)
+    assert(first("financial_reports").size === 2)
+    assert(first("financial_items").size === 2)
+    assert(first("financial_data").size === 4)
+    // a next-year filing for one company, killed after the other three
+    // tables committed and before the fact commit
+    val csv2 = Files.createTempDirectory("filings-tx2").toString
+    Filings.write(csv2, "S100CCCC", "E11111", "アルファ株式会社", 300000000L, 60000000L,
+      period = "第11期 第３四半期(自  2024年10月１日  至  2024年12月31日)",
+      periodEnd = "2024/12/31")
+    var killed = false
+    wh.commitTestHook = name => if (name == "financial_data") {
+      killed = true
+      throw new RuntimeException("simulated crash before the fact commit")
+    }
+    try intercept[RuntimeException](new Ingest(spark, wh).run(csv2))
+    finally wh.commitTestHook = _ => ()
+    assert(killed)
+    assert(wh.read("financial_reports").count() === 3, "the reports commit landed")
+    assert(snapshot() === first, "snapshot readers must keep the first ingest")
+    // the retry lands the whole second ingest
+    new Ingest(spark, wh).run(csv2)
+    val second = snapshot()
+    assert(second("financial_reports").size === 3)
+    assert(second("financial_data").size === 6)
+  }
+
   test("runForDate: API → quarterly filter → ZIP landing → distributed ingest (import-script parity)") {
     // realistic filings zipped the way EDINET serves them
     val src = Files.createTempDirectory("filings-src").toString

@@ -16,7 +16,7 @@ class JoinSkipSpec extends SparkSpec {
 
   private def mk(tag: String): Warehouse = {
     val tmp = java.nio.file.Files.createTempDirectory(tag).toString
-    new Warehouse(spark, tmp, manifest = true)
+    new Warehouse(spark, tmp)
   }
 
   /** 10k fact rows in 8 contiguous-range files on fk. */

@@ -13,7 +13,7 @@ class LayoutSpec extends SparkSpec {
 
   private def mk(tmpName: String): (Warehouse, String) = {
     val tmp = java.nio.file.Files.createTempDirectory(tmpName).toString
-    (new Warehouse(spark, tmp, manifest = true), tmp)
+    (new Warehouse(spark, tmp), tmp)
   }
 
   /** 10k rows clustered into 8 contiguous-range files on k (long),
@@ -666,7 +666,7 @@ class LayoutSpec extends SparkSpec {
   test("WAP promote racing a main-line publish aborts loudly and retries clean") {
     import spark.implicits._
     val (wh, tmp) = mk("graft-wap-race")
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whB = new Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 10).toDF("k"))
     wh.publishBranch("t", "audit", spark.range(100, 150).toDF("k"))
 
@@ -782,7 +782,7 @@ class LayoutSpec extends SparkSpec {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-chunked").toString
     // chunk every 8 entries: 64 range-clustered files → 8 chunks
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 8)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 8)
     wh.atomicPublish("t", spark.range(0, 10000).toDF("k")
       .withColumn("s", format_string("s%05d", $"k"))
       .repartitionByRange(64, $"k").sortWithinPartitions($"k"))
@@ -860,7 +860,7 @@ class LayoutSpec extends SparkSpec {
     }
     // and the same through a CHUNKED manifest's pstring stats
     val tmp = java.nio.file.Files.createTempDirectory("graft-plus-chunked").toString
-    val whc = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 1)
+    val whc = new Warehouse(spark, tmp, manifestChunkSize = 1)
     whc.upsert("t", df, Seq("k"), Seq("part"))
     for ((v, k) <- Seq(("a+b", 1L), ("x y", 2L), ("p%q", 3L))) {
       val got = whc.readEquals("t", "part", Seq(v)).select($"k").as[Long].collect()
@@ -887,7 +887,7 @@ class LayoutSpec extends SparkSpec {
     val (wh, _) = mk("graft-nasty")
     wh.upsert("t", df, Seq("k"), Seq("part"))
     val tmp = java.nio.file.Files.createTempDirectory("graft-nasty-chunked").toString
-    val whc = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 1)
+    val whc = new Warehouse(spark, tmp, manifestChunkSize = 1)
     whc.upsert("t", df, Seq("k"), Seq("part"))
     for ((v, i) <- nasty.zipWithIndex; w <- Seq(wh, whc)) {
       val got = w.readEquals("t", "part", Seq(v)).select($"k").as[Long].collect()
@@ -904,7 +904,7 @@ class LayoutSpec extends SparkSpec {
   test("chunked manifest: tableHealth answers from chunk-entry sizes — zero per-file stat RPCs") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-chunked-health").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 8)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 8)
     wh.atomicPublish("t", spark.range(0, 10000).toDF("k")
       .repartitionByRange(64, $"k"))
     val th = wh.tableHealth("t")
@@ -930,7 +930,7 @@ class LayoutSpec extends SparkSpec {
     // partition gets its own plong [9,9] chunk stat — the exact shape
     // where a caller-blind numeric compare would prune a
     // lexicographically-matching file (the r6 trap at chunk level)
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 1)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 1)
     val df = Seq((1L, "9"), (2L, "50"), (3L, "abc")).toDF("k", "part")
     wh.upsert("t", df, Seq("k"), Seq("part"))
     val got = wh.readSkipping("t", "part", Some("10"), Some("95"))
@@ -952,8 +952,8 @@ class LayoutSpec extends SparkSpec {
   test("chunked manifest: racing appends rebase clean — winner's chunks intact, orphans vacuumed") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-chunked-race").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
-    val whB = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
+    val whB = new Warehouse(spark, tmp, manifestChunkSize = 4)
     wh.atomicPublish("t", spark.range(0, 1000).toDF("k").repartition(16))
 
     // B commits inside A's append window (manifest written, CAS
@@ -982,7 +982,7 @@ class LayoutSpec extends SparkSpec {
   test("chunked manifest: hive partition values prune chunks for point lookups") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-chunked-part").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     // 32 partitions × 1 file, chunked by 4 → 8 chunks clustered by the
     // partition path; a single-date probe must open exactly one chunk
     val df = spark.range(0, 3200).toDF("id")
@@ -1008,7 +1008,7 @@ class LayoutSpec extends SparkSpec {
     val rnd = new scala.util.Random(7)
     // unpartitioned, range-clustered on long + string, 32 files / 8 chunks
     val tmp1 = java.nio.file.Files.createTempDirectory("graft-fuzz1").toString
-    val wh1 = new Warehouse(spark, tmp1, manifest = true, manifestChunkSize = 4)
+    val wh1 = new Warehouse(spark, tmp1, manifestChunkSize = 4)
     val base = spark.range(0, 10000).toDF("k")
       .withColumn("s", format_string("s%05d", $"k"))
       .repartitionByRange(32, $"k").sortWithinPartitions($"k")
@@ -1016,7 +1016,7 @@ class LayoutSpec extends SparkSpec {
     wh1.atomicPublish("t", base)
     // partitioned by a string date over 16 values, 1 file each / 16 chunks
     val tmp2 = java.nio.file.Files.createTempDirectory("graft-fuzz2").toString
-    val wh2 = new Warehouse(spark, tmp2, manifest = true, manifestChunkSize = 1)
+    val wh2 = new Warehouse(spark, tmp2, manifestChunkSize = 1)
     wh2.atomicPublish("t", spark.range(0, 3200).toDF("id")
       .withColumn("d", format_string("2024-%02d", $"id" % 16 + 1))
       .repartition($"d"), partitionCols = Seq("d"))
@@ -1109,7 +1109,7 @@ class LayoutSpec extends SparkSpec {
   test("incremental commits: append writes one new chunk, reads no untouched sidecar") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-incr-append").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     // 16 hive partitions, ~2 files each → ~32 files / ~8 chunks
     wh.atomicPublish("t",
       spark.range(0, 3200).toDF("id")
@@ -1160,7 +1160,7 @@ class LayoutSpec extends SparkSpec {
   test("incremental commits: partition-scoped upsert rewrites only the touched partition's chunks") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-incr-upsert").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     val base = spark.range(0, 3200).toDF("id")
       .withColumn("d", format_string("2024-%02d", $"id" % 16 + 1))
       .withColumn("v", $"id" * 10)
@@ -1197,7 +1197,7 @@ class LayoutSpec extends SparkSpec {
   test("incremental commits: rollback and promote write zero chunk files") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-incr-meta").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     wh.atomicPublish("t", spark.range(0, 1000).toDF("k").repartition(16))
     wh.append("t", spark.range(1000, 1100).toDF("k").repartition(4))
     // rollback to v1: the restored manifest REUSES v1's chunks by
@@ -1221,7 +1221,7 @@ class LayoutSpec extends SparkSpec {
   test("incremental commits: chunk-count drift triggers the amortized compaction") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-incr-compact").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     wh.atomicPublish("t", spark.range(0, 3200).toDF("k").repartition(32))
     val fs = new org.apache.hadoop.fs.Path(tmp)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -1256,7 +1256,7 @@ class LayoutSpec extends SparkSpec {
   test("chunked manifest: NDV answers header-only after buildNdv; appends void it loudly") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-incr-ndv").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     wh.atomicPublish("t", spark.range(0, 10000).toDF("k")
       .withColumn("g", $"k" % 500)
       .repartitionByRange(32, $"k").sortWithinPartitions($"k"))
@@ -1307,7 +1307,7 @@ class LayoutSpec extends SparkSpec {
     // FIRST; the per-file pass inside the survivors then touches <= 4
     // partitions — exactly the shape whose stats should come from
     // partition shards, never the whole version's sidecar
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     // partitioned version → writeVersion writes per-partition shards
     // k CLUSTERS with the partition (ids 0..199 → d=01, …), so footer
     // k-ranges are disjoint per partition and a narrow range is
@@ -1349,7 +1349,7 @@ class LayoutSpec extends SparkSpec {
     // time-travel reads are checked against the model's own history.
     val rnd = new scala.util.Random(1123)
     val tmp = java.nio.file.Files.createTempDirectory("graft-lifefuzz").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 3)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 3)
     def pOf(k: Long): String = s"p${k % 3}"
     def df(rows: Seq[(Long, Long)]) =
       rows.map { case (k, v) => (k, v, pOf(k)) }.toDF("k", "v", "p")
@@ -1604,7 +1604,7 @@ class LayoutSpec extends SparkSpec {
     // _CURRENT, the append LOSES its CAS and REBASES onto the
     // delete's snapshot, carrying its vector — never a silent loss.
     val (wh, tmp) = mk("graft-dv-race-carry")
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whB = new Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 100).toDF("k").repartition(4))
     assert(wh.deleteRows("t", $"k" < 10) === 10)
     var fired = false
@@ -1629,7 +1629,7 @@ class LayoutSpec extends SparkSpec {
     // and its rows in the touched partition were silently clobbered
     // by the stale merge.
     val (wh, tmp) = mk("graft-upsert-race")
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whB = new Warehouse(spark, tmp)
     def df(rows: Seq[(Long, Long)]) =
       rows.map { case (k, v) => (k, v, s"p${k % 2}") }.toDF("k", "v", "p")
     wh.atomicPublish("t", df((0L until 20L).map(k => k -> k)),
@@ -1663,7 +1663,7 @@ class LayoutSpec extends SparkSpec {
     // against the fresh snapshot applies cleanly (never a silent
     // loss).
     val (wh, tmp) = mk("graft-dv-race-del")
-    val whB = new Warehouse(spark, tmp, manifest = true)
+    val whB = new Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 100).toDF("k").repartition(4))
     var fired = false
     wh.dvTestHook = _ => if (!fired) {
@@ -1695,7 +1695,7 @@ class LayoutSpec extends SparkSpec {
   test("snapshot retention: retain_snapshots extends time travel and rollback to N versions, DV lineages included") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-retention").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     def df(r: Range) = r.map(k => (k.toLong, k.toLong * 10)).toDF("k", "v")
     wh.atomicPublish("t", df(0 until 100).repartition(4))   // v1
     wh.setSnapshotRetention("t", 4)
@@ -1731,7 +1731,7 @@ class LayoutSpec extends SparkSpec {
   test("time-based retention: retain_ms keeps the wall-clock window, in union with the count knob") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-retms").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     def df(r: Range) = r.map(k => (k.toLong, k.toLong * 10)).toDF("k", "v")
     wh.atomicPublish("t", df(0 until 100).repartition(4))   // v1
     // "time travel must work for an hour": with the count knob at its
@@ -1765,7 +1765,7 @@ class LayoutSpec extends SparkSpec {
   test("retention skips a crashed writer's orphan manifest: no slot stolen from committed history") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-orphslot").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     def df(r: Range) = r.map(k => (k.toLong, k.toLong * 10)).toDF("k", "v")
     wh.atomicPublish("t", df(0 until 100).repartition(4))   // v1
     wh.append("t", df(100 until 110))                        // v2 (committed)
@@ -1800,7 +1800,7 @@ class LayoutSpec extends SparkSpec {
   test("NDV maintenance bounds its driver staging: oversized commits lapse coverage, never undercount") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-ndvcap").toString
-    val wh = new Warehouse(spark, tmp, manifest = true, manifestChunkSize = 4)
+    val wh = new Warehouse(spark, tmp, manifestChunkSize = 4)
     def df(r: Range) = r.map(k => (k.toLong, k.toLong * 10)).toDF("k", "v")
     wh.atomicPublish("t", df(0 until 400).repartition(4))
     wh.buildNdv("t", "k")
@@ -1833,7 +1833,7 @@ class LayoutSpec extends SparkSpec {
     // a stale-base clobber, lost DV, or resurrected row anywhere in
     // the cross-process commit protocol shows up as a diff.
     val tmp = java.nio.file.Files.createTempDirectory("graft-mpfuzz").toString
-    val wh = new Warehouse(spark, tmp, manifest = true,
+    val wh = new Warehouse(spark, tmp,
       pointerStore = new graft.sources.GenFencedPointerStore,
       manifestChunkSize = 4)
     // bootstrap a partitioned chunked table (worker id 9's range —
@@ -2060,7 +2060,7 @@ class LayoutSpec extends SparkSpec {
     // mutable var let any caller silently widen the guard under other
     // readers) — a narrow-window instance over the same root pins the
     // refusal without composing a 256-commit history
-    val whNarrow = new Warehouse(spark, tmp, manifest = true,
+    val whNarrow = new Warehouse(spark, tmp,
       changesMaxWindow = 1L)
     val eWin = intercept[IllegalArgumentException] { whNarrow.changes("t", 0, 2) }
     assert(eWin.getMessage.contains("readChangesStream"))

@@ -111,7 +111,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming sink into the manifest warehouse is exactly-once in effect") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-wh").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     val ckpt = s"$tmp/ckpt"
     def runOnce(): Unit = {
       val q = EventStream.sinkToWarehouse(
@@ -134,7 +134,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-scope").toString
     val src = s"$tmp/src"
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     val all = spark.read.schema(EventStream.eventSchema).parquet(eventsDir)
       .withColumn("e_date", date_format($"ts", "yyyy-MM-dd"))
     val dates = all.select($"e_date").distinct().as[String].collect().sorted
@@ -190,7 +190,7 @@ class StreamingSpec extends SparkSpec {
   test("adaptive sink grain: dense head picks day, sparse wide stream picks month — sticky, scoped") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-grain").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     def events(n: Int, days: Int, idOffset: Long) =
       spark.range(0, n).select(
         ($"id" + idOffset).as("event_id"),
@@ -239,7 +239,7 @@ class StreamingSpec extends SparkSpec {
   test("re-grain: backfill-then-live table converges to day grain at maintenance, scoped merge preserved") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-regrain").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     def events(n: Int, day0: Int, days: Int, idOffset: Long) =
       spark.range(0, n).select(
         ($"id" + idOffset).as("event_id"),
@@ -292,7 +292,7 @@ class StreamingSpec extends SparkSpec {
   test("coarsen: live-then-backfill table converges to month grain, with hysteresis") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-coarsen").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     def events(n: Int, day0: Int, days: Int, idOffset: Long) =
       spark.range(0, n).select(
         ($"id" + idOffset).as("event_id"),
@@ -345,7 +345,7 @@ class StreamingSpec extends SparkSpec {
   test("crash repair reads the manifest layout, both directions, null-partition tolerant") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-repair").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     def ev(n: Int, idOffset: Long) =
       spark.range(0, n).select(
         ($"id" + idOffset).as("event_id"),
@@ -376,7 +376,7 @@ class StreamingSpec extends SparkSpec {
   test("null time column: the sink neither wedges nor loses null-partition rows") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-nullts").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     def ev(ids: Seq[Long], nullIds: Set[Long]) =
       ids.map(i => (i, if (nullIds(i)) None else Some(
           new java.sql.Timestamp(1709251200000L + i * 3600000L)), 1.0))
@@ -415,8 +415,8 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-race").toString
     val src = s"$tmp/src"
     val ckpt = s"$tmp/ckpt"
-    val whSink = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
-    val whMaint = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val whSink = new graft.sources.Warehouse(spark, s"$tmp/wh")
+    val whMaint = new graft.sources.Warehouse(spark, s"$tmp/wh")
     val all = spark.read.schema(EventStream.eventSchema).parquet(eventsDir)
     // commitRetries = 0: prove the LOUD-loss path (the default bounded
     // retry would absorb the race — covered by the next test)
@@ -458,8 +458,8 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-retry").toString
     val src = s"$tmp/src"
-    val whSink = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
-    val whMaint = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val whSink = new graft.sources.Warehouse(spark, s"$tmp/wh")
+    val whMaint = new graft.sources.Warehouse(spark, s"$tmp/wh")
     val all = spark.read.schema(EventStream.eventSchema).parquet(eventsDir)
     all.filter($"event_id" % 2 === 0).write.mode("overwrite").parquet(src)
     EventStream.sinkToWarehouse(EventStream.read(spark, src), whSink, "events",
@@ -522,7 +522,7 @@ class StreamingSpec extends SparkSpec {
     val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select($"doc_id", $"text")
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-dedup").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     val corpus = d.filter($"doc_id" < 400)
     wh.atomicPublish("corpus", corpus)
     wh.atomicPublish("lsh_index", Dedup.buildLshIndex(corpus))
@@ -581,7 +581,7 @@ class StreamingSpec extends SparkSpec {
     val d = Tables.load(spark, "/root/testdata/sf0.001", "documents")
       .select($"doc_id", $"text")
     val tmp = java.nio.file.Files.createTempDirectory("graft-sdedup-fuzz").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     val seed = d.filter($"doc_id" < 300)
     wh.atomicPublish("corpus", seed)
     wh.atomicPublish("lsh_index", Dedup.buildLshIndex(seed))
@@ -654,7 +654,7 @@ class StreamingSpec extends SparkSpec {
       seed.filter($"vec_id" % 50 === 0)
         .select($"vec_id".as("c_id"), $"embedding".as("c_emb"), $"nrm".as("c_nrm")), 2)
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-ivf").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     wh.atomicPublish("centroids", cents)
     wh.atomicPublish("vectors", seed.drop("nrm"))
     wh.atomicPublish("postings", IvfCodebook.assign(seed, cents))
@@ -701,7 +701,7 @@ class StreamingSpec extends SparkSpec {
       seed.filter($"vec_id" % 50 === 0)
         .select($"vec_id".as("c_id"), $"embedding".as("c_emb"), $"nrm".as("c_nrm")), 2)
     val tmp = java.nio.file.Files.createTempDirectory("graft-stream-cdc").toString
-    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh", manifest = true)
+    val wh = new graft.sources.Warehouse(spark, s"$tmp/wh")
     wh.atomicPublish("centroids", cents)
     wh.atomicPublish("vectors", seed.drop("nrm"))
     wh.atomicPublish("postings", IvfCodebook.assign(seed, cents))
@@ -748,7 +748,7 @@ class StreamingSpec extends SparkSpec {
   test("change-feed source: live stream serves commits as they land; restart resumes from checkpoint") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-live").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 20).toDF("k"))                // v1
     wh.setSnapshotRetention("t", 10)
     val chk = java.nio.file.Files.createTempDirectory("graft-cdc-chk").toString
@@ -806,7 +806,7 @@ class StreamingSpec extends SparkSpec {
   test("change-feed source: batch-0 replay after a crash is deterministic (initial offset persisted)") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-replay").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 5).toDF("k"))                 // v1
     wh.setSnapshotRetention("t", 10)
     val meta = java.nio.file.Files.createTempDirectory("graft-cdc-meta").toString
@@ -838,7 +838,7 @@ class StreamingSpec extends SparkSpec {
   test("change-feed source: a table rebuilt under the same checkpoint serves a batch ending at an old committed offset") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-rebuild").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     val chk = java.nio.file.Files.createTempDirectory("graft-cdc-rbchk").toString
     val got = scala.collection.mutable.ArrayBuffer[(Long, String, Long)]()
     def run(body: => Unit): Unit = {
@@ -878,7 +878,7 @@ class StreamingSpec extends SparkSpec {
   test("change-feed source: an explicit startingVersion beyond current+1 is rejected") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-future").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 5).toDF("k"))                 // v1
     val meta = java.nio.file.Files.createTempDirectory("graft-cdc-fmeta").toString
     val e = intercept[IllegalArgumentException] {
@@ -894,7 +894,7 @@ class StreamingSpec extends SparkSpec {
   test("change-feed source: a checkpointed stream crosses a schema-evolution commit") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-evo").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 5).toDF("k"))                 // v1
     wh.setSnapshotRetention("t", 10)
     val chk = java.nio.file.Files.createTempDirectory("graft-cdc-evochk").toString
@@ -941,7 +941,7 @@ class StreamingSpec extends SparkSpec {
   test("change-feed source: a reap inside the pending window refuses loudly; a fresh start recovers") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-cdc-reap").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     wh.atomicPublish("t", spark.range(0, 5).toDF("k"))                 // v1
     wh.setSnapshotRetention("t", 2)
     val meta = java.nio.file.Files.createTempDirectory("graft-cdc-rmeta").toString
@@ -983,7 +983,7 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-sink-a").toString
     val src = java.nio.file.Files.createTempDirectory("graft-sink-asrc").toString
     val chk = java.nio.file.Files.createTempDirectory("graft-sink-achk").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     spark.range(0, 50).toDF("k").coalesce(1).write.mode("append").parquet(src)
     def drain(): Unit = {
       val q = spark.readStream.schema("k BIGINT").parquet(src)
@@ -1009,7 +1009,7 @@ class StreamingSpec extends SparkSpec {
   test("graft-table sink: a replayed epoch is skipped (header txn label), marker crash heals") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-sink-r").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     val sink = new graft.streaming.GraftTableSink(spark.sqlContext,
       Map("root" -> tmp, "table" -> "t", "txnAppId" -> "app-1"), Nil,
       org.apache.spark.sql.streaming.OutputMode.Append())
@@ -1037,7 +1037,7 @@ class StreamingSpec extends SparkSpec {
   test("graft-table sink: upsert mode merges each micro-batch by key, exactly-once") {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-sink-u").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     val sink = new graft.streaming.GraftTableSink(spark.sqlContext,
       Map("root" -> tmp, "table" -> "t", "txnAppId" -> "cdc",
         "mode" -> "upsert", "keys" -> "k"), Nil,
@@ -1054,7 +1054,7 @@ class StreamingSpec extends SparkSpec {
     val tmp = java.nio.file.Files.createTempDirectory("graft-sink-c").toString
     val src = java.nio.file.Files.createTempDirectory("graft-sink-csrc").toString
     val chk = java.nio.file.Files.createTempDirectory("graft-sink-cchk").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     spark.range(0, 40).select(($"id" % 4).as("g"))
       .coalesce(1).write.mode("append").parquet(src)
     def drain(): Unit = {
@@ -1081,7 +1081,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft-sink-cdc").toString
     val chk = java.nio.file.Files.createTempDirectory("graft-sink-cdchk").toString
-    val wh = new graft.sources.Warehouse(spark, tmp, manifest = true)
+    val wh = new graft.sources.Warehouse(spark, tmp)
     wh.atomicPublish("a",
       spark.range(0, 100).toDF("k").withColumn("v", $"k" * 2))       // v1
     wh.setSnapshotRetention("a", 16)

@@ -61,7 +61,7 @@ object WhFuzzCli {
       val role = if (args.length > 4) args(4) else "mutator"
       val spark = GraftSession(2)
       import spark.implicits._
-      val wh = new graft.sources.Warehouse(spark, dir, manifest = true,
+      val wh = new graft.sources.Warehouse(spark, dir,
         pointerStore = new graft.sources.GenFencedPointerStore,
         manifestChunkSize = 4)
       val base = id.toLong * 100000L

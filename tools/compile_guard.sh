@@ -6,11 +6,13 @@
 #
 # Run this before ANY end-of-round / milestone commit:
 #   tools/compile_guard.sh && git commit ...
-# Exit 0 = no stray session builder or thread pool in main code and
-# `sbt compile` (main + test sources) is green; nonzero otherwise, with
-# the offending lines or the tail of the compiler output on stderr. ~2 min
-# warm — there is no excuse to skip it even when the full ~25-min gate
-# battery doesn't fit before a snapshot.
+# Exit 0 = no stray session builder or thread pool in main code,
+# `sbt compile` (main + test sources) is green and the benchmark harness
+# (perfbench/build.py: src/main compiled together with perfbench/src)
+# builds; nonzero otherwise, with the offending lines or the tail of the
+# compiler output on stderr. ~2 min warm, plus about a minute when the
+# harness must rebuild — there is no excuse to skip it even when the
+# full ~25-min gate battery doesn't fit before a snapshot.
 set -u
 cd "$(dirname "$0")/.."
 # Main-code lines matching the ERE $1, comment lines (a doc example)
@@ -42,13 +44,21 @@ if [ -n "$pools" ]; then
   exit 1
 fi
 log=$(mktemp /tmp/compile_guard.XXXXXX.log)
-if sbt -batch "compile; Test/compile" >"$log" 2>&1; then
-  echo "compile_guard: GREEN (main + test compile)"
-  rm -f "$log"
-  exit 0
-else
+if ! sbt -batch "compile; Test/compile" >"$log" 2>&1; then
   echo "compile_guard: RED — do NOT commit a snapshot on this tree" >&2
   tail -30 "$log" >&2
   echo "full log: $log" >&2
   exit 1
 fi
+# The benchmark compiles main code against its own sources: a main-API
+# change the harness no longer compiles against fails here, not as a
+# failed benchmark run.
+if ! python3 perfbench/build.py >"$log" 2>&1; then
+  echo "compile_guard: RED — the benchmark harness (perfbench/) does not build against this tree" >&2
+  tail -30 "$log" >&2
+  echo "full log: $log" >&2
+  exit 1
+fi
+echo "compile_guard: GREEN (main + test compile, benchmark build)"
+rm -f "$log"
+exit 0
