@@ -15,7 +15,9 @@ import org.apache.spark.sql.SparkSession
   *    no usable footer stats; micros makes timestamp columns
   *    skippable and meta-aggregatable like dates.
   *  - `graft.GraftExtensions`: native functions, TVFs, MetaAgg,
-  *    AutoSkip and JoinSkip.
+  *    AutoSkip and JoinSkip. Loading it also sizes Spark's
+  *    generated-code cache (see the `GraftExtensions` class doc), so
+  *    this factory sets no codegen cache conf of its own.
   *  - `spark.sql.codegen.fallback=false`: an expression whose generated
   *    code fails to compile is a hard error, not a silent fall-back to
   *    interpreted evaluation (a hidden 10x slowdown).

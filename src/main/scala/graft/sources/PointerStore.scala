@@ -114,9 +114,8 @@ final class FsPointerStore(acquireTimeoutMs: Long = 30000L,
         // flip via tmp + ATOMIC OVERWRITE rename: the pointer is never
         // half-written AND never momentarily absent. A delete+rename
         // pair would open a window where a concurrent reader finds no
-        // pointer and falls back to the highest-numbered manifest —
-        // which can be a racing LOSER'S not-yet-aborted manifest, a
-        // dirty read of never-committed data. posix rename(2) (local)
+        // pointer and reads the table as if nothing had ever been
+        // committed. posix rename(2) (local)
         // and FileContext overwrite-rename (HDFS) replace the
         // destination atomically, so readers always see old-or-new.
         val tmp = new Path(root, s".$ptrName.tmp.$next")
@@ -157,9 +156,8 @@ final class FsPointerStore(acquireTimeoutMs: Long = 30000L,
                  _: org.apache.hadoop.fs.UnsupportedFileSystemException =>
               fs.delete(ptr, false)
               // a false return here after the delete succeeded means the
-              // pointer is GONE (readers fall back to highest manifest —
-              // which may be a racing loser's orphan): surface it as a
-              // failed commit, never a silent true
+              // pointer is GONE (readers see no committed snapshot):
+              // surface it as a failed commit, never a silent true
               if (!fs.rename(tmp, ptr))
                 throw new java.io.IOException(
                   s"pointer flip failed on $ptr: rename returned false " +

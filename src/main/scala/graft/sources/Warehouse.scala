@@ -103,8 +103,8 @@ class Warehouse(spark: SparkSession, dir: String,
     abs(xxhash64(naturalKey))
 
   /** Catalog surface (GraftCatalog): a table exists when its directory
-    * resolves a current manifest — pointer first, else highest
-    * committed manifest (the same resolution every read uses).
+    * resolves a current manifest through its `_CURRENT` pointer (the
+    * same resolution every read uses).
     */
   def tableExists(name: String): Boolean = {
     val root = new Path(tablePath(name))
@@ -1750,9 +1750,17 @@ class Warehouse(spark: SparkSession, dir: String,
     base.where(col(column).isin(values: _*))
   }
 
+  /** A table exists once a commit has landed on it: its `_CURRENT`
+    * pointer names a manifest, or (a table written before manifests
+    * existed) its directory holds data files. What a killed first
+    * commit leaves (a manifest and a version dir, no pointer) is not a
+    * table: the next write creates it afresh under a higher version.
+    */
   def exists(name: String): Boolean = {
-    val p = new Path(tablePath(name))
-    fileSystem(p).exists(p)
+    val root = new Path(tablePath(name))
+    val fs = fileSystem(root)
+    fs.exists(root) &&
+      (currentManifest(fs, root).isDefined || listDataFiles(fs, root, root).nonEmpty)
   }
 
   // ------------------------------------------------------------------
@@ -1777,13 +1785,15 @@ class Warehouse(spark: SparkSession, dir: String,
   private val InflightGraceMs: Long = 15L * 60 * 1000
 
   /** Data files (relative to the table root) of the current snapshot.
-    * Resolution: `_CURRENT` pointer → manifest file; if the pointer is
-    * momentarily absent (the local-FS flip is delete+rename; on S3 the
-    * pointer PUT is atomic and this window doesn't exist) fall back to
-    * the highest-numbered manifest. A table written before manifest
-    * mode was enabled (no manifest at all) snapshots its legacy layout
-    * in place — file paths are arbitrary relative paths, so a legacy
-    * `fy=2023/part-x` is as valid a manifest entry as `_v3/fy=2023/y`.
+    * Resolution: `_CURRENT` pointer → manifest file. The pointer store
+    * flips the pointer with an atomic overwrite (`FsPointerStore` names
+    * the stores where it cannot), so it is never absent once a first
+    * commit has landed; a manifest the pointer does not name is an
+    * uncommitted (crashed or aborted) write and is never read. A table
+    * with no pointer (written before manifests existed) snapshots its
+    * legacy layout in place — file paths are arbitrary relative paths,
+    * so a legacy `fy=2023/part-x` is as valid a manifest entry as
+    * `_v3/fy=2023/y`.
     */
   private def snapshotFiles(name: String): Seq[String] = resolveSnapshot(name)._2
 
@@ -1815,17 +1825,7 @@ class Warehouse(spark: SparkSession, dir: String,
   }
 
   private def currentManifest(fs: FileSystem, root: Path): Option[String] =
-    readPointer(fs, root).orElse(highestManifest(fs, root, exclude = None))
-
-  private def readPointer(fs: FileSystem, root: Path): Option[String] =
     pointerStore.read(fs, root, CurrentPtr)
-
-  private def highestManifest(fs: FileSystem, root: Path,
-      exclude: Option[String]): Option[String] =
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).map(_.getPath.getName).collect {
-      case n @ ManifestRe(v) if !exclude.contains(n) => (v.toLong, n)
-    }.sortBy(_._1).lastOption.map(_._2)
 
   /** Recursive data-file listing, paths relative to `root`; skips
     * metadata (dot/underscore-prefixed names — which also skips the
@@ -2638,11 +2638,9 @@ class Warehouse(spark: SparkSession, dir: String,
     val carriedFrom: Option[String] =
       dvBase.flatMap(b => pointerStore.read(fs, root, dvPtrName(b)))
     var stagedDv: Option[String] = None
-    // what a reader would resolve now, ignoring our own not-yet-current
-    // manifest (it may already be the highest-numbered) — shared by the
-    // optimistic pre-check here and the store's in-lock re-check
-    def observe(): Option[String] = readPointer(fs, root)
-      .orElse(highestManifest(fs, root, exclude = Some(mf.getName)))
+    // what a reader would resolve now — shared by the optimistic
+    // pre-check here and the store's in-lock re-check
+    def observe(): Option[String] = currentManifest(fs, root)
     def abort(observed: Option[String]): Nothing = {
       fs.delete(mf, false)
       deleteChunks(fs, root, built.ownChunks)
@@ -2869,10 +2867,8 @@ class Warehouse(spark: SparkSession, dir: String,
     require(tables.nonEmpty, "commitDbSnapshot needs at least one table")
     val root = new Path(dir)
     val fs = fileSystem(root)
-    def observe(exclude: Option[String]): Option[String] =
-      pointerStore.read(fs, root, CurrentPtr)
-        .orElse(highestDbManifest(fs, root, exclude))
-    val expected = observe(None)
+    def observe(): Option[String] = pointerStore.read(fs, root, CurrentPtr)
+    val expected = observe()
     val mapping = tables.map { t =>
       val troot = new Path(tablePath(t))
       val m = currentManifest(fileSystem(troot), troot).getOrElse(
@@ -2888,7 +2884,7 @@ class Warehouse(spark: SparkSession, dir: String,
     finally out.close()
     dbCommitTestHook()
     if (!pointerStore.compareAndSet(fs, root, CurrentPtr, expected,
-        mf.getName, () => observe(exclude = Some(mf.getName)))) {
+        mf.getName, () => observe())) {
       fs.delete(mf, false)
       throw new java.util.ConcurrentModificationException(
         s"concurrent DB snapshot commit on $dir: expected " +
@@ -2908,13 +2904,6 @@ class Warehouse(spark: SparkSession, dir: String,
     n
   }
 
-  private def highestDbManifest(fs: FileSystem, root: Path,
-      exclude: Option[String]): Option[String] =
-    if (!fs.exists(root)) None
-    else fs.listStatus(root).map(_.getPath.getName).collect {
-      case n @ DbManifestRe(v) if !exclude.contains(n) => (v.toLong, n)
-    }.sortBy(_._1).lastOption.map(_._2)
-
   private def nextDbVersion(fs: FileSystem, root: Path): Long =
     if (!fs.exists(root)) 1L
     else {
@@ -2931,7 +2920,6 @@ class Warehouse(spark: SparkSession, dir: String,
     val root = new Path(dir)
     val fs = fileSystem(root)
     pointerStore.read(fs, root, CurrentPtr)
-      .orElse(highestDbManifest(fs, root, None))
       .filter(m => fs.exists(new Path(root, m)))
       .map { m =>
         readManifest(fs, new Path(root, m)).map { line =>
@@ -4730,9 +4718,7 @@ class Warehouse(spark: SparkSession, dir: String,
     * belt-and-braces shield for the write window itself). The branch
     * pointer is last-write-wins: one owner per branch name is the
     * contract (an audit gate is single-writer by construction).
-    * Branching requires an existing current snapshot — on a
-    * pointerless table the highest-manifest fallback would otherwise
-    * leak the staged manifest to readers.
+    * Branching requires an existing current snapshot to fork from.
     */
   def publishBranch(name: String, branch: String, df: DataFrame,
       partitionCols: Seq[String] = Nil): Unit = {

@@ -679,9 +679,8 @@ class EtlSpec extends SparkSpec {
 
   test("pointer store: a reader never observes a missing pointer mid-flip") {
     // the flip must be atomic-overwrite, not delete+rename: a reader
-    // finding NO pointer falls back to highestManifest, which during a
-    // commit race can be a loser's not-yet-aborted manifest — a dirty
-    // read. Hammer flips on one thread, reads on another: with the old
+    // finding NO pointer reads the table as never committed. Hammer
+    // flips on one thread, reads on another: with the old
     // delete+rename this trips within a few hundred iterations on a
     // local FS; with posix-rename overwrite it never can.
     val tmp = java.nio.file.Files.createTempDirectory("graft-ptrflip").toString
@@ -1176,6 +1175,26 @@ class EtlSpec extends SparkSpec {
     val dbMfs = new java.io.File(tmp).listFiles()
       .map(_.getName).filter(_.matches("_db_manifest_v\\d+")).toSet
     assert(dbMfs.size <= 2, s"stale db manifests not GC'd: $dbMfs")
+  }
+
+  test("warehouse: a killed first DB snapshot commit leaves no DB snapshot") {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("graft-uowfirst").toString
+    val wh = new Warehouse(spark, tmp)
+    wh.atomicPublish("t", Seq((1L, "a")).toDF("k", "v"))
+    wh.dbCommitTestHook = () => throw new RuntimeException("simulated crash before the DB flip")
+    try intercept[RuntimeException](wh.commitDbSnapshot(Seq("t")))
+    finally wh.dbCommitTestHook = () => ()
+    val orphan = new java.io.File(tmp, "_db_manifest_v1")
+    assert(orphan.exists, "the killed commit wrote its db-manifest")
+    assert(wh.dbSnapshot() === Map.empty[String, String])
+    // with no DB snapshot, readSnapshot is the per-table current read
+    wh.append("t", Seq((2L, "b")).toDF("k", "v"))
+    assert(wh.readSnapshot("t").count() === 2)
+    // the retry commits under a fresh number; its GC reaps the orphan
+    assert(wh.commitDbSnapshot(Seq("t")) === 2L)
+    assert(wh.dbSnapshot().keySet === Set("t"))
+    assert(!orphan.exists)
   }
 
   // ---- generation-fenced file pointer store --------------------------

@@ -75,6 +75,38 @@ class IngestE2eSpec extends SparkSpec {
     assert(second("financial_data").size === 6)
   }
 
+  test("a first ingest killed before its fact commit leaves no fact table; the retry lands") {
+    val csv = Files.createTempDirectory("filings-first").toString
+    Filings.write(csv, "S100AAAA", "E11111", "アルファ株式会社", 200000000L, 50000000L)
+    val whDir = Files.createTempDirectory("wh-first").toString
+    val wh = new Warehouse(spark, whDir)
+    wh.commitTestHook = name => if (name == "financial_data")
+      throw new RuntimeException("simulated crash before the first fact commit")
+    try intercept[RuntimeException](new Ingest(spark, wh).run(csv))
+    finally wh.commitTestHook = _ => ()
+    // the killed commit wrote its manifest and version dir, not the pointer
+    val fact = new java.io.File(whDir, "financial_data")
+    def listing() = fact.list().toSet
+    assert(listing().contains("_manifest_v1") && !listing().contains("_CURRENT"), listing())
+    assert(!wh.exists("financial_data") && !wh.tableExists("financial_data"))
+    intercept[IllegalArgumentException](wh.read("financial_data"))
+    assert(wh.dbSnapshot().isEmpty)
+    // an orphan is not damage; once the crashed writer's in-flight
+    // marker has aged past its grace, vacuum reaps it
+    assert(wh.fsck("financial_data").isEmpty)
+    val aged = System.currentTimeMillis() - 30L * 60 * 1000
+    fact.listFiles().filter(_.getName.startsWith("_inflight_v"))
+      .foreach(f => assert(f.setLastModified(aged)))
+    val reaped = wh.vacuumOrphans("financial_data").toSet
+    assert(Set("_v1", "_manifest_v1").subsetOf(reaped), reaped)
+    assert(!listing().exists(_.startsWith("_manifest_v")), listing())
+    // the retry lands the whole ingest
+    assert(new Ingest(spark, wh).run(csv).count() === 0)
+    assert(wh.read("financial_data").count() === 2)
+    assert(wh.readSnapshot("financial_data").count() === 2)
+    assert(wh.readSnapshot("financial_reports").count() === 1)
+  }
+
   test("runForDate: API → quarterly filter → ZIP landing → distributed ingest (import-script parity)") {
     // realistic filings zipped the way EDINET serves them
     val src = Files.createTempDirectory("filings-src").toString

@@ -627,8 +627,8 @@ class LayoutSpec extends SparkSpec {
       .map(_.getPath.getName).count(_.startsWith("_manifest"))
     assert(mfAfter === mf - 1, "abandon must remove the staged manifest")
 
-    // branching a pointerless table refuses (highest-manifest fallback
-    // would leak the staged snapshot to readers)
+    // branching a pointerless table refuses: a branch forks from a
+    // current snapshot
     val ex = intercept[IllegalArgumentException] {
       wh.publishBranch("fresh", "b", spark.range(0, 3).toDF("k"))
     }
