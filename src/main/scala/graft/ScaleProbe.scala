@@ -63,6 +63,20 @@ object ScaleProbe {
       .write.mode("overwrite").parquet(s"$outDir/lineitem.parquet")
   }
 
+  /** Sidecars for fabricated version-relative files `rel`: column `k`
+    * gets contiguous 100-key ranges per file (the clustered layout a
+    * narrow probe prunes to one file of), every file 100 rows and no
+    * nulls.
+    */
+  private def fabricatedSidecars(fs: org.apache.hadoop.fs.FileSystem,
+      vdir: org.apache.hadoop.fs.Path, rel: Seq[String]): Unit =
+    graft.sources.FileStats.writeSidecars(fs, vdir,
+      rel.zipWithIndex.map { case (r, i) =>
+        r -> Map("k" -> graft.sources.FileStats.ColStat("long",
+          (i * 100L).toString, (i * 100L + 99).toString))
+      }.toMap,
+      rel.map(r => r -> graft.sources.FileStats.RowStat(100L, Map("k" -> 0L))).toMap)
+
   /** Commit-path scaling sweep (`runMain graft.ScaleProbe commit
     * <workDir> <n1,n2,...>`): fabricate a chunked snapshot of N empty
     * data files (+ real `_stats`/`_rows` sidecars, so the commit pays
@@ -92,32 +106,14 @@ object ScaleProbe {
       val nParts = math.max(4, nf / 16) // ~16 files per hive partition
       def fabricate(vdir: String, names: Seq[(String, String)]): Seq[String] = {
         // names = (partition value, file name); empty data files via
-        // java.io (local probe), one _stats + _rows sidecar per vdir
+        // java.io (local probe), sidecars written as writeVersion
+        // writes them (the upsert leg measures the shard-read path)
         names.map(_._1).distinct.foreach { p =>
           new java.io.File(s"$dir/t/$vdir/pt=$p").mkdirs()
         }
         val rel = names.map { case (p, f) => s"pt=$p/$f" }
         rel.foreach(r => new java.io.File(s"$dir/t/$vdir/$r").createNewFile())
-        val vroot = new org.apache.hadoop.fs.Path(s"$dir/t/$vdir")
-        graft.sources.FileStats.write(fs,
-          new org.apache.hadoop.fs.Path(vroot, "_stats"),
-          rel.zipWithIndex.map { case (r, i) =>
-            r -> Map("k" -> graft.sources.FileStats.ColStat("long",
-              (i * 100L).toString, (i * 100L + 99).toString))
-          }.toMap)
-        graft.sources.FileStats.writeRows(fs,
-          new org.apache.hadoop.fs.Path(vroot, "_rows"),
-          rel.map(r => r -> graft.sources.FileStats.RowStat(100L,
-            Map("k" -> 0L))).toMap)
-        // per-partition shards, like writeVersion writes them — the
-        // upsert leg of the sweep measures the shard-read path
-        graft.sources.FileStats.writeSharded(fs, vroot,
-          rel.zipWithIndex.map { case (r, i) =>
-            r -> Map("k" -> graft.sources.FileStats.ColStat("long",
-              (i * 100L).toString, (i * 100L + 99).toString))
-          }.toMap,
-          rel.map(r => r -> graft.sources.FileStats.RowStat(100L,
-            Map("k" -> 0L))).toMap)
+        fabricatedSidecars(fs, new org.apache.hadoop.fs.Path(s"$dir/t/$vdir"), rel)
         rel.map(r => s"$vdir/$r")
       }
       def time[T](body: => T): Double = {
@@ -212,20 +208,7 @@ object ScaleProbe {
         new java.io.File(s"$dir/t/_v1/$p").mkdirs()
       }
       rel.foreach(r => new java.io.File(s"$dir/t/_v1/$r").createNewFile())
-      val vroot = new org.apache.hadoop.fs.Path(s"$dir/t/_v1")
-      // contiguous 100-key ranges per file — the clustered layout a
-      // narrow probe prunes to one file of
-      val statsMap = rel.zipWithIndex.map { case (r, i) =>
-        r -> Map("k" -> graft.sources.FileStats.ColStat("long",
-          (i * 100L).toString, (i * 100L + 99).toString))
-      }.toMap
-      val rowsMap = rel.map(r => r -> graft.sources.FileStats.RowStat(100L,
-        Map("k" -> 0L))).toMap
-      graft.sources.FileStats.write(fs,
-        new org.apache.hadoop.fs.Path(vroot, "_stats"), statsMap)
-      graft.sources.FileStats.writeRows(fs,
-        new org.apache.hadoop.fs.Path(vroot, "_rows"), rowsMap)
-      graft.sources.FileStats.writeSharded(fs, vroot, statsMap, rowsMap)
+      fabricatedSidecars(fs, new org.apache.hadoop.fs.Path(s"$dir/t/_v1"), rel)
       val files = rel.map(r => s"_v1/$r")
       wh.commitFabricated("t", files)
       def time[T](body: => T): Double = {

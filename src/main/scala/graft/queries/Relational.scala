@@ -2767,7 +2767,7 @@ object Relational {
         wh.deleteRows("ord_dv", $"o_orderkey" % 10 === 0)
         wh.deleteRows("ord_dv", $"o_orderstatus" === "P")
         val untouched = fileList == filesBefore
-        wh.readMor("ord_dv")
+        wh.read("ord_dv")
           .agg(count(lit(1)).as("n"), dsum($"o_totalprice").as("revenue"))
           .select($"n", $"revenue", lit(untouched).as("untouched"))
       },

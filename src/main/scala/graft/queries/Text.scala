@@ -1994,9 +1994,7 @@ object Text {
     */
   private def docToks(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
-    // spread before tokenize+explode: the index build's per-row cost
-    // must not run at a small scan's 1-3-task parallelism
-    Tables.spread(Tables.load(s, dir, "documents"))
+    Tables.load(s, dir, "documents")
       .select(col("doc_id"), TextOps.tokens(col("text")).as("toks"))
 
   /** The 4 BM25 index tables (postings, dict, doc lengths, corpus

@@ -15,10 +15,32 @@ import scala.jdk.CollectionConverters._
   * here from the parquet FOOTERS the write already produced (no second
   * pass over the data; row-group stats are aggregated per file).
   *
-  * Stored as a `_stats` sidecar inside each `_vN` version dir, so GC of
-  * a version dir collects its stats with it and the manifest wire
-  * format is untouched (old snapshots without sidecars simply never
-  * prune — absence of stats always means "may contain").
+  * This object owns the sidecar layout; no other code names a sidecar
+  * file. Each `_vN` version dir carries, written before its manifest
+  * commit (so a snapshot is never current with its stats missing):
+  *
+  *  - `_stats`: per-file column min/max (`ColStat`);
+  *  - `_rows`: per-file row count and per-column null counts
+  *    (`RowStat`), the metadata-only count(*) / IS NULL surface;
+  *  - `_stats_p/<seg>` and `_rows_p/<seg>`: per-partition shards of
+  *    the same records, keyed by the file's first path segment (root
+  *    files shard under "-"), written only when a version spans more
+  *    than one segment. Hive segments are already path-escaped (%XX),
+  *    so a segment is a safe file name.
+  *
+  * GC of a version dir collects its sidecars with it, and the manifest
+  * wire format is untouched. Absence always means "unknown": a legacy
+  * root file (no version dir), a version without sidecars or a file
+  * missing from one is kept by every prune and never counts as zero.
+  *
+  * Shard rule (`Sidecars`, the one reader): a request reads a sharded
+  * version's shards for the segments it touches when it touches at
+  * most 4 of them, or when the version's whole file is larger than
+  * 256 KiB (a few thousand files' records); otherwise it reads the
+  * whole file once. A narrow pruned read, or a commit rewriting the
+  * manifest chunks a partition-scoped upsert touches, so never parses
+  * a big version whole, while a wide request over a small version
+  * takes one read instead of a round trip per partition.
   *
   * Scale: footer reads are distributed across executors when the
   * version has many files (the 100 TB case: thousands of files → one
@@ -301,11 +323,112 @@ object FileStats {
     }
   }
 
+  private val StatsFile = "_stats"
+  private val RowsFile = "_rows"
+  private val StatsShards = "_stats_p"
+  private val RowsShards = "_rows_p"
+  private val MaxShardSegs = 4
+  private val MaxWholeBytes = 256L * 1024
+
+  /** The version dir holding a table-relative data file (`_v3` for
+    * `_v3/d=1/part-0.parquet`), or "" for a legacy root file, which has
+    * no sidecars.
+    */
+  def versionOf(file: String): String = {
+    var i = 2
+    while (i < file.length && file.charAt(i) >= '0' && file.charAt(i) <= '9') i += 1
+    if (i > 2 && i < file.length && file.charAt(i) == '/' && file.startsWith("_v"))
+      file.substring(0, i)
+    else ""
+  }
+
+  /** Write a fresh version dir's sidecars: the whole-version files and,
+    * for a version spanning more than one partition segment, the
+    * shards. `stats`/`rows` are keyed by version-relative path.
+    */
+  def writeSidecars(fs: FileSystem, vdir: Path,
+      stats: Map[String, Map[String, ColStat]],
+      rows: Map[String, RowStat]): Unit = {
+    write(fs, new Path(vdir, StatsFile), stats)
+    writeRows(fs, new Path(vdir, RowsFile), rows)
+    val keys = (stats.keySet ++ rows.keySet).groupBy(shardKey)
+    if (keys.size > 1) keys.foreach { case (seg, files) =>
+      write(fs, new Path(new Path(vdir, StatsShards), seg),
+        files.flatMap(f => stats.get(f).map(f -> _)).toMap)
+      writeRows(fs, new Path(new Path(vdir, RowsShards), seg),
+        files.flatMap(f => rows.get(f).map(f -> _)).toMap)
+    }
+  }
+
+  /** The existence probe `fsck` runs: does version dir `vdir` carry
+    * its stats sidecar?
+    */
+  def hasSidecars(fs: FileSystem, vdir: Path): Boolean =
+    fs.exists(new Path(vdir, StatsFile))
+
+  /** Memoizing reader of one table root's sidecars, the only read path
+    * for them. Each call takes table-relative data files and answers
+    * per file; a file with no record (legacy, pre-sidecar, missing
+    * shard) is absent from the answer — unknown, never zero. Which
+    * file a call opens follows the shard rule in the object doc,
+    * decided per version over the call's files. Thread-safe: one
+    * reader may serve every metadata answer of a read.
+    */
+  final class Sidecars(fs: FileSystem, root: Path) {
+    private val statsC = scala.collection.mutable.Map[String, Map[String, Map[String, ColStat]]]()
+    private val rowsC = scala.collection.mutable.Map[String, Map[String, RowStat]]()
+    private val shardedC = scala.collection.mutable.Map[String, Boolean]()
+    private val bytesC = scala.collection.mutable.Map[Path, Long]()
+    private val opened = scala.collection.mutable.Set[String]()
+
+    /** Version dirs whose sidecars this reader has touched. */
+    def versionsRead: Set[String] = synchronized(opened.toSet)
+
+    def stats(files: Seq[String]): Map[String, Map[String, ColStat]] =
+      lookup(files, StatsFile, StatsShards, statsC, read)
+
+    def rows(files: Seq[String]): Map[String, RowStat] =
+      lookup(files, RowsFile, RowsShards, rowsC, readRows)
+
+    private def sharded(v: String): Boolean =
+      shardedC.getOrElseUpdate(v, {
+        opened += v
+        fs.exists(new Path(new Path(root, v), StatsShards))
+      })
+
+    /** The shard rule of the object doc, for one version. */
+    private def useShards(v: String, segs: Int, whole: Path): Boolean =
+      sharded(v) && (segs <= MaxShardSegs || bytesC.getOrElseUpdate(whole,
+        try fs.getFileStatus(whole).getLen
+        catch { case _: java.io.FileNotFoundException => 0L }) > MaxWholeBytes)
+
+    private def lookup[T](files: Seq[String], whole: String, shards: String,
+        cache: scala.collection.mutable.Map[String, Map[String, T]],
+        parse: (FileSystem, Path) => Map[String, T]): Map[String, T] = synchronized {
+      def load(key: String, p: => Path): Map[String, T] =
+        cache.getOrElseUpdate(key, { opened += key.takeWhile(_ != '/'); parse(fs, p) })
+      files.groupBy(versionOf).iterator.filter(_._1.nonEmpty).flatMap { case (v, fl) =>
+        val vdir = new Path(root, v)
+        val inner = fl.map(f => f -> f.substring(v.length + 1))
+        val segs = inner.map(i => shardKey(i._2)).distinct
+        // cache keys: `v` for the whole file, `v/seg` for a shard
+        // (neither part contains '/')
+        val recs: String => Option[T] =
+          if (useShards(v, segs.size, new Path(vdir, whole))) {
+            val bySeg = segs.map(seg =>
+              seg -> load(s"$v/$seg", new Path(new Path(vdir, shards), seg))).toMap
+            i => bySeg(shardKey(i)).get(i)
+          } else load(v, new Path(vdir, whole)).get
+        inner.iterator.flatMap { case (f, i) => recs(i).map(f -> _) }
+      }.toMap
+    }
+  }
+
   /** Sidecar wire format: one `relPath \t col \t typ \t min \t max` line
     * per (file, column); values never contain tabs (numerics are
     * decimal, strings base64).
     */
-  def write(fs: FileSystem, sidecar: Path,
+  private def write(fs: FileSystem, sidecar: Path,
       stats: Map[String, Map[String, ColStat]]): Unit = {
     val lines = for {
       (f, cols) <- stats.toSeq.sortBy(_._1)
@@ -321,7 +444,7 @@ object FileStats {
     * `relPath \t col \t nullCount` (3 fields, one per column whose
     * null count is known). Tabs cannot occur in paths or column names.
     */
-  def writeRows(fs: FileSystem, sidecar: Path,
+  private def writeRows(fs: FileSystem, sidecar: Path,
       rows: Map[String, RowStat]): Unit = {
     val lines = rows.toSeq.sortBy(_._1).flatMap { case (f, rs) =>
       s"$f\t${rs.numRows}" +:
@@ -332,61 +455,13 @@ object FileStats {
     finally out.close()
   }
 
-  /** Per-PARTITION sidecar shards alongside the monolithic files:
-    * `_stats_p/<first path segment>` and `_rows_p/<segment>` (root
-    * files shard under "-"). The monolithic `_stats`/`_rows` stay the
-    * read surface for whole-version consumers; the shards exist so a
-    * partition-scoped commit (rewriting the chunks one upsert
-    * touches) parses the TOUCHED partition's stats instead of the
-    * whole version dir's — the O(version-size) residual the commit
-    * sweep measured. Hive segments are already path-escaped (%XX), so
-    * a segment is a safe file name.
-    */
   private def shardKey(relFile: String): String = {
     val i = relFile.indexOf('/')
     if (i < 0) "-" else relFile.substring(0, i)
   }
 
-  def writeSharded(fs: FileSystem, vdir: Path,
-      stats: Map[String, Map[String, ColStat]],
-      rows: Map[String, RowStat]): Unit = {
-    val keys = (stats.keySet ++ rows.keySet).groupBy(shardKey)
-    // single-shard versions (unpartitioned, or one partition) gain
-    // nothing over the monolithic files — skip the duplication
-    if (keys.size <= 1) return
-    keys.foreach { case (seg, files) =>
-      write(fs, new Path(new Path(vdir, "_stats_p"), seg),
-        files.toSeq.flatMap(f => stats.get(f).map(f -> _)).toMap)
-      writeRows(fs, new Path(new Path(vdir, "_rows_p"), seg),
-        files.toSeq.flatMap(f => rows.get(f).map(f -> _)).toMap)
-    }
-  }
-
-  /** Shard-or-monolith reads: the shard file if the shard DIR exists
-    * (post-round-11 versions), else the whole monolithic sidecar —
-    * absent either way means unknown, exactly the monolithic
-    * contract. Callers memoize per (vdir, segment).
-    */
-  def readShard(fs: FileSystem, vdir: Path,
-      seg: String): Option[Map[String, Map[String, ColStat]]] = {
-    val dir = new Path(vdir, "_stats_p")
-    if (!fs.exists(dir)) None
-    else Some(read(fs, new Path(dir, seg)))
-  }
-
-  def readRowsShard(fs: FileSystem, vdir: Path,
-      seg: String): Option[Map[String, RowStat]] = {
-    val dir = new Path(vdir, "_rows_p")
-    if (!fs.exists(dir)) None
-    else Some(readRows(fs, new Path(dir, seg)))
-  }
-
-  def shardKeyOf(relFile: String): String = shardKey(relFile)
-
-  /** Read a `_rows` sidecar; absent ⇒ empty (counts unknown — callers
-    * must fall back to scanning, never assume zero).
-    */
-  def readRows(fs: FileSystem, sidecar: Path): Map[String, RowStat] = {
+  /** Parse a `_rows` sidecar; absent ⇒ empty. */
+  private def readRows(fs: FileSystem, sidecar: Path): Map[String, RowStat] = {
     if (!fs.exists(sidecar)) return Map.empty
     val in = fs.open(sidecar)
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
@@ -403,8 +478,8 @@ object FileStats {
     }
   }
 
-  /** Read a `_stats` sidecar; absent sidecar ⇒ empty (prune nothing). */
-  def read(fs: FileSystem, sidecar: Path): Map[String, Map[String, ColStat]] = {
+  /** Parse a `_stats` sidecar; absent ⇒ empty. */
+  private def read(fs: FileSystem, sidecar: Path): Map[String, Map[String, ColStat]] = {
     if (!fs.exists(sidecar)) return Map.empty
     val in = fs.open(sidecar)
     val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString

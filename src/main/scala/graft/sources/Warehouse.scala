@@ -50,7 +50,7 @@ import org.apache.spark.sql.expressions.Window
   */
 /** Snapshot layout health (Warehouse.tableHealth) — all driver
   * metadata, no data read. `rows` is the exact snapshot row count from
-  * the `_rows` sidecars, None when any file predates them.
+  * the row sidecars (FileStats), None when any file predates them.
   */
 final case class TableHealth(files: Int, totalBytes: Long, minBytes: Long,
     maxBytes: Long, smallFiles: Int, versions: Int, rows: Option[Long])
@@ -219,11 +219,12 @@ class Warehouse(spark: SparkSession, dir: String,
   // ndv lines carry per-chunk merged HyperLogLog registers for
   // columns whose every file had an `_ndv_<col>` sidecar entry at
   // commit time, so `statsApproxNdv` answers from the header alone.
-  // Chunk row
-  // and null sums come from the `_rows` sidecars, chunk column stats
-  // are the per-file `_stats` merged per chunk (plus hive
-  // partition-path values, decoded and typed p-stats), and entry byte
-  // sizes come from one directory listing per version dir, so:
+  // Chunk row and null sums and chunk column stats fold the per-file
+  // records of the version dirs' stats sidecars (their layout and
+  // shard rule are documented once, on `FileStats`; they are read
+  // through `FileStats.Sidecars`), column stats plus hive
+  // partition-path values (decoded, typed p-stats); entry byte sizes
+  // come from one directory listing per version dir, so:
   //
   //  - `statsRowCount`/`statsNullCount`/`statsMinMax`/`history`
   //    answer from the header alone — O(chunks), not O(files), driver
@@ -281,7 +282,7 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   private[graft] var chunkWrites: Long = 0L
 
-  /** Test seam: the version dirs whose sidecars (`_stats`/`_rows`/
+  /** Test seam: the version dirs whose sidecars (stats, rows,
     * listing) the MOST RECENT manifest build actually opened —
     * LayoutSpec pins that a delta commit reads no sidecar of an
     * untouched version dir.
@@ -563,7 +564,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // Project alias, so parquet pushdown still reaches the old files'
     // physical column.
     val renames = renameMap(name)
-    files.groupBy(f => if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
+    files.groupBy(FileStats.versionOf)
       .toSeq.sortBy(_._1)
       .map { case (v, fs) =>
         val base = if (v.isEmpty) root else s"$root/$v"
@@ -634,27 +635,15 @@ class Warehouse(spark: SparkSession, dir: String,
     // stats would be corruption, not optimization.
     if (autoSkip) {
       val tp = tablePath(name)
-      def vOf(f: String): String =
-        if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else ""
-      // `_rows` sidecar maps, one read per version dir shared by every
-      // metadata answer below (row totals, null totals, partition
-      // group sums) — lazy per version, paid only when a metadata
-      // query actually arrives
-      val rowsCache = scala.collection.mutable.Map[String, Map[String, FileStats.RowStat]]()
-      def rowsOf(v: String): Map[String, FileStats.RowStat] =
-        rowsCache.synchronized {
-          rowsCache.getOrElseUpdate(v,
-            FileStats.readRows(fs, new Path(new Path(root, v), "_rows")))
-        }
+      // one memoizing sidecar reader shared by every metadata answer
+      // below (row totals, null totals, partition group sums, min/max)
+      // — lazy, paid only when a metadata query actually arrives
+      val side = new FileStats.Sidecars(fs, root)
       // per-file RowStat for THIS SCAN's files, or None the moment any
       // file predates the sidecars — unknown never becomes a made-up 0
       def perFileRows: Option[Seq[(String, FileStats.RowStat)]] = {
-        val per = files.map { f =>
-          val v = vOf(f)
-          if (v.isEmpty) None
-          else rowsOf(v).get(f.stripPrefix(v + "/")).map(f -> _)
-        }
-        if (per.exists(_.isEmpty)) None else Some(per.flatten)
+        val rs = side.rows(files)
+        if (files.forall(rs.contains)) Some(files.map(f => f -> rs(f))) else None
       }
       // the RAW row total of exactly these files. MetaAggRule's guards
       // ensure this only ever answers an Aggregate on the bare scan,
@@ -675,7 +664,7 @@ class Warehouse(spark: SparkSession, dir: String,
       // GROUP-BY-partition-column collapse. The path probe runs FIRST
       // and costs no IO: grouping by an ordinary data column (every
       // `distinct()` over a read plans this shape) must bail before
-      // touching a single `_rows` sidecar — the r16 bench caught the
+      // touching a single row sidecar — the r16 bench caught the
       // IO-first ordering as a per-read tax on serve-heavy queries.
       def partitionGroups(c: String): Option[Seq[(Option[String], Long)]] = {
         val segs: Seq[Option[Option[String]]] = files.map { f =>
@@ -702,20 +691,13 @@ class Warehouse(spark: SparkSession, dir: String,
       // the CALLER's expected typ for the column ("long" for plain
       // ints, "date" days, "ts"/"tsntz" micros — the families whose
       // parquet stats are exact values). Memoized per (column, typ);
-      // the shared stats cache makes a two-column probe cost one
-      // sidecar sweep.
+      // the shared reader makes a two-column probe cost one sidecar
+      // sweep.
       val mmCache = scala.collection.mutable.Map[(String, String), Option[(Long, Long)]]()
-      val statsCache = scala.collection.mutable.Map[String, Map[String, Map[String, FileStats.ColStat]]]()
       def colMinMax(c: String, typ: String): Option[(Long, Long)] = mmCache.synchronized {
         mmCache.getOrElseUpdate((c, typ), {
-          val per = files.groupBy(vOf)
-            .toSeq.flatMap { case (v, fl) =>
-              if (v.isEmpty) fl.map(_ => None)
-              else {
-                val stats = footerStats(fs, root, v, fl, statsCache)
-                fl.map(f => stats.get(f.stripPrefix(v + "/")).flatMap(_.get(c)))
-              }
-            }
+          val stats = side.stats(files)
+          val per = files.map(f => stats.get(f).flatMap(_.get(c)))
           if (per.isEmpty || per.exists(_.isEmpty)) None
           else {
             val cs = per.flatten
@@ -805,7 +787,7 @@ class Warehouse(spark: SparkSession, dir: String,
       upper: Option[Any]): (Seq[String], Int) = {
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
-    val cache = scala.collection.mutable.Map[String, Map[String, Map[String, FileStats.ColStat]]]()
+    val side = new FileStats.Sidecars(fs, root)
     mf.flatMap(m => manifestChunks(fs, new Path(root, m))) match {
       case Some(chunks) =>
         // chunk-level skip FIRST: a chunk whose merged stat excludes
@@ -816,14 +798,14 @@ class Warehouse(spark: SparkSession, dir: String,
           total += ch.nFiles
           ch.stats.get(column) match {
             case Some(cs) if !chunkStatMayContain(cs, lower, upper) => Nil
-            case _ => pruneFileList(fs, root, readChunk(fs, root, ch.name),
-              column, lower, upper, cache)
+            case _ => pruneFileList(side, readChunk(fs, root, ch.name),
+              column, lower, upper)
           }
         }
         (kept, total)
       case None =>
         val files = manifestFilesOrLegacy(fs, root, mf)
-        (pruneFileList(fs, root, files, column, lower, upper, cache), files.size)
+        (pruneFileList(side, files, column, lower, upper), files.size)
     }
   }
 
@@ -839,61 +821,23 @@ class Warehouse(spark: SparkSession, dir: String,
 
   /** Per-file pruning over an explicit file list (one chunk or the
     * whole flat snapshot): hive partition-path check + footer-stat
-    * check, sidecars memoized in `cache`.
+    * check. Legacy root files (no version dir, no sidecar) are kept.
     */
-  /** Footer-stats map for version `v`'s PROBED files: shard-first
-    * when the probe touches few partitions of a sharded version (a
-    * narrow pruned read then parses only those partitions' shard
-    * files — never the whole version's sidecar), falling back to the
-    * monolithic file for wide probes (where one read beats
-    * per-partition round trips) and pre-shard versions. Shard maps
-    * and the monolithic map share the caller's memo (keys `v#seg` /
-    * `v`).
-    */
-  private def footerStats(fs: FileSystem, root: Path, v: String,
-      fl: Seq[String],
-      cache: scala.collection.mutable.Map[String, Map[String, Map[String, FileStats.ColStat]]]): Map[String, Map[String, FileStats.ColStat]] = {
-    val vdir = new Path(root, v)
-    val segs = fl.map(f => FileStats.shardKeyOf(f.stripPrefix(v + "/"))).distinct
-    // shard-dir existence memoized in the same cache under a key no
-    // version string can collide with: a 1-entry marker map = exists,
-    // empty = pre-shard version (checked once per version, not per
-    // probed chunk)
-    val sharded = segs.size <= 4 &&
-      cache.getOrElseUpdate(s"$v#?", {
-        if (fs.exists(new Path(vdir, "_stats_p")))
-          Map("" -> Map.empty[String, FileStats.ColStat])
-        else Map.empty
-      }).nonEmpty
-    if (sharded)
-      segs.map(seg => cache.getOrElseUpdate(s"$v#$seg",
-        FileStats.read(fs, new Path(new Path(vdir, "_stats_p"), seg))))
-        .foldLeft(Map.empty[String, Map[String, FileStats.ColStat]])(_ ++ _)
-    else cache.getOrElseUpdate(v,
-      FileStats.read(fs, new Path(vdir, "_stats")))
+  private def pruneFileList(side: FileStats.Sidecars, files: Seq[String],
+      column: String, lower: Option[Any], upper: Option[Any]): Seq[String] = {
+    val stats = side.stats(files)
+    files.filter { f =>
+      FileStats.versionOf(f).isEmpty ||
+      // a hive `column=value` path segment prunes too — the partition
+      // column is never IN the file, so footer stats can't see it; the
+      // path is its exact single-value stat
+      partitionMayContain(f, column, lower, upper) &&
+      (stats.get(f).flatMap(_.get(column)) match {
+        case Some(cs) => FileStats.mayContain(cs, lower, upper)
+        case None     => true
+      })
+    }
   }
-
-  private def pruneFileList(fs: FileSystem, root: Path, files: Seq[String],
-      column: String, lower: Option[Any], upper: Option[Any],
-      cache: scala.collection.mutable.Map[String, Map[String, Map[String, FileStats.ColStat]]]): Seq[String] =
-    files.groupBy(f =>
-        if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
-      .toSeq.sortBy(_._1).flatMap { case (v, fl) =>
-        if (v.isEmpty) fl // legacy layout: no sidecar, keep all
-        else {
-          val stats = footerStats(fs, root, v, fl, cache)
-          fl.filter { f =>
-            // a hive `column=value` path segment prunes too — the
-            // partition column is never IN the file, so footer stats
-            // can't see it; the path is its exact single-value stat
-            partitionMayContain(f, column, lower, upper) &&
-            (stats.get(f.stripPrefix(v + "/")).flatMap(_.get(column)) match {
-              case Some(cs) => FileStats.mayContain(cs, lower, upper)
-              case None     => true
-            })
-          }
-        }
-      }
 
   /** Decode a hive-escaped partition path value: %XX byte escapes
     * ONLY. java.net.URLDecoder additionally turns '+' into a space —
@@ -1040,30 +984,23 @@ class Warehouse(spark: SparkSession, dir: String,
       case _ => ()
     }
     val files = snapshotFiles(name)
+    val stats = new FileStats.Sidecars(fs, root).stats(files)
     // raw typed fold space per family: Long for the integer families
     // (plain/days/micros — rendered at the end for temporals),
     // BigDecimal for decimals, UTF-8 String for strings
-    val perFile: Seq[Option[(String, Any, Any)]] = files
-      .groupBy(f => if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
-      .toSeq.flatMap { case (v, fl) =>
-        if (v.isEmpty) fl.map(_ => None)
-        else {
-          val stats = FileStats.read(fs, new Path(new Path(root, v), "_stats"))
-          fl.map { f =>
-            stats.get(f.stripPrefix(v + "/")).flatMap(_.get(column)).map {
-              case FileStats.ColStat(t @ ("long" | "date" | "ts" | "tsntz"), mn, mx) =>
-                (t, mn.toLong, mx.toLong)
-              case FileStats.ColStat("double", mn, mx) =>
-                ("double", mn.toDouble, mx.toDouble)
-              case FileStats.ColStat("decimal", mn, mx) =>
-                ("decimal", new java.math.BigDecimal(mn), new java.math.BigDecimal(mx))
-              case FileStats.ColStat(t, mn, mx) =>
-                (t, new String(java.util.Base64.getDecoder.decode(mn), "UTF-8"),
-                  new String(java.util.Base64.getDecoder.decode(mx), "UTF-8"))
-            }
-          }
-        }
+    val perFile: Seq[Option[(String, Any, Any)]] = files.map { f =>
+      stats.get(f).flatMap(_.get(column)).map {
+        case FileStats.ColStat(t @ ("long" | "date" | "ts" | "tsntz"), mn, mx) =>
+          (t, mn.toLong, mx.toLong)
+        case FileStats.ColStat("double", mn, mx) =>
+          ("double", mn.toDouble, mx.toDouble)
+        case FileStats.ColStat("decimal", mn, mx) =>
+          ("decimal", new java.math.BigDecimal(mn), new java.math.BigDecimal(mx))
+        case FileStats.ColStat(t, mn, mx) =>
+          (t, new String(java.util.Base64.getDecoder.decode(mn), "UTF-8"),
+            new String(java.util.Base64.getDecoder.decode(mx), "UTF-8"))
       }
+    }
     if (perFile.isEmpty || perFile.exists(_.isEmpty)) None
     else if (perFile.flatten.map(_._1).distinct.size != 1) None
     else {
@@ -1113,23 +1050,16 @@ class Warehouse(spark: SparkSession, dir: String,
 
   /** Per-file RowStat for every snapshot file that has one — shared
     * lookup for the metadata-only count/null paths. Files without a
-    * `_rows` record map to None (legacy versions, non-parquet).
+    * row record map to None (legacy versions, non-parquet).
     */
   private def snapshotRowStats(name: String): Seq[(String, Option[FileStats.RowStat])] = {
     val files = snapshotFiles(name)
     val root = new Path(tablePath(name))
-    val fs = fileSystem(root)
-    files.groupBy(f => if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
-      .toSeq.sortBy(_._1).flatMap { case (v, fl) =>
-        if (v.isEmpty) fl.map(f => f -> None)
-        else {
-          val rows = FileStats.readRows(fs, new Path(new Path(root, v), "_rows"))
-          fl.map(f => f -> rows.get(f.stripPrefix(v + "/")))
-        }
-      }
+    val rows = new FileStats.Sidecars(fileSystem(root), root).rows(files)
+    files.map(f => f -> rows.get(f))
   }
 
-  /** Exact `count(*)` answered from the `_rows` sidecars alone — zero
+  /** Exact `count(*)` answered from the row sidecars alone — zero
     * data files opened. None unless EVERY snapshot file carries a row
     * count (legacy versions ⇒ the caller must scan); when it answers,
     * it is exact: parquet footers always record block row counts. At
@@ -1202,20 +1132,23 @@ class Warehouse(spark: SparkSession, dir: String,
   /** The IS [NOT] NULL file prune against an explicit manifest — the
     * kept-list half of `readSkippingIsNull`, factored so the auto-skip
     * rule (graft.plans.AutoSkip, NullPred) shares the one
-    * implementation. Chunk-header null sums skip whole chunks; the
-    * `_rows` sidecars decide per file; unknown counts always keep.
+    * implementation. Chunk-header null sums skip whole chunks; the row
+    * sidecars decide per file; unknown counts always keep.
     */
   private def pruneFilesIsNullFrom(name: String, mfC: Option[String],
       column: String, isNull: Boolean): (Seq[String], Int) = {
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
-    def keepFile(f: String, rs: Option[FileStats.RowStat]): Boolean =
-      rs.forall { r =>
+    val side = new FileStats.Sidecars(fs, root)
+    def keep(files: Seq[String]): Seq[String] = {
+      val rows = side.rows(files)
+      files.filter(f => rows.get(f).forall { r =>
         r.nullCounts.get(column) match {
           case None     => true // unknown ⇒ keep, as always
           case Some(nc) => if (isNull) nc > 0 else nc < r.numRows
         }
-      }
+      })
+    }
     mfC
       .flatMap(m => manifestChunks(fs, new Path(root, m))) match {
       case Some(chunks) =>
@@ -1223,7 +1156,6 @@ class Warehouse(spark: SparkSession, dir: String,
         // IS NULL rows anywhere in the chunk; all-null (nulls == rows,
         // rows known) ⇒ no IS NOT NULL rows — either way the chunk is
         // never opened. Unknown sums open the chunk for per-file logic.
-        val rowsCache = scala.collection.mutable.Map[String, Map[String, FileStats.RowStat]]()
         var total = 0
         val kept = chunks.flatMap { ch =>
           total += ch.nFiles
@@ -1232,31 +1164,12 @@ class Warehouse(spark: SparkSession, dir: String,
             case Some(nc)           => ch.rowSum >= 0 && nc == ch.rowSum
             case None               => false
           }
-          if (skip) Nil
-          else readChunk(fs, root, ch.name).filter { f =>
-            val v = if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else ""
-            val rs =
-              if (v.isEmpty) None
-              else rowsCache.getOrElseUpdate(v,
-                FileStats.readRows(fs, new Path(new Path(root, v), "_rows")))
-                .get(f.stripPrefix(v + "/"))
-            keepFile(f, rs)
-          }
+          if (skip) Nil else keep(readChunk(fs, root, ch.name))
         }
         (kept, total)
       case None =>
         val files = manifestFilesOrLegacy(fs, root, mfC)
-        val kept = files.groupBy(f =>
-            if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
-          .toSeq.sortBy(_._1).flatMap { case (v, fl) =>
-            if (v.isEmpty) fl.filter(f => keepFile(f, None))
-            else {
-              val rows = FileStats.readRows(fs,
-                new Path(new Path(root, v), "_rows"))
-              fl.filter(f => keepFile(f, rows.get(f.stripPrefix(v + "/"))))
-            }
-          }
-        (kept, files.size)
+        (keep(files), files.size)
     }
   }
 
@@ -1395,8 +1308,7 @@ class Warehouse(spark: SparkSession, dir: String,
       get: org.apache.spark.sql.Row => T)(
       publish: (Path, Map[String, T]) => Unit): Unit = {
     val root = new Path(tablePath(name))
-    snapshotFiles(name).groupBy(f =>
-        if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
+    snapshotFiles(name).groupBy(FileStats.versionOf)
       .toSeq.sortBy(_._1).foreach { case (v, fl) =>
         if (v.nonEmpty) { // legacy root-level files: no sidecar home, skip
           val base = s"${tablePath(name)}/$v"
@@ -1494,8 +1406,7 @@ class Warehouse(spark: SparkSession, dir: String,
             if (lens.size == 1) pOf(lens.head).map(c -> _) else None
           }.toMap
       case _ =>
-        val vs = readManifest(fs, mf).map(f =>
-          if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "").distinct
+        val vs = readManifest(fs, mf).map(FileStats.versionOf).distinct
         if (vs.isEmpty || vs.contains("")) Map.empty
         else {
           val perV = vs.map { v =>
@@ -1608,8 +1519,7 @@ class Warehouse(spark: SparkSession, dir: String,
           return Some(NdvSketch.estimate(regs.reduce(NdvSketch.merge)))
       case _ => ()
     }
-    val byVersion = snapshotFiles(name).groupBy(f =>
-      if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
+    val byVersion = snapshotFiles(name).groupBy(FileStats.versionOf)
     val sketches = byVersion.toSeq.sortBy(_._1).flatMap { case (v, fl) =>
       if (v.isEmpty) fl.map(_ => None) // legacy files never have sketches
       else {
@@ -1647,49 +1557,46 @@ class Warehouse(spark: SparkSession, dir: String,
       column: String, values: Seq[Any]): (Seq[String], Int) = {
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
-    def perFile(files: Seq[String], probeVals: Seq[Any],
-        statsCache: scala.collection.mutable.Map[String, Map[String, Map[String, FileStats.ColStat]]],
-        bloomCache: scala.collection.mutable.Map[String, Map[String, BloomIndex.FileBloom]]): Seq[String] =
-      files.groupBy(f =>
-          if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "")
-        .toSeq.sortBy(_._1).flatMap { case (v, fl) =>
-          if (v.isEmpty) fl
-          else {
-            val stats = footerStats(fs, root, v, fl, statsCache)
-            val blooms = bloomCache.getOrElseUpdate(v,
-              BloomIndex.read(fs, new Path(new Path(root, v), s"_bloom_$column")))
-            fl.filter { f =>
-              val inner = f.stripPrefix(v + "/")
-              probeVals.exists { value =>
-                partitionMayContain(f, column, Some(value), Some(value)) &&
-                (stats.get(inner).flatMap(_.get(column)) match {
-                  case Some(cs) => FileStats.mayContain(cs, Some(value), Some(value))
-                  case None     => true
-                }) &&
-                (blooms.get(inner) match {
-                  // blooms were keyed from Spark's cast-to-string at
-                  // write time — only probe types whose toString is
-                  // guaranteed to match that rendering (Long/Integer/
-                  // Double/String; litValue normalizes all integrals
-                  // to Long and floats to Double). Wrapper-typed
-                  // probes (DateDays/Micros) have no matching key
-                  // format, and java.math.BigDecimal — though a
-                  // Number — renders scale/exponent differently from
-                  // the write-side cast, so they must KEEP, never
-                  // consult the filter.
-                  case Some(fb) if value.isInstanceOf[java.lang.Long] ||
-                      value.isInstanceOf[java.lang.Integer] ||
-                      value.isInstanceOf[java.lang.Double] ||
-                      value.isInstanceOf[String] =>
-                    BloomIndex.mightContain(fb.bits, fb.k, value.toString)
-                  case _ => true
-                })
-              }
+    val side = new FileStats.Sidecars(fs, root)
+    val bloomCache = scala.collection.mutable.Map[String, Map[String, BloomIndex.FileBloom]]()
+    def perFile(files: Seq[String], probeVals: Seq[Any]): Seq[String] = {
+      val stats = side.stats(files)
+      files.groupBy(FileStats.versionOf).toSeq.sortBy(_._1).flatMap { case (v, fl) =>
+        if (v.isEmpty) fl
+        else {
+          val blooms = bloomCache.getOrElseUpdate(v,
+            BloomIndex.read(fs, new Path(new Path(root, v), s"_bloom_$column")))
+          fl.filter { f =>
+            val inner = f.substring(v.length + 1)
+            probeVals.exists { value =>
+              partitionMayContain(f, column, Some(value), Some(value)) &&
+              (stats.get(f).flatMap(_.get(column)) match {
+                case Some(cs) => FileStats.mayContain(cs, Some(value), Some(value))
+                case None     => true
+              }) &&
+              (blooms.get(inner) match {
+                // blooms were keyed from Spark's cast-to-string at
+                // write time — only probe types whose toString is
+                // guaranteed to match that rendering (Long/Integer/
+                // Double/String; litValue normalizes all integrals
+                // to Long and floats to Double). Wrapper-typed
+                // probes (DateDays/Micros) have no matching key
+                // format, and java.math.BigDecimal — though a
+                // Number — renders scale/exponent differently from
+                // the write-side cast, so they must KEEP, never
+                // consult the filter.
+                case Some(fb) if value.isInstanceOf[java.lang.Long] ||
+                    value.isInstanceOf[java.lang.Integer] ||
+                    value.isInstanceOf[java.lang.Double] ||
+                    value.isInstanceOf[String] =>
+                  BloomIndex.mightContain(fb.bits, fb.k, value.toString)
+                case _ => true
+              })
             }
           }
         }
-    val sc = scala.collection.mutable.Map[String, Map[String, Map[String, FileStats.ColStat]]]()
-    val bc = scala.collection.mutable.Map[String, Map[String, BloomIndex.FileBloom]]()
+      }
+    }
     mf.flatMap(m => manifestChunks(fs, new Path(root, m))) match {
       case Some(chunks) =>
         // a chunk is skipped only when its merged stat excludes EVERY
@@ -1707,14 +1614,14 @@ class Warehouse(spark: SparkSession, dir: String,
             case Some(cs) =>
               val vs = values.filter(v => chunkStatMayContain(cs, Some(v), Some(v)))
               if (vs.isEmpty) Nil
-              else perFile(readChunk(fs, root, ch.name), vs, sc, bc)
-            case _ => perFile(readChunk(fs, root, ch.name), values, sc, bc)
+              else perFile(readChunk(fs, root, ch.name), vs)
+            case _ => perFile(readChunk(fs, root, ch.name), values)
           }
         }
         (kept, total)
       case None =>
         val files = manifestFilesOrLegacy(fs, root, mf)
-        (perFile(files, values, sc, bc), files.size)
+        (perFile(files, values), files.size)
     }
   }
 
@@ -1842,7 +1749,7 @@ class Warehouse(spark: SparkSession, dir: String,
     }
 
   /** All DATA files under a version dir, relative to the table root
-    * (metadata — `_SUCCESS`, the `_stats` skipping sidecar — excluded,
+    * (metadata — `_SUCCESS`, the skipping sidecars — excluded,
     * so manifests list only readable parquet).
     */
   private def versionFiles(fs: FileSystem, root: Path, vdir: Path): Seq[String] = {
@@ -1920,28 +1827,33 @@ class Warehouse(spark: SparkSession, dir: String,
   private final case class BuiltManifest(content: String,
       ownChunks: Seq[String], vdirs: Set[String])
 
+  /** A file's version dir as the manifest header's vdirs line spells
+    * it: "-" for a legacy root file.
+    */
+  private def vdirOf(f: String): String = FileStats.versionOf(f) match {
+    case "" => "-"
+    case v  => v
+  }
+
   /** (partition path, full path) — the chunk clustering/order key. */
   private def sortKey(f: String): (String, String) = (partitionRel(f), f)
   private def keyLe(a: (String, String), b: (String, String)): Boolean =
     a._1 < b._1 || (a._1 == b._1 && a._2 <= b._2)
 
   /** Per-commit memoized access to the version dirs' commit-time
-    * metadata: `_stats` / `_rows` sidecars, ONE recursive listing per
-    * dir for byte sizes (which also surfaces the `_ndv_*` sidecar
-    * names), and lazy HLL register loads. Records which dirs it
+    * metadata: footer and row stats through one `FileStats.Sidecars`
+    * reader, ONE recursive listing per dir for byte sizes, partition-
+    * path stats and lazy HLL register loads. Records which dirs it
     * touched — the `lastCommitSidecarDirs` seam pins that a delta
     * commit never opens an untouched version dir's metadata.
     */
   private final class VersionMeta(fs: FileSystem, root: Path) {
-    val touched = scala.collection.mutable.Set[String]()
-    private val statsC = scala.collection.mutable.Map[String, Map[String, Map[String, FileStats.ColStat]]]()
-    private val rowsC = scala.collection.mutable.Map[String, Map[String, FileStats.RowStat]]()
+    private val ownTouched = scala.collection.mutable.Set[String]()
+    private val side = new FileStats.Sidecars(fs, root)
+    def touched: Set[String] = ownTouched.toSet ++ side.versionsRead
     private val listC = scala.collection.mutable.Map[String, Map[String, Long]]()
     private val ndvColsC = scala.collection.mutable.Map[String, Seq[String]]()
     private val ndvC = scala.collection.mutable.Map[(String, String), Map[String, Array[Byte]]]()
-
-    private def vOf(f: String): String =
-      if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else ""
 
     /** Recursive per-file sizes — paid ONLY when an entry arrives
       * without a carried byte size (fresh version dirs; a rewritten
@@ -1950,7 +1862,7 @@ class Warehouse(spark: SparkSession, dir: String,
       */
     private def listing(v: String): Map[String, Long] =
       listC.getOrElseUpdate(v, {
-        touched += v
+        ownTouched += v
         val base = if (v.isEmpty) root else new Path(root, v)
         sizesUnder(fs, base, if (v.isEmpty) "" else s"$v/")
       })
@@ -1961,7 +1873,7 @@ class Warehouse(spark: SparkSession, dir: String,
       */
     private def ndvColNames(v: String): Seq[String] =
       ndvColsC.getOrElseUpdate(v, {
-        touched += v
+        ownTouched += v
         val base = if (v.isEmpty) root else new Path(root, v)
         if (!fs.exists(base)) Nil
         else fs.listStatus(base).toSeq.collect {
@@ -1970,33 +1882,11 @@ class Warehouse(spark: SparkSession, dir: String,
         }
       })
 
-    def size(f: String): Option[Long] = listing(vOf(f)).get(f)
+    def size(f: String): Option[Long] = listing(FileStats.versionOf(f)).get(f)
 
-    // sidecar reads are SHARD-first (per-partition files, see
-    // FileStats.writeSharded): a rewritten chunk's survivors load only
-    // their own partitions' records — the whole-version parse happens
-    // only for pre-shard versions. Cache key = (version, shard).
-    private val statsShardC = scala.collection.mutable.Map[(String, String), Option[Map[String, Map[String, FileStats.ColStat]]]]()
-    private val rowsShardC = scala.collection.mutable.Map[(String, String), Option[Map[String, FileStats.RowStat]]]()
+    def rows(files: Seq[String]): Map[String, FileStats.RowStat] = side.rows(files)
 
-    def rows(f: String): Option[FileStats.RowStat] = {
-      val v = vOf(f)
-      if (v.isEmpty) return None
-      val inner = f.stripPrefix(v + "/")
-      val seg = FileStats.shardKeyOf(inner)
-      rowsShardC.getOrElseUpdate((v, seg), {
-        touched += v
-        FileStats.readRowsShard(fs, new Path(root, v), seg)
-      }) match {
-        case Some(m) => m.get(inner)
-        case None => rowsC.getOrElseUpdate(v, {
-          touched += v
-          FileStats.readRows(fs, new Path(new Path(root, v), "_rows"))
-        }).get(inner)
-      }
-    }
-
-    /** Footer stats ++ hive partition-path single-value stats.
+    /** Footer stats ++ hive partition-path single-value stats, per file.
       * Partition values get DISTINCT stat types (plong/pstring, never
       * long/string): a path value types by how it PARSES, but pruning
       * correctness types by the CALLER's bounds — a lone '9' partition
@@ -2007,25 +1897,13 @@ class Warehouse(spark: SparkSession, dir: String,
       * (chunkStatMayContain) and are invisible to statsMinMax, whose
       * contract is footer values typed as stored.
       */
-    def stats(f: String): Map[String, FileStats.ColStat] = {
-      val v = vOf(f)
-      val inner = if (v.isEmpty) f else f.stripPrefix(v + "/")
-      val footer =
-        if (v.isEmpty) Map.empty[String, FileStats.ColStat]
-        else {
-          val seg = FileStats.shardKeyOf(inner)
-          statsShardC.getOrElseUpdate((v, seg), {
-            touched += v
-            FileStats.readShard(fs, new Path(root, v), seg)
-          }) match {
-            case Some(m) => m.getOrElse(inner, Map.empty)
-            case None => statsC.getOrElseUpdate(v, {
-              touched += v
-              FileStats.read(fs, new Path(new Path(root, v), "_stats"))
-            }).getOrElse(inner, Map.empty)
-          }
-        }
-      val partStats = f.split('/').toSeq.flatMap {
+    def stats(files: Seq[String]): Seq[Map[String, FileStats.ColStat]] = {
+      val footer = side.stats(files)
+      files.map(f => footer.getOrElse(f, Map.empty) ++ partStats(f))
+    }
+
+    private def partStats(f: String): Map[String, FileStats.ColStat] =
+      f.split('/').toSeq.flatMap {
         case seg if seg.contains('=') && !seg.endsWith("=__HIVE_DEFAULT_PARTITION__") &&
             !seg.contains('\t') =>
           val c = seg.takeWhile(_ != '=')
@@ -2057,23 +1935,21 @@ class Warehouse(spark: SparkSession, dir: String,
           }
         case _ => None
       }.toMap
-      footer ++ partStats
-    }
 
     /** Columns with an `_ndv_<col>` sidecar in EVERY version dir the
       * given files span (legacy root files have none => empty).
       */
     def ndvCols(files: Seq[String]): Seq[String] = {
-      val vs = files.map(vOf).distinct
+      val vs = files.map(FileStats.versionOf).distinct
       if (vs.isEmpty || vs.contains("")) Nil
       else vs.map(v => ndvColNames(v).toSet).reduce(_ intersect _).toSeq.sorted
     }
 
     def ndvRegs(f: String, col: String): Option[Array[Byte]] = {
-      val v = vOf(f)
+      val v = FileStats.versionOf(f)
       if (v.isEmpty) None
       else ndvC.getOrElseUpdate((v, col), {
-        touched += v
+        ownTouched += v
         NdvSketch.read(fs, new Path(new Path(root, v), s"_ndv_$col"))
       }).get(f.stripPrefix(v + "/"))
     }
@@ -2140,14 +2016,13 @@ class Warehouse(spark: SparkSession, dir: String,
       */
     def headerLines(name: String, files: Seq[String]): Seq[String] = {
       val out = scala.collection.mutable.ListBuffer[String]()
-      val rowStats = files.map(meta.rows)
+      val rowStats = { val rs = meta.rows(files); files.map(rs.get) }
       val rowSum = if (rowStats.exists(_.isEmpty)) -1L
         else rowStats.flatten.map(_.numRows).sum
       out += s"chunk\t$name\t${files.size}\t$rowSum"
       if (files.nonEmpty && !files.head.contains('\t') && !files.last.contains('\t'))
         out += s"span\t$name\t${files.head}\t${files.last}"
-      val vds = files.map(f =>
-        if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "-").distinct
+      val vds = files.map(vdirOf).distinct
       if (vds.forall(v => !v.contains(',') && !v.contains('\t')))
         out += s"vdirs\t$name\t${vds.mkString(",")}"
       val pcs = files.flatMap(_.split('/').toSeq.filter(_.contains('='))
@@ -2166,7 +2041,7 @@ class Warehouse(spark: SparkSession, dir: String,
       }
       // merged stats: fold per-file maps, dropping any column the fold
       // can't bound for every file (None poisons the entry)
-      val merged = files.map(f => meta.stats(f).view.mapValues(Option(_)).toMap)
+      val merged = meta.stats(files).map(_.view.mapValues(Option(_)).toMap)
         .reduceOption { (x, y) =>
           (x.keySet intersect y.keySet).map { c =>
             c -> (for { a <- x(c); b <- y(c); m <- mergeStat(a, b) } yield m)
@@ -2229,14 +2104,13 @@ class Warehouse(spark: SparkSession, dir: String,
             }
         }
     }
-    lastCommitSidecarDirs = meta.touched.toSet
+    lastCommitSidecarDirs = meta.touched
     built
   }
 
   private def buildFull(fs: FileSystem, root: Path, n: Long,
       files: Seq[String], meta: VersionMeta): BuiltManifest = {
-    val vdirs = files.map(f =>
-      if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "-").toSet
+    val vdirs = files.map(vdirOf).toSet
     if (files.size <= manifestChunkSize)
       return BuiltManifest(files.mkString("\n") + "\n", Nil, vdirs)
     val sorted = files.sortBy(sortKey)
@@ -2290,8 +2164,6 @@ class Warehouse(spark: SparkSession, dir: String,
     val writer = new ChunkWriter(fs, root, n, meta)
     val header = new StringBuilder(ChunkedHeader).append('\n')
     val vdirs = scala.collection.mutable.Set[String]()
-    def vdirOf(f: String): String =
-      if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else "-"
     chunks.foreach { c =>
       survivors.get(c.name) match {
         case None =>
@@ -3323,7 +3195,7 @@ class Warehouse(spark: SparkSession, dir: String,
   /** Snapshot integrity audit (fsck-lite), driver metadata only:
     * the current pointer must resolve to a parseable manifest, every
     * manifest-listed data file must exist, and every referenced
-    * version dir should carry its `_stats` sidecar (a sidecar may
+    * version dir should carry its stats sidecar (a sidecar may
     * cover MORE files than the snapshot references — partition-scoped
     * upserts legitimately keep only part of an old version). Returns
     * human-readable issues — empty means healthy. Orphan version dirs are NOT issues (they are the
@@ -3345,12 +3217,9 @@ class Warehouse(spark: SparkSession, dir: String,
     files.foreach { f =>
       if (!fs.exists(new Path(root, f))) issues += s"missing data file: $f"
     }
-    val versions = files.collect {
-      case f if f.matches("^_v\\d+/.*") => f.takeWhile(_ != '/')
-    }.distinct
-    versions.foreach { v =>
-      if (!fs.exists(new Path(new Path(root, v), "_stats")))
-        issues += s"version $v has no _stats sidecar"
+    files.map(FileStats.versionOf).distinct.foreach { v =>
+      if (v.nonEmpty && !FileStats.hasSidecars(fs, new Path(root, v)))
+        issues += s"version $v has no stats sidecar"
     }
     // deletion-vector lineage: a pointer naming a missing dir means
     // merge-on-read CANNOT resolve (readers throw) — surface it before
@@ -3470,7 +3339,7 @@ class Warehouse(spark: SparkSession, dir: String,
                !markerFresh(m.stripPrefix("_manifest_v"))) ||
               (!pointerStore.read(fs, root, dvPtrName(m)).contains(d) &&
                System.currentTimeMillis() - st.getModificationTime > DvOrphanGraceMs)) =>
-          // dead lineage (manifest reaped ⇒ readMor can never resolve
+          // dead lineage (manifest reaped ⇒ read can never resolve
           // it again) goes immediately — unless a fresh in-flight
           // marker says the lineage is a concurrent commit's staged
           // (not-yet-current) vector; within a LIVE lineage only the
@@ -3526,7 +3395,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // files the listing genuinely didn't cover.
     val sized = scala.collection.mutable.Map[String, Map[String, Long]]()
     def sizeOf(f: String): Long = {
-      val v = if (f.matches("^_v\\d+/.*")) f.takeWhile(_ != '/') else ""
+      val v = FileStats.versionOf(f)
       val m = sized.getOrElseUpdate(v, {
         val base = if (v.isEmpty) root else new Path(root, v)
         val prefix = if (v.isEmpty) "" else s"$v/"
@@ -3602,7 +3471,7 @@ class Warehouse(spark: SparkSession, dir: String,
     * interleave) so the footer-stats skipping layer prunes range scans
     * on ANY of them. One snapshot publish: readers keep old-or-new,
     * a racing writer loses the commit CAS loudly, and the fresh
-    * version's `_stats` sidecar reflects the new clustering
+    * version's stats sidecar reflects the new clustering
     * automatically. Unpartitioned layouts only — inside a hive
     * partition the partition column already prunes, and cross-
     * partition z-ordering would break the layout contract.
@@ -4449,18 +4318,9 @@ class Warehouse(spark: SparkSession, dir: String,
     }
   }
 
-  /** Merge-on-read scan. Since round 11 `read` itself IS merge-on-read
-    * (the DV anti-join lives in `readFilesMor`, shared by every read
-    * surface); this alias survives for callers written against the
-    * pre-MOR API.
-    */
-  def readMor(name: String): DataFrame = {
-    read(name)
-  }
-
   /** DESCRIBE HISTORY, metadata-only: every still-retained COMMITTED
     * manifest version with its file count and EXACT row count — file
-    * lists from the manifests, row counts summed from the `_rows`
+    * lists from the manifests, row counts summed from the row
     * sidecars (the m25 metadata surface), zero data files opened.
     * "Committed" is load-bearing: manifests staged on an open WAP
     * branch, and any manifest numbered ABOVE the current pointer
@@ -4484,6 +4344,7 @@ class Warehouse(spark: SparkSession, dir: String,
       .filter { case (v, m) =>
         !staged.contains(m) && curV.forall(v <= _)
       }.sortBy(_._1)
+    val side = new FileStats.Sidecars(fs, root)
     mfs.map { case (v, m) =>
       manifestChunks(fs, new Path(root, m)) match {
         case Some(chunks) =>
@@ -4494,14 +4355,9 @@ class Warehouse(spark: SparkSession, dir: String,
           (v, chunks.map(_.nFiles.toLong).sum, rows)
         case None =>
           val files = readManifest(fs, new Path(root, m))
-          val perFile = files.groupBy(_.split("/").head).toSeq.flatMap {
-            case (vdir, fl) =>
-              val rs = FileStats.readRows(fs,
-                new Path(new Path(root, vdir), "_rows"))
-              fl.map(f => rs.get(f.stripPrefix(vdir + "/")).map(_.numRows))
-          }
-          val rows = if (perFile.exists(_.isEmpty)) None
-            else Some(perFile.flatten.sum)
+          val rs = side.rows(files)
+          val rows = if (files.forall(rs.contains))
+            Some(files.map(rs(_).numRows).sum) else None
           (v, files.size.toLong, rows)
       }
     }
@@ -4798,14 +4654,6 @@ class Warehouse(spark: SparkSession, dir: String,
     (if (partitionCols.nonEmpty) writer.partitionBy(partitionCols: _*) else writer)
       .parquet(vdir.toString)
     val rel = versionFiles(fs, root, vdir)
-    // data-skipping sidecars off the parquet footers just written (no
-    // data pages re-read; distributed when the version is large; ONE
-    // footer pass feeds both): `_stats` = per-file column min/max,
-    // `_rows` = per-file row counts + per-column null counts (the
-    // metadata-only count(*) / IS NULL pruning surface). Written
-    // before the manifest commit, so a snapshot is never current with
-    // its stats missing.
-    val inner = rel.map(_.stripPrefix(s"_v$n/"))
     // `_schema` sidecar: the version's DATA-column read schema
     // (all-nullable, the shape parquet footer inference would return),
     // so every later read of this immutable version dir skips the
@@ -4826,15 +4674,12 @@ class Warehouse(spark: SparkSession, dir: String,
     try out.write(Warehouse.allNullable(dataOnly).json.getBytes(
       java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
-    val all = FileStats.collectAll(spark, vdir.toString, inner)
-    FileStats.write(fs, new Path(vdir, "_stats"),
-      all.map { case (f, (cols, _)) => f -> cols })
-    FileStats.writeRows(fs, new Path(vdir, "_rows"),
-      all.map { case (f, (_, rows)) => f -> rows })
-    // per-partition shards of the same records: a later partition-
-    // scoped commit reads only the touched partition's stats
-    FileStats.writeSharded(fs, vdir,
-      all.map { case (f, (cols, _)) => f -> cols },
+    // data-skipping sidecars (FileStats) off the parquet footers just
+    // written: no data pages re-read, one footer pass for both stat
+    // families, distributed when the version is large
+    val all = FileStats.collectAll(spark, vdir.toString,
+      rel.map(_.stripPrefix(s"_v$n/")))
+    FileStats.writeSidecars(fs, vdir, all.map { case (f, (cols, _)) => f -> cols },
       all.map { case (f, (_, rows)) => f -> rows })
     (n, rel)
   }

@@ -649,7 +649,7 @@ class LayoutSpec extends SparkSpec {
 
     assert(wh.deleteRows("t", $"k" < 10) === 10)
     assert(wh.deleteRows("t", $"k" % 50 === 0) === 11) // accumulates; overlap k=0 deduped
-    assert(wh.readMor("t").count() === 89)
+    assert(wh.read("t").count() === 89)
     assert(wh.read("t").count() === 89,
       "read IS merge-on-read: every surface sees deletes")
     // the delete is an overlay: the base files physically keep every row
@@ -658,9 +658,9 @@ class LayoutSpec extends SparkSpec {
     assert(dataFileMtimes === before, "a DV delete must not touch data files")
 
     // compaction materializes: republish the MOR view, DV lineage resets
-    wh.atomicPublish("t", wh.readMor("t"))
+    wh.atomicPublish("t", wh.read("t"))
     assert(wh.read("t").count() === 89)
-    assert(wh.readMor("t").count() === 89, "fresh snapshot starts with no DV")
+    assert(wh.read("t").count() === 89, "fresh snapshot starts with no DV")
   }
 
   test("WAP promote racing a main-line publish aborts loudly and retries clean") {
@@ -1081,7 +1081,7 @@ class LayoutSpec extends SparkSpec {
     spark.range(0, 100).selectExpr("'_v1/bogus' AS _file", "id AS _pos")
       .coalesce(1).write.parquet(orphan.toString)
     assert(wh.deleteRows("t", $"k" === 50) === 11) // commits _manifest_v3
-    assert(wh.readMor("t").count() === 89)
+    assert(wh.read("t").count() === 89)
     assert(fs.exists(orphan), "an orphan under a LIVE lineage's name must " +
       "survive the commit sweep (only the pointed vector is load-bearing)")
 
@@ -1091,7 +1091,7 @@ class LayoutSpec extends SparkSpec {
     fs.setTimes(orphan, aged, aged)
     val reaped = wh.vacuumOrphans("t")
     assert(reaped.contains("_dv__manifest_v3_deadbeef"), s"vacuum said: $reaped")
-    assert(wh.readMor("t").count() === 89,
+    assert(wh.read("t").count() === 89,
       "vacuum must never reap the pointer-resolved vector")
     // a DEAD lineage's vector dir goes at the next commit outright —
     // no age gate needed: stagings only ever happen under a freshly
@@ -1103,7 +1103,7 @@ class LayoutSpec extends SparkSpec {
       assert(!fs.exists(new org.apache.hadoop.fs.Path(root, d)),
         "superseded lineage v2's vector must be swept by the v4 commit")
     }
-    assert(wh.readMor("t").count() === 99)
+    assert(wh.read("t").count() === 99)
   }
 
   test("incremental commits: append writes one new chunk, reads no untouched sidecar") {
@@ -1335,6 +1335,64 @@ class LayoutSpec extends SparkSpec {
     // never wrong, never a crash
     val (keptWide, _) = wh.pruneFiles("t", "k", Some(0L), Some(100000L))
     assert(keptWide.size === total)
+  }
+
+  test("sidecar shards answer exactly what the whole-version sidecars answer") {
+    import org.apache.hadoop.fs.Path
+    import org.scalacheck.Gen
+    import spark.implicits._
+    // hive-escaped values (%XX, a literal '+', '/', '='), the null
+    // partition (__HIVE_DEFAULT_PARTITION__) and an unpartitioned
+    // version among the generated layouts
+    val pvals = Gen.oneOf[Option[String]](Some("a"), Some("b+c"), Some("50%"),
+      Some("x%2Fy"), Some("p/q"), Some("k=v"), Some("a b"), Some("2024-01-31"), None)
+    val rowGen = for {
+      id <- Gen.chooseNum(-1000L, 1000L)
+      s <- Gen.option(Gen.alphaStr.map(_.take(6)))
+      p <- pvals
+      q <- Gen.chooseNum(0, 6)
+    } yield (id, s, p, q)
+    val caseGen = for {
+      parts <- Gen.oneOf(Seq.empty[String], Seq("p"), Seq("p", "q"))
+      rows <- Gen.choose(1, 40).flatMap(Gen.listOfN(_, rowGen))
+      spread <- Gen.choose(1, 4)
+    } yield (parts, rows, spread)
+    val cases = Gen.listOfN(8, caseGen)
+      .pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(20261019L))
+    val fs = new Path(System.getProperty("java.io.tmpdir"))
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    var shardedCases = 0
+    cases.zipWithIndex.foreach { case ((parts, rows, spread), i) =>
+      val (wh, tmp) = mk(s"graft-shard-eq-$i")
+      wh.atomicPublish("t", rows.toDF("id", "s", "p", "q").repartition(spread),
+        partitionCols = parts)
+      val root = new Path(s"$tmp/t")
+      val src = scala.io.Source.fromFile(s"$tmp/t/_manifest_v${wh.currentVersion("t").get}", "UTF-8")
+      val files = try src.getLines().filter(l => l.nonEmpty && !l.startsWith("#")).toList
+        finally src.close()
+      val sharded = fs.exists(new Path(root, "_v1/_stats_p"))
+      if (sharded) shardedCases += 1
+      // one file per request: a single segment, so a sharded version
+      // serves it from its shard
+      val fromShards = new graft.sources.FileStats.Sidecars(fs, root)
+      val shardRows = files.map(f => f -> fromShards.rows(Seq(f)).get(f)).toMap
+      val shardStats = files.map(f => f -> fromShards.stats(Seq(f)).get(f)).toMap
+      // without the shards every request reads the whole-version files
+      fs.delete(new Path(root, "_v1/_stats_p"), true)
+      fs.delete(new Path(root, "_v1/_rows_p"), true)
+      val whole = new graft.sources.FileStats.Sidecars(fs, root)
+      val wholeRows = whole.rows(files)
+      val wholeStats = whole.stats(files)
+      val ctx = s"case $i parts=$parts rows=${rows.size} files=${files.size} sharded=$sharded"
+      assert(files.forall(wholeRows.contains), s"$ctx: every file has a row record")
+      assert(files.map(wholeRows(_).numRows).sum === rows.size.toLong, ctx)
+      assert(files.forall(f => wholeStats.get(f).exists(_.contains("id"))), ctx)
+      files.foreach { f =>
+        assert(shardRows(f) === wholeRows.get(f), s"$ctx: rows of $f")
+        assert(shardStats(f) === wholeStats.get(f), s"$ctx: stats of $f")
+      }
+    }
+    assert(shardedCases > 0, "some generated version must carry shards")
   }
 
   test("lifecycle fuzz: random publish/append/upsert/delete/rollback/compact/vacuum always equals the model") {

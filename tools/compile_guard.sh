@@ -6,7 +6,8 @@
 #
 # Run this before ANY end-of-round / milestone commit:
 #   tools/compile_guard.sh && git commit ...
-# Exit 0 = no stray session builder or thread pool in main code,
+# Exit 0 = no stray session builder, thread pool or sidecar file name
+# in main code,
 # `sbt compile` (main + test sources) is green and the benchmark harness
 # (perfbench/build.py: src/main compiled together with perfbench/src)
 # builds; nonzero otherwise, with the offending lines or the tail of the
@@ -41,6 +42,16 @@ pools=$(code_lines 'Executors\.new|new Thread\(|new ThreadPoolExecutor\(|new For
 if [ -n "$pools" ]; then
   echo "compile_guard: RED — thread pool or thread outside graft.Parallel (use Parallel.map):" >&2
   echo "$pools" >&2
+  exit 1
+fi
+# One owner for the stats sidecars: the sidecar layout (file names,
+# shards, the shard rule) lives in graft/sources/FileStats.scala, and
+# no other main code names a sidecar file.
+sidecars=$(code_lines '"_stats|"_rows|_stats_p|_rows_p' \
+  | grep -v '^src/main/scala/graft/sources/FileStats\.scala:')
+if [ -n "$sidecars" ]; then
+  echo "compile_guard: RED — stats sidecar file named outside FileStats.scala (go through FileStats):" >&2
+  echo "$sidecars" >&2
   exit 1
 fi
 log=$(mktemp /tmp/compile_guard.XXXXXX.log)
