@@ -219,12 +219,12 @@ class Warehouse(spark: SparkSession, dir: String,
   // ndv lines carry per-chunk merged HyperLogLog registers for
   // columns whose every file had an `_ndv_<col>` sidecar entry at
   // commit time, so `statsApproxNdv` answers from the header alone.
-  // Chunk row and null sums and chunk column stats fold the per-file
-  // records of the version dirs' stats sidecars (their layout and
-  // shard rule are documented once, on `FileStats`; they are read
-  // through `FileStats.Sidecars`), column stats plus hive
-  // partition-path values (decoded, typed p-stats); entry byte sizes
-  // come from one directory listing per version dir, so:
+  // Chunk row sums, null sums and column stats fold the per-file
+  // records of the version dirs' stats sidecars (layout and shard
+  // rule: `FileStats`, read through `FileStats.Sidecars`); column
+  // stats also fold the hive partition-path values (decoded, typed
+  // p-stats). Entry byte sizes come from one directory listing per
+  // version dir, so:
   //
   //  - `statsRowCount`/`statsNullCount`/`statsMinMax`/`history`
   //    answer from the header alone — O(chunks), not O(files), driver
