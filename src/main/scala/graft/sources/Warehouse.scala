@@ -793,16 +793,10 @@ class Warehouse(spark: SparkSession, dir: String,
         // chunk-level skip FIRST: a chunk whose merged stat excludes
         // the range is never opened — on a clustered 10⁶-file table a
         // narrow range parses the matching chunk(s) only
-        var total = 0
-        val kept = chunks.flatMap { ch =>
-          total += ch.nFiles
-          ch.stats.get(column) match {
-            case Some(cs) if !chunkStatMayContain(cs, lower, upper) => Nil
-            case _ => pruneFileList(side, readChunk(fs, root, ch.name),
-              column, lower, upper)
-          }
-        }
-        (kept, total)
+        val open = chunks.filter(ch => ch.stats.get(column)
+          .forall(chunkStatMayContain(_, lower, upper)))
+        (pruneFileList(side, open.flatMap(ch => readChunk(fs, root, ch.name)),
+          column, lower, upper), chunks.map(_.nFiles).sum)
       case None =>
         val files = manifestFilesOrLegacy(fs, root, mf)
         (pruneFileList(side, files, column, lower, upper), files.size)
@@ -1156,17 +1150,13 @@ class Warehouse(spark: SparkSession, dir: String,
         // IS NULL rows anywhere in the chunk; all-null (nulls == rows,
         // rows known) ⇒ no IS NOT NULL rows — either way the chunk is
         // never opened. Unknown sums open the chunk for per-file logic.
-        var total = 0
-        val kept = chunks.flatMap { ch =>
-          total += ch.nFiles
-          val skip = ch.nulls.get(column) match {
-            case Some(nc) if isNull => nc == 0L
-            case Some(nc)           => ch.rowSum >= 0 && nc == ch.rowSum
-            case None               => false
-          }
-          if (skip) Nil else keep(readChunk(fs, root, ch.name))
-        }
-        (kept, total)
+        val open = chunks.filterNot(ch => ch.nulls.get(column) match {
+          case Some(nc) if isNull => nc == 0L
+          case Some(nc)           => ch.rowSum >= 0 && nc == ch.rowSum
+          case None               => false
+        })
+        (keep(open.flatMap(ch => readChunk(fs, root, ch.name))),
+          chunks.map(_.nFiles).sum)
       case None =>
         val files = manifestFilesOrLegacy(fs, root, mfC)
         (keep(files), files.size)
@@ -1559,8 +1549,8 @@ class Warehouse(spark: SparkSession, dir: String,
     val fs = fileSystem(root)
     val side = new FileStats.Sidecars(fs, root)
     val bloomCache = scala.collection.mutable.Map[String, Map[String, BloomIndex.FileBloom]]()
-    def perFile(files: Seq[String], probeVals: Seq[Any]): Seq[String] = {
-      val stats = side.stats(files)
+    def perFile(files: Seq[String], probeVals: Seq[Any],
+        stats: Map[String, Map[String, FileStats.ColStat]]): Seq[String] =
       files.groupBy(FileStats.versionOf).toSeq.sortBy(_._1).flatMap { case (v, fl) =>
         if (v.isEmpty) fl
         else {
@@ -1596,7 +1586,6 @@ class Warehouse(spark: SparkSession, dir: String,
           }
         }
       }
-    }
     mf.flatMap(m => manifestChunks(fs, new Path(root, m))) match {
       case Some(chunks) =>
         // a chunk is skipped only when its merged stat excludes EVERY
@@ -1607,21 +1596,17 @@ class Warehouse(spark: SparkSession, dir: String,
         // chunk to the one or two values that can live there, keeping
         // the sweep O(files · survivingValues), not O(files · values)
         // (ScaleProbe's prune_join128 leg pins this at 1M files)
-        var total = 0
-        val kept = chunks.flatMap { ch =>
-          total += ch.nFiles
-          ch.stats.get(column) match {
-            case Some(cs) =>
-              val vs = values.filter(v => chunkStatMayContain(cs, Some(v), Some(v)))
-              if (vs.isEmpty) Nil
-              else perFile(readChunk(fs, root, ch.name), vs)
-            case _ => perFile(readChunk(fs, root, ch.name), values)
-          }
+        val open = chunks.flatMap { ch =>
+          val vs = ch.stats.get(column).fold(values)(cs =>
+            values.filter(v => chunkStatMayContain(cs, Some(v), Some(v))))
+          if (vs.isEmpty) None else Some((readChunk(fs, root, ch.name), vs))
         }
-        (kept, total)
+        val stats = side.stats(open.flatMap(_._1))
+        (open.flatMap { case (fl, vs) => perFile(fl, vs, stats) },
+          chunks.map(_.nFiles).sum)
       case None =>
         val files = manifestFilesOrLegacy(fs, root, mf)
-        (perFile(files, values), files.size)
+        (perFile(files, values, side.stats(files)), files.size)
     }
   }
 
