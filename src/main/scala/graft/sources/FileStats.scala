@@ -45,8 +45,10 @@ import scala.jdk.CollectionConverters._
   * open, 35–70 ns a byte). So a commit rewriting one manifest chunk
   * of a huge version (64 of 6,250 segments) opens those 64 shards,
   * while a request covering the whole version (a full scan's
-  * count(*), a wide prune) always parses the whole file: its shards
-  * would add one open per segment to the same bytes. A prune asks
+  * count(*), a wide prune) parses the whole file, whose bytes its
+  * shards would only repeat with one open each; only a first shard
+  * well below the average size can tip such a request to shards,
+  * at a cost near the crossover. A prune asks
   * once for the files of every manifest chunk it opens, so the rule
   * sees the prune's whole width; a commit asks per rewritten chunk.
   *
