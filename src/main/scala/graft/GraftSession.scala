@@ -21,6 +21,13 @@ import org.apache.spark.sql.SparkSession
   *  - `spark.sql.codegen.fallback=false`: an expression whose generated
   *    code fails to compile is a hard error, not a silent fall-back to
   *    interpreted evaluation (a hidden 10x slowdown).
+  *
+  * Host requirement: the JVM must run under a UTF-8 locale (e.g.
+  * `LC_ALL=C.UTF-8`). Without one Java encodes file names as ASCII and
+  * writing a non-ASCII hive partition value fails with
+  * InvalidPathException. A session cannot fix that (the encoding is
+  * fixed at JVM start); `build.sbt` sets the locale for forked tests
+  * and `sbt run`.
   */
 object GraftSession {
   def apply(cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt),

@@ -299,7 +299,7 @@ class Warehouse(spark: SparkSession, dir: String,
     * consulted only when its type class matches the bounds' — a
     * mismatch (e.g. a plong partition stat probed with string bounds,
     * where numeric compare could wrongly prune a lexicographic match)
-    * KEEPS the chunk so the per-file logic (partitionMayContain, which
+    * KEEPS the chunk so the per-file logic (partitionValueMayContain, which
     * implements exactly this typing rule per file) decides. Pruning
     * only ever removes chunks proven empty under the caller's own
     * comparison semantics.
@@ -410,8 +410,10 @@ class Warehouse(spark: SparkSession, dir: String,
   /** Parse a manifest's HEADER: Some(chunks) for the chunked format,
     * None for flat.
     */
-  private def manifestChunks(fs: FileSystem, mf: Path): Option[Seq[ChunkMeta]] = {
-    val txt = readSmallFile(fs, mf)
+  private def manifestChunks(fs: FileSystem, mf: Path): Option[Seq[ChunkMeta]] =
+    chunkHeader(readSmallFile(fs, mf))
+
+  private def chunkHeader(txt: String): Option[Seq[ChunkMeta]] = {
     if (!txt.startsWith(ChunkedHeader)) return None
     val lines = txt.split('\n').toSeq.map(_.trim).filter(_.nonEmpty).drop(1)
     // malformed lines are SKIPPED, not fatal: a dropped stat line only
@@ -473,17 +475,21 @@ class Warehouse(spark: SparkSession, dir: String,
     * resolution, commit (previous-snapshot load), GC live-sets, and
     * time travel.
     */
-  private def readManifest(fs: FileSystem, mf: Path): Seq[String] =
-    manifestChunks(fs, mf) match {
+  private def readManifest(fs: FileSystem, mf: Path): Seq[String] = {
+    val txt = readSmallFile(fs, mf)
+    chunkHeader(txt) match {
       case Some(chunks) =>
         chunks.flatMap(ch => readChunk(fs, mf.getParent, ch.name))
-      case None =>
-        // `#`-prefixed lines are metadata comments (the `#op` commit
-        // label), never paths — our entries are `_vN/...`, hive
-        // `k=v/...`, or legacy root files
-        readSmallFile(fs, mf).split('\n').toSeq.map(_.trim)
-          .filter(l => l.nonEmpty && !l.startsWith("#"))
+      case None => flatEntries(txt)
     }
+  }
+
+  /** A flat manifest's entries. `#`-prefixed lines are metadata
+    * comments (the `#op` commit label), never paths — our entries are
+    * `_vN/...`, hive `k=v/...`, or legacy root files.
+    */
+  private def flatEntries(txt: String): Seq[String] =
+    txt.split('\n').toSeq.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("#"))
 
   /** The commit KIND a manifest was published with (`op` header line /
     * `#op` flat comment) — None for pre-label manifests. Data-neutral
@@ -527,11 +533,15 @@ class Warehouse(spark: SparkSession, dir: String,
         new String(buf, 0, off, "UTF-8")
       } finally in.close()
     }
-    head.split('\n').iterator.take(6).collectFirst {
+    headerLabel(head, key)
+  }
+
+  /** One labeled value from the first lines of a manifest's text. */
+  private def headerLabel(head: String, key: String): Option[String] =
+    head.linesIterator.take(6).collectFirst {
       case l if l.startsWith(s"#$key\t") => l.stripPrefix(s"#$key\t").trim
       case l if l.startsWith(s"$key\t")  => l.stripPrefix(s"$key\t").trim
     }
-  }
 
   /** Assemble a snapshot's explicit file list into one DataFrame: one
     * read per version dir, each with basePath = that version's root so
@@ -825,7 +835,7 @@ class Warehouse(spark: SparkSession, dir: String,
       // a hive `column=value` path segment prunes too — the partition
       // column is never IN the file, so footer stats can't see it; the
       // path is its exact single-value stat
-      partitionMayContain(f, column, lower, upper) &&
+      partitionValueMayContain(partitionValue(f, column), lower, upper) &&
       (stats.get(f).flatMap(_.get(column)) match {
         case Some(cs) => FileStats.mayContain(cs, lower, upper)
         case None     => true
@@ -857,10 +867,22 @@ class Warehouse(spark: SparkSession, dir: String,
     Some(new String(bytes.toArray, "UTF-8"))
   }
 
-  /** Can the `column=value` hive segment of a file's path contain a
-    * value in [lower, upper]? True (keep) when the layout doesn't
-    * encode the column or the comparison type is ambiguous;
-    * `__HIVE_DEFAULT_PARTITION__` (null) is never prunable.
+  /** The unescaped value of a file path's `column=value` hive segment;
+    * None when the layout doesn't encode the column, the value is
+    * `__HIVE_DEFAULT_PARTITION__` (null — never prunable) or its
+    * escapes are malformed. Split once per file, then compared against
+    * each probe value by `partitionValueMayContain`.
+    */
+  private def partitionValue(file: String, column: String): Option[String] =
+    file.split('/').collectFirst {
+      case seg if seg.startsWith(column + "=") &&
+          !seg.endsWith("=__HIVE_DEFAULT_PARTITION__") =>
+        unescapePathValue(seg.substring(column.length + 1))
+    }.flatten
+
+  /** Can a file whose partition value is `value` (`partitionValue`)
+    * hold a value in [lower, upper]? True (keep) when there is no
+    * value or the comparison type is ambiguous.
     *
     * The comparison is typed from the CALLER'S bounds — the same types
     * the residual predicate in `readSkipping` compares with — never
@@ -872,13 +894,9 @@ class Warehouse(spark: SparkSession, dir: String,
     * bounds' type, or the bounds mix types, keep — pruning only ever
     * removes files proven empty, exactly `mayContain`'s contract.
     */
-  private def partitionMayContain(file: String, column: String,
+  private def partitionValueMayContain(value: Option[String],
       lower: Option[Any], upper: Option[Any]): Boolean =
-    file.split('/').collectFirst {
-      case seg if seg.startsWith(column + "=") &&
-          !seg.endsWith("=__HIVE_DEFAULT_PARTITION__") =>
-        unescapePathValue(seg.substring(column.length + 1))
-    }.flatten match {
+    value match {
       case None => true
       case Some(raw) =>
         val bounds = lower.toSeq ++ upper.toSeq
@@ -1558,8 +1576,9 @@ class Warehouse(spark: SparkSession, dir: String,
             BloomIndex.read(fs, new Path(new Path(root, v), s"_bloom_$column")))
           fl.filter { f =>
             val inner = f.substring(v.length + 1)
+            val pv = partitionValue(f, column)
             probeVals.exists { value =>
-              partitionMayContain(f, column, Some(value), Some(value)) &&
+              partitionValueMayContain(pv, Some(value), Some(value)) &&
               (stats.get(f).flatMap(_.get(column)) match {
                 case Some(cs) => FileStats.mayContain(cs, Some(value), Some(value))
                 case None     => true
@@ -1664,17 +1683,31 @@ class Warehouse(spark: SparkSession, dir: String,
   private val VersionRe = "_v(\\d+)".r
   private val InflightRe = "_inflight_v(\\d+)".r
 
-  /** How long an `_inflight_v<n>` marker shields its version dir from
-    * another commit's GC. A marker is created (create-no-overwrite —
-    * it doubles as the version-number claim) before any data is
-    * written and released when the owning commit succeeds or aborts;
-    * only a crashed writer leaves one behind, and after this grace its
-    * dir is reaped like any other orphan. Without the marker, a
-    * concurrent commit's GC sweep could delete a version dir another
-    * writer is still writing — or has written and is about to commit
-    * via append-rebase.
+  /** How long an `_inflight_v<n>` marker shields the entries of its
+    * number (version dir, chunks, manifest, staged vector) from
+    * `sweep`. A marker is created (create-no-overwrite — it doubles as
+    * the version-number claim) before any of them is written and
+    * released when the owning commit succeeds or aborts; only a crashed
+    * writer leaves one behind, and after this grace its entries are
+    * reaped like any other orphan. Without the marker, a concurrent
+    * commit's sweep could delete a version dir another writer is still
+    * writing — or has written and is about to commit via append-rebase.
+    * The same grace ages out a kept lineage's unpointed DV dirs.
     */
   private val InflightGraceMs: Long = 15L * 60 * 1000
+
+  /** The one age rule: has something last modified at `mtime`
+    * outlived the in-flight grace?
+    */
+  private def pastGrace(mtime: Long): Boolean =
+    System.currentTimeMillis() - mtime >= InflightGraceMs
+
+  /** Version `num`'s in-flight marker: Some(past the grace?) while it
+    * exists, None once it is gone.
+    */
+  private def markerStale(fs: FileSystem, root: Path, num: String): Option[Boolean] =
+    try Some(pastGrace(fs.getFileStatus(new Path(root, s"_inflight_v$num")).getModificationTime))
+    catch { case _: java.io.IOException => None }
 
   /** Data files (relative to the table root) of the current snapshot.
     * Resolution: `_CURRENT` pointer → manifest file. The pointer store
@@ -1810,7 +1843,7 @@ class Warehouse(spark: SparkSession, dir: String,
       added: Seq[String]) extends SnapSpec
 
   private final case class BuiltManifest(content: String,
-      ownChunks: Seq[String], vdirs: Set[String])
+      ownChunks: Seq[String])
 
   /** A file's version dir as the manifest header's vdirs line spells
     * it: "-" for a legacy root file.
@@ -2095,9 +2128,8 @@ class Warehouse(spark: SparkSession, dir: String,
 
   private def buildFull(fs: FileSystem, root: Path, n: Long,
       files: Seq[String], meta: VersionMeta): BuiltManifest = {
-    val vdirs = files.map(vdirOf).toSet
     if (files.size <= manifestChunkSize)
-      return BuiltManifest(files.mkString("\n") + "\n", Nil, vdirs)
+      return BuiltManifest(files.mkString("\n") + "\n", Nil)
     val sorted = files.sortBy(sortKey)
     val writer = new ChunkWriter(fs, root, n, meta)
     val header = new StringBuilder(ChunkedHeader).append('\n')
@@ -2105,7 +2137,7 @@ class Warehouse(spark: SparkSession, dir: String,
       writer.write(chunk.map(f => f -> Option.empty[Long]))
         .foreach(l => header.append(l).append('\n'))
     }
-    BuiltManifest(header.toString, writer.written.toList, vdirs)
+    BuiltManifest(header.toString, writer.written.toList)
   }
 
   /** The O(delta) path. Chunks whose span can't intersect the removals
@@ -2148,24 +2180,19 @@ class Warehouse(spark: SparkSession, dir: String,
     }
     val writer = new ChunkWriter(fs, root, n, meta)
     val header = new StringBuilder(ChunkedHeader).append('\n')
-    val vdirs = scala.collection.mutable.Set[String]()
     chunks.foreach { c =>
       survivors.get(c.name) match {
-        case None =>
-          c.raw.foreach(l => header.append(l).append('\n'))
-          vdirs ++= c.vdirs.getOrElse(Nil)
+        case None => c.raw.foreach(l => header.append(l).append('\n'))
         case Some(es) if es.nonEmpty =>
           writer.write(es).foreach(l => header.append(l).append('\n'))
-          vdirs ++= es.map(e => vdirOf(e._1))
         case Some(_) => () // every entry removed: the chunk just drops
       }
     }
     sortedAdded.grouped(manifestChunkSize).foreach { chunk =>
       writer.write(chunk.map(f => f -> Option.empty[Long]))
         .foreach(l => header.append(l).append('\n'))
-      vdirs ++= chunk.map(vdirOf)
     }
-    BuiltManifest(header.toString, writer.written.toList, vdirs.toSet)
+    BuiltManifest(header.toString, writer.written.toList)
   }
 
   /** Per-file byte sizes from ONE recursive listing under `d`
@@ -2184,20 +2211,20 @@ class Warehouse(spark: SparkSession, dir: String,
       else Seq(s"$prefix$nm" -> st.getLen)
     }.toMap
 
-  /** Version dirs a manifest references, header-only when the chunked
-    * header carries vdirs lines (every post-round-10 write), else via
-    * the file list — the GC live-set input.
+  /** What a kept manifest (its text `txt`) holds alive: its chunk file
+    * names and the version dirs it references — header-only when the
+    * chunked header carries vdirs lines (every post-round-10 write),
+    * else via the file list. The sweep's live-set input.
     */
-  private def manifestVdirs(fs: FileSystem, root: Path, m: String): Seq[String] = {
-    val mf = new Path(root, m)
-    if (!fs.exists(mf)) return Nil
-    manifestChunks(fs, mf) match {
-      case Some(chunks) if chunks.nonEmpty && chunks.forall(_.vdirs.isDefined) =>
-        chunks.flatMap(_.vdirs.get).distinct
-      case _ => readManifest(fs, mf)
-        .flatMap(_.split("/").headOption).distinct
+  private def manifestRefs(fs: FileSystem, root: Path,
+      txt: String): (Seq[String], Seq[String]) =
+    chunkHeader(txt) match {
+      case Some(chunks) if chunks.forall(_.vdirs.isDefined) =>
+        (chunks.map(_.name), chunks.flatMap(_.vdirs.get))
+      case Some(chunks) => (chunks.map(_.name),
+        chunks.flatMap(ch => readChunk(fs, root, ch.name)).map(vdirOf))
+      case None => (Nil, flatEntries(txt).map(vdirOf))
     }
-  }
 
   /** Remove exactly THIS attempt's chunk files (abort cleanup — never
     * touches another attempt's same-n chunks).
@@ -2427,7 +2454,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // commitInfo. The parent (= the CAS's expectedPrev, "-" for
     // genesis) makes COMMITTED HISTORY walkable: retention classifies
     // crashed-writer orphans by chain membership instead of marker
-    // staleness (see retainedManifests). No new file, no extra RPC:
+    // staleness (see sweep). No new file, no extra RPC:
     // both labels are read by the same header parse every consumer
     // already does.
     val prevLabel = expectedPrev.getOrElse("-")
@@ -2561,21 +2588,6 @@ class Warehouse(spark: SparkSession, dir: String,
     // in-flight shield has done its job (ditto the rebase's claim on n)
     fs.delete(new Path(root, s"_inflight_v$own"), false)
     releaseClaim()
-    // hygiene: clear a STALE leftover marker on the manifest this
-    // commit superseded (its writer crashed between its own pointer
-    // CAS and marker delete — the snapshot is committed history, the
-    // marker is debris). Stale-only: a FRESH marker on this number may
-    // be a racing claimant's live shield (it will lose the manifest
-    // create and release it itself). The prev-chain in
-    // retainedManifests is the correctness fix; this just keeps the
-    // debris from accumulating.
-    expectedPrev.collect { case ManifestRe(pv) =>
-      val pm = new Path(root, s"_inflight_v$pv")
-      try if (fs.exists(pm) && System.currentTimeMillis() -
-          fs.getFileStatus(pm).getModificationTime >= InflightGraceMs)
-        fs.delete(pm, false)
-      catch { case _: java.io.IOException => () }
-    }
     // No post-CAS DV repair (the round-11 repair loop is gone): a
     // lineage's vector is IMMUTABLE once its manifest commits —
     // `deleteRows` is itself a commit that stages a fresh vector
@@ -2586,99 +2598,148 @@ class Warehouse(spark: SparkSession, dir: String,
     // delete's entries for files a racing rewrite had removed were
     // silently dropped by the carry filter (round-12 multi-process
     // fuzz find).
-    // GC: a _vN dir is deletable only when NEITHER the new nor the
-    // previous snapshot references any file in it — AND no live writer
-    // still shields it with a fresh in-flight marker (a stale marker
-    // means a crashed writer; its dir is reaped like any orphan).
-    // Version LIVE-SETS come from the manifests' header vdirs lines —
-    // O(chunks) driver work — never a file-list concat. Manifests
-    // older than the just-superseded one go too (metadata would
-    // otherwise grow one tiny file per publish forever).
-    // Open WAP branches are shielded by their `_BRANCH_` POINTER, not
-    // by marker freshness — the same contract as `vacuumOrphans` ("the
-    // pointer IS the intent record"): a branch outliving the in-flight
-    // grace still survives a main-line publish; only `abandonBranch` /
-    // `promoteBranch` release it. (Without this, a publish could reap
-    // an open branch's manifest + version dir, leaving its pointer
-    // dangling — a state no code path could then clean up.)
-    val branchPinned = branchPointedManifests(fs, root).values.toSet
-    // retention policy (round 12): keep the last `retain_snapshots`
-    // committed manifests (default 2 = current + previous, the
-    // historical behavior) — Iceberg's retain-last shape, extending
-    // time travel and rollback to real history when the table asks
-    // for it. Everything downstream (version-dir live-sets, chunk
-    // ref-counts, DV lineages) is already keyed off keepManifests,
-    // so retention is purely a bigger keep-set.
-    val keepManifests = retainedManifests(fs, root, name, Some(mf.getName)) ++
-      expectedPrev ++ branchPinned
-    val keptLive = (keepManifests - mf.getName).toSeq
-      .filter(m => fs.exists(new Path(root, m)))
-      .flatMap(m => manifestVdirs(fs, root, m))
-    val live = (built.vdirs.toSeq ++ keptLive).collect {
-      case v @ VersionRe(_) => v
-    }.toSet
-    // chunks are REFERENCE-COUNTED across manifests (an incremental
-    // commit reuses a prior manifest's chunks by name): a chunk file
-    // survives exactly while a kept manifest's header names it, or its
-    // number's in-flight marker is fresh (the write-window shield).
-    val referencedChunks = keepManifests.toSeq
-      .filter(m => fs.exists(new Path(root, m)))
-      .flatMap(m => manifestChunks(fs, new Path(root, m)).getOrElse(Nil))
-      .map(_.name).toSet
-    def markerFresh(num: String): Boolean = {
-      val marker = new Path(root, s"_inflight_v$num")
-      try fs.exists(marker) &&
-        System.currentTimeMillis() - fs.getFileStatus(marker).getModificationTime < InflightGraceMs
-      catch { case _: java.io.IOException => false }
+    sweep(fs, root, name, Some(mf.getName), expectedPrev)
+  }
+
+  /** The one snapshot reaper: every commit runs it right after its
+    * pointer CAS (current = its own manifest, `alsoKeep` = the base it
+    * superseded) and `vacuumOrphans` runs it on demand. ONE listing of
+    * the table root gives the branch shields, the committed history and
+    * the deletion candidates. The keep-set is
+    *  - `current`, `alsoKeep` and the retained committed manifests;
+    *  - every manifest an open `_BRANCH_` pointer names: the pointer IS
+    *    the intent record, so a staged snapshot survives however old
+    *    its marker is, until `promoteBranch`/`abandonBranch`.
+    * Each manifest it looks at is read once: for its parent label on
+    * the chain walk and, when kept, for the version dirs and chunk
+    * files it references. Deleted:
+    *  - version dirs no kept manifest references, with their marker;
+    *  - manifests outside the keep-set, and chunk files no kept manifest
+    *    names (chunks are REFERENCE-COUNTED: an incremental commit
+    *    reuses earlier manifests' chunks by name);
+    *  - DV dirs and `_DVPTR_` pointers of lineages outside the keep-set,
+    *    and within a kept lineage any dir its pointer does not name,
+    *    once past the grace (a racer's seconds-old staging survives);
+    *  - stale markers whose dir is gone, or whose manifest is committed
+    *    history (its writer crashed between its CAS and marker delete);
+    *  - branch pointers whose manifest no longer exists.
+    * A fresh in-flight marker shields every entry of its number — a live
+    * writer's dir, chunks, manifest and staged vector (a concurrent
+    * commit stages its vector BEFORE its CAS, while its manifest is not
+    * yet anyone's keep-set; reaping it would resurrect deleted rows).
+    * Returns what it deleted.
+    *
+    * Retention keeps the last `retain_snapshots` COMMITTED manifests
+    * (default 2 = current + previous) in union with those younger than
+    * `retain_ms`. Committed history comes from the PREV-CHAIN: every
+    * commit records the manifest its CAS superseded, so walking parents
+    * back from `current` enumerates it authoritatively — a manifest
+    * whose writer crashed between its CAS and its marker delete keeps
+    * its slot, and a manifest off the walked chain is a crashed writer's
+    * orphan whatever its marker says. Below the oldest walkable member
+    * (pre-label manifests, or a GC'd parent) a manifest counts as
+    * committed unless its marker is stale. Numbers above `current` are
+    * in flight or aborted: only their markers shield them.
+    */
+  private def sweep(fs: FileSystem, root: Path, name: String,
+      current: Option[String], alsoKeep: Option[String]): Seq[String] = {
+    if (!fs.exists(root)) return Nil
+    val listing = fs.listStatus(root).toSeq
+    val names = listing.map(_.getPath.getName).toSet
+    val deleted = scala.collection.mutable.ListBuffer[String]()
+    val branchKeep = names.filter(_.startsWith("_BRANCH_")).flatMap { b =>
+      val m = try Some(readBranchPtr(fs, root, b.stripPrefix("_BRANCH_")))
+        catch { case _: IllegalArgumentException | _: java.io.FileNotFoundException => None }
+      // a pointer whose manifest is gone (pre-shield crash debris) can
+      // never be read or promoted again: it goes instead of shielding
+      val dangling = m.exists(mf => !names.contains(mf) && !fs.exists(new Path(root, mf)))
+      if (dangling) { fs.delete(new Path(root, b), false); deleted += b }
+      m.filterNot(_ => dangling)
     }
-    fs.listStatus(root).foreach { st =>
-      st.getPath.getName match {
-        case v @ VersionRe(num) if st.isDirectory && !live.contains(v) &&
-            !markerFresh(num) =>
+    val fresh = scala.collection.mutable.Map[String, Boolean]()
+    def isFresh(num: String) =
+      fresh.getOrElseUpdate(num, markerStale(fs, root, num).contains(false))
+    val texts = scala.collection.mutable.Map[String, Option[String]]()
+    def text(m: String) = texts.getOrElseUpdate(m,
+      try Some(readSmallFile(fs, new Path(root, m)))
+      catch { case _: java.io.FileNotFoundException => None })
+    val chain = scala.collection.mutable.LinkedHashSet[String]()
+    var genesis = false
+    var walk = current
+    while (walk.isDefined) {
+      val m = walk.get
+      walk = if (!chain.add(m)) None // cycle guard (corrupt labels)
+        else m match {
+          case ManifestRe(_) => text(m).flatMap(headerLabel(_, "prev")) match {
+            case Some("-") => genesis = true; None
+            case Some(p) if names.contains(p) => Some(p)
+            case _ => None
+          }
+          case _ => None
+        }
+    }
+    val committed = current match {
+      case Some(ManifestRe(cv)) =>
+        val floor = if (genesis) 0L
+          else chain.lastOption.collect { case ManifestRe(v) => v.toLong }
+            .getOrElse(cv.toLong + 1)
+        listing.flatMap(st => st.getPath.getName match {
+          case m @ ManifestRe(v) if v.toLong <= cv.toLong && (chain.contains(m) ||
+              v.toLong < floor && !markerStale(fs, root, v).contains(true)) =>
+            Some((v.toLong, m, st.getModificationTime))
+          case _ => None
+        }).sortBy(-_._1)
+      case _ => Nil
+    }
+    val retain = tableProp(name, "retain_snapshots").flatMap(_.toIntOption)
+      .filter(_ >= 2).getOrElse(2)
+    // the manifest's mtime is written seconds before its commit CAS,
+    // so window membership tracks commit time
+    val window = tableProp(name, "retain_ms").flatMap(_.toLongOption).filter(_ > 0)
+      .map(w => committed.filter(c => System.currentTimeMillis() - c._3 <= w))
+    val keep = (committed.take(retain) ++ window.getOrElse(Nil)).map(_._2).toSet ++
+      current ++ alsoKeep ++ branchKeep
+    val refs = keep.toSeq.flatMap(text).map(manifestRefs(fs, root, _))
+    val chunks = refs.flatMap(_._1).toSet
+    val live = refs.flatMap(_._2).toSet
+    def unkept(m: String) = !keep.contains(m) && !isFresh(m.stripPrefix("_manifest_v"))
+    listing.foreach { st =>
+      val nm = st.getPath.getName
+      nm match {
+        case VersionRe(num) if st.isDirectory && !live.contains(nm) && !isFresh(num) =>
           fs.delete(st.getPath, true)
           fs.delete(new Path(root, s"_inflight_v$num"), false)
-        case i @ InflightRe(num) if st.isFile && !markerFresh(num) &&
-            !fs.exists(new Path(root, s"_v$num")) =>
-          fs.delete(st.getPath, false) // stale marker whose dir is gone
-        case m @ ManifestRe(num) if st.isFile && !keepManifests.contains(m) &&
-            !markerFresh(num) =>
-          // a fresh in-flight marker shields the manifest as well as
-          // the version dir: an open WAP branch's staged snapshot
-          // (manifest + data) must survive main-line publishes
+          deleted += nm
+        case InflightRe(num) if st.isFile && pastGrace(st.getModificationTime) &&
+            (!names.contains(s"_v$num") || chain.contains(s"_manifest_v$num")) =>
           fs.delete(st.getPath, false)
-        case c @ MChunkRe(num, _, _) if st.isFile &&
-            !referencedChunks.contains(c) && !markerFresh(num) =>
+          deleted += nm
+        case ManifestRe(num) if st.isFile && !keep.contains(nm) && !isFresh(num) =>
           fs.delete(st.getPath, false)
-        case d @ DvDirRe(m, _) if st.isDirectory && !keepManifests.contains(m) &&
-            !markerFresh(m.stripPrefix("_manifest_v")) =>
-          // dead DV lineage: with carry-forward every commit on a
-          // DV-bearing table stages a fresh vector, so without this
-          // sweep superseded lineages would pile one dir per publish
-          // until a vacuum. Kept lineages (current/previous/branch)
-          // keep their vectors — time travel still merges on read.
-          // The in-flight-marker shield matches the manifest/chunk
-          // cases: a concurrent commit stages its carried vector and
-          // flips _DVPTR_ BEFORE its own CAS, while its manifest is
-          // not yet anyone's keepManifests — reaping that staged dir
-          // in the window would let the racer commit a DV-less
-          // lineage and silently resurrect deleted rows.
+          deleted += nm
+        case MChunkRe(num, _, _) if st.isFile && !chunks.contains(nm) && !isFresh(num) =>
+          fs.delete(st.getPath, false)
+          deleted += nm
+        case DvDirRe(m, _) if st.isDirectory && (unkept(m) ||
+            pastGrace(st.getModificationTime) &&
+              !pointerStore.read(fs, root, dvPtrName(m)).contains(nm)) =>
           fs.delete(st.getPath, true)
-        case p @ DvPtrRe(m) if st.isFile && !keepManifests.contains(m) &&
-            !markerFresh(m.stripPrefix("_manifest_v")) =>
-          pointerStore.delete(fs, root, p)
-        case f =>
-          // stores with PRIVATE pointer encodings (gen ladders): ask
-          // the store which logical pointer a file belongs to, and
-          // reap dead DV lineages' pointers through the store — the
-          // literal DvPtrRe case above never matches their files
-          pointerStore.ownedPointer(f) match {
-            case Some(p @ DvPtrRe(m)) if !keepManifests.contains(m) &&
-                !markerFresh(m.stripPrefix("_manifest_v")) =>
+          deleted += nm
+        case DvPtrRe(m) if st.isFile && unkept(m) =>
+          pointerStore.delete(fs, root, nm)
+          deleted += nm
+        case _ =>
+          // stores with PRIVATE pointer encodings (gen ladders): ask the
+          // store which logical pointer a file belongs to
+          pointerStore.ownedPointer(nm) match {
+            case Some(p @ DvPtrRe(m)) if !deleted.contains(p) && unkept(m) =>
               pointerStore.delete(fs, root, p)
+              deleted += p
             case _ => ()
           }
       }
     }
+    deleted.toList
   }
 
   // ------------------------------------------------------------------
@@ -3240,117 +3301,16 @@ class Warehouse(spark: SparkSession, dir: String,
 
   /** Reap orphans WITHOUT waiting for the next commit — the Iceberg
     * remove-orphan-files job as a maintenance op. A table that stops
-    * receiving writes keeps its last crashed-writer debris forever
-    * (commit-time GC only runs on commit); this applies the same rules
-    * on demand: delete version dirs referenced by neither the current
-    * nor the previous manifest and not shielded by a fresh in-flight
-    * marker, stale markers whose dir is gone, and manifests below the
-    * previous one. Time travel to v_current−1 survives (current +
-    * previous stay whole). Returns what was deleted, for the
-    * operator's log.
+    * receiving writes keeps its last crashed-writer debris until a
+    * commit runs `sweep`; this runs the same sweep now, against the
+    * observed current snapshot: retained history, open branches and
+    * fresh in-flight work survive, everything else the sweep's rules
+    * name goes. Returns what was deleted, for the operator's log.
     */
   def vacuumOrphans(name: String): Seq[String] = {
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
-    val current = currentManifest(fs, root)
-    // manifests pinned by an open WAP branch: never the "previous
-    // snapshot" (a staged branch is not history) and never deletable
-    // while its pointer lives — a branch outliving the in-flight
-    // grace still survives vacuum (the pointer IS the intent record;
-    // commit-time GC honors the same shield). A pointer whose manifest
-    // no longer exists is debris from a pre-shield crash: it can never
-    // be read or promoted again, so vacuum deletes the dangling
-    // pointer instead of letting it poison every later shield read.
-    val danglingPtrs = scala.collection.mutable.ListBuffer[String]()
-    val branchMfs = branchPointedManifests(fs, root).filter {
-      case (ptr, m) =>
-        val ok = fs.exists(new Path(root, m))
-        if (!ok) { fs.delete(new Path(root, ptr), false); danglingPtrs += ptr }
-        ok
-    }.values.toSet
-    // retention-aware: the last `retain_snapshots` committed manifests
-    // (default 2) — in-flight commits above the current number are
-    // shielded by their markers, not by this keep-set
-    val keepManifests =
-      retainedManifests(fs, root, name, current) ++ branchMfs
-    // chunk files the kept manifests actually reference — anything
-    // else under a kept manifest number is a crashed attempt's orphan
-    val referencedChunks = keepManifests.toSeq
-      .flatMap(m => manifestChunks(fs, new Path(root, m)).getOrElse(Nil))
-      .map(_.name).toSet
-    val live = keepManifests.toSeq
-      .flatMap(m => manifestVdirs(fs, root, m))
-      .collect { case v @ VersionRe(_) => v }
-      .toSet
-    def markerFresh(num: String): Boolean = {
-      val marker = new Path(root, s"_inflight_v$num")
-      try fs.exists(marker) &&
-        System.currentTimeMillis() - fs.getFileStatus(marker).getModificationTime < InflightGraceMs
-      catch { case _: java.io.IOException => false }
-    }
-    val deleted = scala.collection.mutable.ListBuffer[String]()
-    if (fs.exists(root)) fs.listStatus(root).foreach { st =>
-      st.getPath.getName match {
-        case v @ VersionRe(num) if st.isDirectory && !live.contains(v) &&
-            !markerFresh(num) =>
-          fs.delete(st.getPath, true)
-          fs.delete(new Path(root, s"_inflight_v$num"), false)
-          deleted += v
-        case i @ InflightRe(num) if st.isFile && !markerFresh(num) &&
-            !fs.exists(new Path(root, s"_v$num")) =>
-          fs.delete(st.getPath, false)
-          deleted += i
-        case m @ ManifestRe(num) if st.isFile && !keepManifests.contains(m) &&
-            !markerFresh(num) =>
-          // marker shield mirrors commit-time GC: with TWO commits in
-          // flight only the highest-numbered rides the "previous"
-          // keep, so the other's just-written (not-yet-current)
-          // manifest needs its in-flight marker to survive a
-          // concurrent vacuum
-          fs.delete(st.getPath, false)
-          deleted += m
-        case c @ MChunkRe(num, _, _) if st.isFile && !markerFresh(num) &&
-            !referencedChunks.contains(c) =>
-          // pure REFERENCE-COUNT: incremental commits reuse chunks
-          // across manifest numbers, so a chunk lives exactly while
-          // some kept manifest's header names it (the number only
-          // scopes the in-flight write shield). Covers dead manifests'
-          // chunks AND crash-orphaned attempts under live numbers
-          // (unique uuid tags — a kept header names exactly its own).
-          fs.delete(st.getPath, false)
-          deleted += c
-        case d @ DvDirRe(m, _) if st.isDirectory &&
-            ((!keepManifests.contains(m) &&
-               !markerFresh(m.stripPrefix("_manifest_v"))) ||
-              (!pointerStore.read(fs, root, dvPtrName(m)).contains(d) &&
-               System.currentTimeMillis() - st.getModificationTime > DvOrphanGraceMs)) =>
-          // dead lineage (manifest reaped ⇒ read can never resolve
-          // it again) goes immediately — unless a fresh in-flight
-          // marker says the lineage is a concurrent commit's staged
-          // (not-yet-current) vector; within a LIVE lineage only the
-          // pointed vector is load-bearing — superseded/orphan dirs go
-          // once past the same age gate deleteRows' own GC uses
-          fs.delete(st.getPath, true)
-          deleted += d
-        case p @ DvPtrRe(m) if st.isFile && !keepManifests.contains(m) &&
-            !markerFresh(m.stripPrefix("_manifest_v")) =>
-          // the reaped manifest's `_DVPTR_` pointer goes with its
-          // lineage — deleteRows' own GC only tends its LIVE manifest,
-          // so without this sweep dead pointers accumulate forever
-          pointerStore.delete(fs, root, p)
-          deleted += p
-        case f =>
-          // private pointer encodings (see commitSnapshot's sweep)
-          pointerStore.ownedPointer(f) match {
-            case Some(p @ DvPtrRe(m)) if !keepManifests.contains(m) &&
-                !markerFresh(m.stripPrefix("_manifest_v")) =>
-              pointerStore.delete(fs, root, p)
-              if (!deleted.contains(p)) deleted += p
-            case _ => ()
-          }
-      }
-    }
-    (deleted ++ danglingPtrs).toList
+    sweep(fs, root, name, currentManifest(fs, root), None)
   }
 
   /** Small-file / layout health of the current snapshot, answered from
@@ -3418,8 +3378,8 @@ class Warehouse(spark: SparkSession, dir: String,
     * streaming-append table needs (each micro-batch publish adds small
     * files the scan pays for forever; see tableHealth's doc). When the
     * current snapshot holds more than `smallFileLimit` files under
-    * `smallBytes`, compact to ~`targetFileBytes`-sized files and
-    * vacuum the orphans the compaction superseded; otherwise touch
+    * `smallBytes`, compact to ~`targetFileBytes`-sized files (the
+    * compaction's own commit sweeps what it superseded); otherwise touch
     * nothing (idempotent — a second run right after a compaction is a
     * metadata-only no-op, so the scheduler can fire it blindly).
     * Returns (health before, whether compaction ran, health after)
@@ -3446,7 +3406,6 @@ class Warehouse(spark: SparkSession, dir: String,
         (before.totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
       compact(name, nFiles)
       covered.foreach { case (c, p) => buildNdv(name, c, p) }
-      vacuumOrphans(name)
     }
     (before, trigger, tableHealth(name, smallBytes))
   }
@@ -3471,19 +3430,6 @@ class Warehouse(spark: SparkSession, dir: String,
       expectedBase = Some(mf), op = "optimize")
   }
 
-  /** Write `df` into a fresh `_vN` dir and return (n, its files).
-    *
-    * Commit concurrency contract: OPTIMISTIC — racing writers are
-    * allowed, exactly one wins. Two writers that allocate the same n
-    * fail here (ErrorIfExists on the version dir) or at the manifest's
-    * no-overwrite create; two writers with different n are serialized
-    * by commitSnapshot's compare-and-set on `_CURRENT` — the loser
-    * aborts with ConcurrentModificationException, cleans up its
-    * orphans, and can retry against the fresh snapshot. This is the
-    * same shape Delta/Iceberg use (write data blind, validate at the
-    * pointer swap), minus their semantic conflict analysis: ANY
-    * intervening commit aborts, even one touching disjoint partitions.
-    */
   /** Claim a fresh version number by creating its in-flight marker
     * create-no-overwrite: the marker is both the allocation lock (two
     * writers can no longer collide on the same _vN) and the GC shield
@@ -3781,16 +3727,7 @@ class Warehouse(spark: SparkSession, dir: String,
     s"_dv_${mfName}_${java.util.UUID.randomUUID().toString.take(8)}"
   private val DvDirRe = "_dv_(_manifest_v\\d+)_([0-9a-f]{8})".r
   private val DvPtrRe = "_DVPTR_(_manifest_v\\d+)".r
-  private val DvOrphanGraceMs: Long = 15L * 60 * 1000
 
-  /** DV entries of `d` that survive a delta's removals — the same
-    * file-drop rule `buildManifest` applies to the base list
-    * (removedPartitions match on the partition-relative dir,
-    * removedFiles on the full path), expressed over the vector's
-    * `_file` column. Entries of removed files are dropped WITH their
-    * files: those partitions are rewritten from a DV-subtracted scan,
-    * so the delete is materialized there, not carried.
-    */
   /** STRICT vector load: a pointer names this dir, so deletes exist —
     * a vanished OR EMPTY dir is never "no deletes", it's a reader
     * racing snapshot GC (`fs.delete` recurses child-first, so a racer
@@ -3817,6 +3754,14 @@ class Warehouse(spark: SparkSession, dir: String,
       .parquet(parts.map(_.getPath.toString): _*)
   }
 
+  /** DV entries of `d` that survive a delta's removals — the same
+    * file-drop rule `buildManifest` applies to the base list
+    * (removedPartitions match on the partition-relative dir,
+    * removedFiles on the full path), expressed over the vector's
+    * `_file` column. Entries of removed files are dropped WITH their
+    * files: those partitions are rewritten from a DV-subtracted scan,
+    * so the delete is materialized there, not carried.
+    */
   private def dvSurvivors(d: Path, removedPartitions: Set[String],
       removedFiles: Set[String]): DataFrame = {
     val root = d.getParent
@@ -3887,6 +3832,20 @@ class Warehouse(spark: SparkSession, dir: String,
     }
 
 
+  /** Test seam: fires after `deleteRows` resolves its target manifest
+    * and expected vector, before it stages — the window a concurrent
+    * commit's carry-forward can race (LayoutSpec injects one here and
+    * pins the loud failure).
+    */
+  private[graft] var dvTestHook: String => Unit = _ => ()
+
+  /** Test seam: fires after `upsert` captures its base snapshot,
+    * before the merge reads it — the read-modify-write window whose
+    * strictness the captured-base CAS enforces (LayoutSpec injects a
+    * commit here and pins the loud abort).
+    */
+  private[graft] var upsertTestHook: String => Unit = _ => ()
+
   /** Row-level DELETE without rewriting a single data file (the
     * Delta/Iceberg-v2 deletion-vector shape): rows matching `cond`
     * are recorded as (file, row-position) pairs in a sidecar, and
@@ -3904,20 +3863,6 @@ class Warehouse(spark: SparkSession, dir: String,
     * lineage (the compaction that does so is `compact` over the
     * MOR read).
     */
-  /** Test seam: fires after `deleteRows` resolves its target manifest
-    * and expected vector, before it stages — the window a concurrent
-    * commit's carry-forward can race (LayoutSpec injects one here and
-    * pins the loud failure).
-    */
-  private[graft] var dvTestHook: String => Unit = _ => ()
-
-  /** Test seam: fires after `upsert` captures its base snapshot,
-    * before the merge reads it — the read-modify-write window whose
-    * strictness the captured-base CAS enforces (LayoutSpec injects a
-    * commit here and pins the loud abort).
-    */
-  private[graft] var upsertTestHook: String => Unit = _ => ()
-
   def deleteRows(name: String, cond: org.apache.spark.sql.Column): Long =
     deleteRowsCore(name, _.filter(cond))
 
@@ -3977,6 +3922,13 @@ class Warehouse(spark: SparkSession, dir: String,
       .map(d => Warehouse.footerRowCount(fs, d)).getOrElse(0L)
   }
 
+  /** Test seam: fires after `updateRows` captures its base snapshot,
+    * before it scans — the read-modify-write window whose strictness
+    * the captured-base CAS enforces (the spec injects a commit here
+    * and pins the loud abort).
+    */
+  private[graft] var updateTestHook: String => Unit = _ => ()
+
   /** Row-level UPDATE as ONE atomic commit (the SQL `UPDATE ... SET
     * ... WHERE ...` surface): the live rows matching `cond` are
     * rewritten with `assignments` applied into a NEW version dir,
@@ -3993,13 +3945,6 @@ class Warehouse(spark: SparkSession, dir: String,
     * explicitly, so the new file's layout placement is free to
     * differ).
     */
-  /** Test seam: fires after `updateRows` captures its base snapshot,
-    * before it scans — the read-modify-write window whose strictness
-    * the captured-base CAS enforces (the spec injects a commit here
-    * and pins the loud abort).
-    */
-  private[graft] var updateTestHook: String => Unit = _ => ()
-
   def updateRows(name: String, cond: org.apache.spark.sql.Column,
       assignments: Map[String, org.apache.spark.sql.Column]): Long =
     updateRowsCore(name, _.filter(cond), assignments)
@@ -4390,103 +4335,6 @@ class Warehouse(spark: SparkSession, dir: String,
   private def branchPtrPath(root: Path, branch: String) =
     new Path(root, s"_BRANCH_$branch")
 
-  /** Every open branch pointer under `root`: {pointer file name →
-    * manifest name it stages}. The shared shield set — commit-time GC,
-    * `vacuumOrphans`, `history`, and `rollback` all consult it so a
-    * staged snapshot is never reaped, listed as history, or restored
-    * as if committed.
-    */
-  /** The manifests the table's retention policy keeps: the last
-    * `retain_snapshots` COMMITTED manifests (numbered ≤ current —
-    * higher numbers are in-flight or aborted debris, separately
-    * shielded by marker freshness), newest first, default 2
-    * (current + previous). `setSnapshotRetention` raises it; both GC
-    * sweeps and the restore/read guards consume this one definition.
-    */
-  private def retainedManifests(fs: FileSystem, root: Path, name: String,
-      current: Option[String]): Set[String] = {
-    val n = tableProp(name, "retain_snapshots").flatMap(_.toIntOption)
-      .filter(_ >= 2).getOrElse(2)
-    val windowMs = tableProp(name, "retain_ms").flatMap(_.toLongOption)
-      .filter(_ > 0)
-    current.collect { case ManifestRe(v) => v.toLong } match {
-      case None => current.toSet
-      case Some(c) =>
-        if (!fs.exists(root)) return current.toSet
-        val now = System.currentTimeMillis()
-        // COMMITTED history, classified by the PREV-CHAIN where labels
-        // exist: every commit since the label format records the
-        // manifest its CAS superseded, so walking parents back from
-        // current enumerates committed snapshots authoritatively — a
-        // committed manifest whose writer crashed BETWEEN its pointer
-        // CAS and marker delete keeps its retention slot even though
-        // its in-flight marker is permanently stale (ADVICE r13: the
-        // marker heuristic alone reaped exactly those once
-        // superseded, silently shrinking real retained history below
-        // `retain_snapshots`). Committed versions are totally ordered
-        // by the CAS, so within the walked range chain membership IS
-        // commit status: an on-disk manifest off the chain there is a
-        // crashed writer's orphan regardless of its marker. Below the
-        // oldest walkable chain member (pre-label manifests, or a
-        // GC'd parent) the marker heuristic still applies. Cost: one
-        // ≤4 KiB header read per retained manifest, only on GC paths.
-        val chain = scala.collection.mutable.LinkedHashSet[String]()
-        var walk: Option[String] = current
-        var genesis = false
-        while (walk.isDefined) {
-          val m = walk.get
-          if (!chain.add(m)) walk = None // cycle guard (corrupt labels)
-          else walk = m match {
-            case ManifestRe(v) => commitParent(name, v.toLong) match {
-              case Some("-") => genesis = true; None
-              case Some(p) if fs.exists(new Path(root, p)) => Some(p)
-              case _ => None
-            }
-            case _ => None
-          }
-        }
-        val chainFloor: Long =
-          if (genesis) 0L
-          else chain.lastOption
-            .collect { case ManifestRe(v) => v.toLong }
-            .getOrElse(c + 1)
-        // marker heuristic, for manifests below the walkable chain: a
-        // manifest whose marker is still present AND stale is a
-        // crashed writer's orphan (its number lost to a racing
-        // committer, not yet vacuumed). A FRESH marker is a live
-        // commit window and is kept: over-keeping for the grace beats
-        // reaping a just-committed snapshot whose marker delete
-        // hasn't landed.
-        def orphaned(num: Long): Boolean = {
-          val marker = new Path(root, s"_inflight_v$num")
-          try fs.exists(marker) && now -
-            fs.getFileStatus(marker).getModificationTime >= InflightGraceMs
-          catch { case _: java.io.IOException => false }
-        }
-        val committed = fs.listStatus(root)
-          .flatMap(st => st.getPath.getName match {
-            case m @ ManifestRe(v) if v.toLong <= c =>
-              Some((v.toLong, m, st.getModificationTime))
-            case _ => None
-          })
-          .filter { case (v, m, _) =>
-            current.contains(m) || chain.contains(m) ||
-              (v < chainFloor && !orphaned(v))
-          }
-          .sortBy(-_._1).toSeq
-        // keep-set = newest `retain_snapshots` ∪ the `retain_ms`
-        // wall-clock window (union composes both guarantees): the
-        // count knob bounds metadata, the time knob is the contract
-        // ops teams actually state ("time travel must work for 24 h").
-        // Age is the manifest file's mtime — written seconds before
-        // its commit CAS, so window membership tracks commit time.
-        val byTime = windowMs.map(w =>
-          committed.filter { case (_, _, t) => now - t <= w })
-          .getOrElse(Nil)
-        (committed.take(n) ++ byTime).map(_._2).toSet
-    }
-  }
-
   /** Keep the last `n` snapshots alive through GC (default 2 =
     * current + previous): every retained version stays readable via
     * `readVersion` and restorable via `rollback`, its deletion-vector
@@ -4510,6 +4358,11 @@ class Warehouse(spark: SparkSession, dir: String,
   def setSnapshotRetentionMs(name: String, ms: Long): Unit =
     setTableProp(name, "retain_ms", if (ms > 0) ms.toString else "")
 
+  /** Every open branch pointer under `root`: {pointer file name →
+    * manifest name it stages}. `history` and `rollback` consult it so
+    * a staged snapshot is never listed as history or restored as if
+    * committed; `sweep` reads the same pointers from its own listing.
+    */
   private def branchPointedManifests(fs: FileSystem,
       root: Path): Map[String, String] =
     if (!fs.exists(root)) Map.empty
@@ -4552,11 +4405,11 @@ class Warehouse(spark: SparkSession, dir: String,
     * publish pattern): a full version write + manifest, but the
     * `_CURRENT` pointer is untouched — table readers see NOTHING
     * until `promoteBranch`. The `_BRANCH_` POINTER is the GC shield:
-    * both commit-time GC and `vacuumOrphans` keep a pointed manifest
-    * and its version dir alive for as long as the pointer exists,
-    * however old — only `promoteBranch`/`abandonBranch` release it
-    * (the staged version's in-flight marker is also kept as a
-    * belt-and-braces shield for the write window itself). The branch
+    * `sweep` (every commit's, and `vacuumOrphans`) keeps a pointed
+    * manifest and its version dir alive for as long as the pointer
+    * exists, however old — only `promoteBranch`/`abandonBranch`
+    * release it (the staged version's in-flight marker also shields
+    * the write window itself). The branch
     * pointer is last-write-wins: one owner per branch name is the
     * contract (an audit gate is single-writer by construction).
     * Branching requires an existing current snapshot to fork from.
@@ -4628,6 +4481,19 @@ class Warehouse(spark: SparkSession, dir: String,
     fs.delete(branchPtrPath(root, branch), false)
   }
 
+  /** Write `df` into a fresh `_vN` dir and return (n, its files).
+    *
+    * Commit concurrency contract: OPTIMISTIC — racing writers are
+    * allowed, exactly one wins. Two writers that allocate the same n
+    * fail here (ErrorIfExists on the version dir) or at the manifest's
+    * no-overwrite create; two writers with different n are serialized
+    * by commitSnapshot's compare-and-set on `_CURRENT` — the loser
+    * aborts with ConcurrentModificationException, cleans up its
+    * orphans, and can retry against the fresh snapshot. This is the
+    * same shape Delta/Iceberg use (write data blind, validate at the
+    * pointer swap), minus their semantic conflict analysis: ANY
+    * intervening commit aborts, even one touching disjoint partitions.
+    */
   private def writeVersion(name: String, df0: DataFrame,
       partitionCols: Seq[String]): (Long, Seq[String]) = {
     val df = constraintGuard(name, df0)

@@ -6,8 +6,8 @@
 #
 # Run this before ANY end-of-round / milestone commit:
 #   tools/compile_guard.sh && git commit ...
-# Exit 0 = no stray session builder, thread pool or sidecar file name
-# in main code,
+# Exit 0 = no stray session builder, thread pool, sidecar file name or
+# in-flight grace check in main code,
 # `sbt compile` (main + test sources) is green and the benchmark harness
 # (perfbench/build.py: src/main compiled together with perfbench/src)
 # builds; nonzero otherwise, with the offending lines or the tail of the
@@ -52,6 +52,16 @@ sidecars=$(code_lines '"_stats|"_rows|_stats_p|_rows_p' \
 if [ -n "$sidecars" ]; then
   echo "compile_guard: RED — stats sidecar file named outside FileStats.scala (go through FileStats):" >&2
   echo "$sidecars" >&2
+  exit 1
+fi
+# One marker-age rule: the in-flight grace is named only by its
+# definition and the one age helper (`pastGrace` in Warehouse.scala),
+# which the snapshot sweep's marker, retention and DV-dir checks all
+# go through.
+graces=$(code_lines 'InflightGraceMs')
+if [ "$(printf '%s' "$graces" | grep -c .)" -gt 2 ]; then
+  echo "compile_guard: RED — InflightGraceMs named outside its definition and pastGrace (age checks go through pastGrace):" >&2
+  echo "$graces" >&2
   exit 1
 fi
 log=$(mktemp /tmp/compile_guard.XXXXXX.log)
