@@ -179,7 +179,8 @@ object ScaleProbe {
     *    rule's per-novel-predicate cost, expected O(chunks touched)
     *    via the chunk-header skip, NOT O(files);
     *  - `prune_wide`: a range spanning everything — the worst case,
-    *    O(files) sidecar sweep (same cost readSkipping always paid);
+    *    O(files) sidecar sweep (the same `prune` every pruned read
+    *    runs);
     *  - `enroll`: the absolute-path set a read() registration builds —
     *    the rule's eager per-read overhead, O(files) string work that
     *    must stay ≪ the snapshot resolution the read already does;

@@ -285,7 +285,7 @@ object NativeExprs {
   /** Bucket id of a string against sorted boundaries in unsigned byte
     * order (see SortedBucketStrExpr) — lets ZOrder.cluster rank string
     * columns (url_host, lang) consistently with the footer-stats order
-    * readSkipping prunes by.
+    * the warehouse's `prune` compares by.
     */
   def sortedBucketStr(spark: SparkSession, v: Column, bounds: Array[String]): Column = {
     register(spark)

@@ -11,10 +11,11 @@ import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, LogicalRelation, PartitionDirectory}
 import org.apache.spark.sql.types._
 
-/** Automatic predicate-driven data skipping — the missing half of the
-  * warehouse's pruning story. `readSkipping`/`readEquals` prune files
-  * when the CALLER names the predicate up front; this module prunes
-  * when the predicate arrives the way real queries write it:
+/** Automatic predicate-driven data skipping. The warehouse has ONE
+  * file pruner, `Warehouse.prune`, driven by a [[Pred]]: the named-
+  * predicate reads (`readSkipping`, `readEquals`, `readSkippingIsNull`)
+  * reach it when the CALLER names the predicate up front; this module
+  * reaches it when the predicate arrives the way real queries write it:
   *
   * {{{ wh.read("t").where($"k" between (10, 20)) }}}
   * {{{ spark.sql("SELECT ... FROM t WHERE k IN (3, 7)") }}}
@@ -26,24 +27,24 @@ import org.apache.spark.sql.types._
   * lazily through `spark.experimental.extraOptimizations` — matches
   * `Filter` directly above a registered scan (the optimized-plan
   * shape after Catalyst's own pushdown), extracts the supported
-  * conjuncts (range / equality / IN over plain int, float, double,
-  * string attributes — exactly the types the footer-stat sidecars
-  * cover), asks the warehouse which files can match (chunk-header
-  * skip → footer min/max → per-column bloom, all against the
-  * manifest version the read resolved), and swaps the relation's
-  * `FileIndex` for a [[PrunedFileIndex]] restricted to the
-  * survivors.
+  * conjuncts as [[Pred]]s (range / IN / IS [NOT] NULL / single-column
+  * OR over the types the stat sidecars cover), runs each through the
+  * same `prune` (chunk-header skip, then partition paths, footer
+  * min/max, blooms and null counts per file, all against the manifest
+  * version the read resolved), intersects the survivors, and swaps
+  * the relation's `FileIndex` for a [[PrunedFileIndex]] restricted to
+  * them.
   *
   * Correctness boundaries, each load-bearing:
   *  - the `Filter` stays in the plan — stats pruning is a fast path,
-  *    never the row-level truth (same residual discipline as
-  *    `readSkipping`, Warehouse.scala);
+  *    never the row-level truth (the residual discipline of the
+  *    warehouse's pruned read);
   *  - the relation's schema/output attributes are UNTOUCHED: the
   *    wrapper delegates `partitionSchema` to the original index, so
-  *    the hive partition type-flip trap `readSkipping` guards against
-  *    (a pruned subset inferring a different partition type than the
-  *    full table) cannot arise — inference already happened over the
-  *    full file set;
+  *    the hive partition type-flip trap the pruned read's type guard
+  *    catches (a pruned subset inferring a different partition type
+  *    than the full table) cannot arise — inference already happened
+  *    over the full file set;
   *  - the hook is pinned to the manifest the read resolved, so a
   *    commit racing optimization can never pair one snapshot's file
   *    list with another's stats;
@@ -57,7 +58,7 @@ import org.apache.spark.sql.types._
   * At 100 TB this is the difference between "the engine CAN skip"
   * and "the engine DOES skip": a dashboard's `WHERE day = ...` over
   * a range-clustered petabyte table plans a handful of files without
-  * the query author knowing `readSkipping` exists.
+  * the query author knowing the named-predicate reads exist.
   */
 object AutoSkip {
 

@@ -61,7 +61,8 @@ import scala.jdk.CollectionConverters._
   * files. Parquet may truncate binary min/max (the truncated min is
   * still a lower bound, the truncated max still an upper bound), so
   * pruning on truncated stats remains safe, never exact — exactness
-  * comes from the residual predicate `readSkipping` applies on top.
+  * comes from the residual predicate every pruned read applies on top
+  * of the warehouse's one `prune`.
   */
 object FileStats {
 

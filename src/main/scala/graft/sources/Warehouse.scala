@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.plans.AutoSkip.{InPred, NullPred, OrPred, Pred, RangePred}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
@@ -230,10 +231,12 @@ class Warehouse(spark: SparkSession, dir: String,
   //    answer from the header alone — O(chunks), not O(files), driver
   //    work on a 10⁶-file table — and `tableHealth` from the chunk
   //    entries with zero per-file stat RPCs;
-  //  - `pruneFiles`/`pruneFilesEquals`/`readSkippingIsNull` drop whole
-  //    chunks whose merged stats exclude the range BEFORE opening them
-  //    — a narrow range on a clustered layout parses the matching
-  //    chunk(s) only (LayoutSpec counts the opens via `chunkOpens`);
+  //  - `prune`, the one file pruner behind every pruned read, the
+  //    named-predicate APIs and the auto-skip rules, drops whole chunks
+  //    whose merged stats or null sums exclude the predicate BEFORE
+  //    opening them — a narrow range on a clustered layout parses the
+  //    matching chunk(s) only (LayoutSpec counts the opens via
+  //    `chunkOpens`);
   //  - full-list consumers (resolveSnapshot, GC live-set, fsck, time
   //    travel) concat the chunks through the same `readManifest` call
   //    they always used — O(files) exactly where reading all data is
@@ -678,12 +681,7 @@ class Warehouse(spark: SparkSession, dir: String,
       // IO-first ordering as a per-read tax on serve-heavy queries.
       def partitionGroups(c: String): Option[Seq[(Option[String], Long)]] = {
         val segs: Seq[Option[Option[String]]] = files.map { f =>
-          f.split('/').collectFirst {
-            case seg if seg.startsWith(c + "=") => seg.substring(c.length + 1)
-          }.flatMap { rawEsc =>
-            if (rawEsc == "__HIVE_DEFAULT_PARTITION__") Some(None)
-            else unescapePathValue(rawEsc).map(v => Some(v))
-          }
+          hiveSeg(f, c).flatMap(s => if (s.isNull) Some(None) else s.value.map(Some(_)))
         }
         if (segs.isEmpty || segs.exists(_.isEmpty)) return None
         perFileRows.flatMap { pf =>
@@ -731,86 +729,227 @@ class Warehouse(spark: SparkSession, dir: String,
   }
 
   /** Intersection prune over several conjuncts — the auto-skip rule's
-    * entry point (graft.plans.AutoSkip). Each conjunct reuses the
-    * single-column prune machinery (chunk-header skip, footer stats,
-    * hive partition paths; blooms for the equality form) against the
-    * SAME manifest the read resolved. An `OrPred` unions its branch
-    * prunes — a file survives if ANY branch may contain it. Returns
-    * kept files relative to the table root; None when nothing actually
-    * NARROWED (no conjunct evaluable, or every file survived every
-    * probe) so the rule no-ops instead of wrapping the scan in a
-    * full-list PrunedFileIndex and memoizing a full path set. A
-    * conjunct over a column with no stats keeps everything for that
-    * conjunct — intersection only ever narrows on proof.
+    * entry point (graft.plans.AutoSkip): every conjunct goes through
+    * the one `prune` against the SAME manifest the read resolved.
+    * Returns kept files relative to the table root; None when nothing
+    * actually NARROWED (every file survived every conjunct) so the rule
+    * no-ops instead of wrapping the scan in a full-list
+    * PrunedFileIndex and memoizing a full path set. A conjunct over a
+    * column with no stats keeps everything for that conjunct —
+    * intersection only ever narrows on proof.
     */
   private[graft] def pruneForPreds(name: String, mf: Option[String],
-      preds: Seq[graft.plans.AutoSkip.Pred]): Option[Seq[String]] = {
+      preds: Seq[Pred]): Option[Seq[String]] = {
     if (preds.isEmpty) return None
-    def one(p: graft.plans.AutoSkip.Pred): (Seq[String], Int) = p match {
-      case graft.plans.AutoSkip.RangePred(c, lo, hi) =>
-        pruneFilesFrom(name, mf, c, lo, hi)
-      case graft.plans.AutoSkip.InPred(c, vs) =>
-        pruneFilesEqualsFrom(name, mf, c, vs)
-      case graft.plans.AutoSkip.NullPred(c, isNull) =>
-        pruneFilesIsNullFrom(name, mf, c, isNull)
-      case graft.plans.AutoSkip.OrPred(_, parts) =>
-        val rs = parts.map(one)
-        // union: dropped only when EVERY branch proves the file empty
-        (rs.flatMap(_._1).distinct, rs.map(_._2).max)
-    }
-    var kept: Option[Seq[String]] = None
-    var total = 0
-    preds.foreach { p =>
-      val (k, t) = one(p)
-      total = math.max(total, t)
-      kept = Some(kept match {
-        case None       => k
-        case Some(prev) => val s = k.toSet; prev.filter(s)
-      })
-    }
-    kept.filter(_.size < total)
+    val rs = preds.map(prune(name, mf, _))
+    val kept = rs.map(_._1).reduce { (prev, k) => val s = k.toSet; prev.filter(s) }
+    Some(kept).filter(_.size < rs.map(_._2).max)
   }
 
-  /** File-level data skipping: the current snapshot's
-    * file list filtered to files whose footer min/max for `column` can
-    * overlap [lower, upper] (either bound open). Files without stats —
-    * legacy layouts, pre-sidecar snapshots, nested/unsupported column
-    * types — are always KEPT: pruning only ever removes files proven
-    * empty for the range. Returns (surviving files, total files) so
-    * callers (and tests) can see the skip rate.
+  /** File-level data skipping: the current snapshot's file list
+    * filtered to files whose partition path and footer min/max for
+    * `column` can overlap [lower, upper] (either bound open). Returns
+    * (surviving files, total files) so callers (and tests) can see the
+    * skip rate.
     */
   def pruneFiles(name: String, column: String, lower: Option[Any],
-      upper: Option[Any]): (Seq[String], Int) = {
-    val root = new Path(tablePath(name))
-    pruneFilesFrom(name, currentManifest(fileSystem(root), root),
-      column, lower, upper)
-  }
+      upper: Option[Any]): (Seq[String], Int) =
+    prune(name, currentSnapshotId(name), RangePred(column, lower, upper))
 
-  /** `pruneFiles` against an EXPLICIT manifest — the snapshot-
-    * consistency seam: `readSkipping` resolves the manifest ONCE and
-    * routes prune, type guard, and DV subtraction through the same
-    * resolution, so a commit racing the read can never pair one
-    * snapshot's file list with another's deletion vector or schema.
+  /** Point-lookup file pruning: the current snapshot's files that may
+    * contain AT LEAST ONE of `values` in `column` — hive partition-path
+    * values, footer min/max, and the Bloom sidecars when `buildBloom`
+    * has run.
     */
-  private def pruneFilesFrom(name: String, mf: Option[String],
-      column: String, lower: Option[Any],
-      upper: Option[Any]): (Seq[String], Int) = {
+  def pruneFilesEquals(name: String, column: String,
+      values: Seq[Any]): (Seq[String], Int) =
+    prune(name, currentSnapshotId(name), InPred(column, values))
+
+  /** The one file pruner: the files of snapshot `mf` that may hold a
+    * row matching `pred`, and the snapshot's total file count.
+    *
+    *  1. The manifest's chunks. A flat manifest (or a legacy listing)
+    *     is one chunk with no header metadata; reading it is not a
+    *     chunk open.
+    *  2. Per chunk, `narrow` tests the header and keeps the part of
+    *     `pred` that can still match there; a chunk left with nothing
+    *     is never opened.
+    *  3. Per opened file, `mayHold` tests what survived: the hive
+    *     partition value and the footer stat for a range, the same per
+    *     value plus the bloom for IN, the row sidecar's null count for
+    *     IS [NOT] NULL, any branch for OR.
+    *
+    * Files without metadata (legacy root files, pre-sidecar versions,
+    * unsupported types) are always kept: pruning only removes files
+    * proven empty, and the caller's residual predicate stays the row
+    * truth. `mf` is the caller's single resolution, so a commit racing
+    * the read can never pair one snapshot's files with another's
+    * deletion vector or schema. The opened files' sidecars are asked
+    * for in one request, so the shard rule sees the prune's whole
+    * width.
+    */
+  private def prune(name: String, mf: Option[String], pred: Pred): (Seq[String], Int) = {
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
-    val side = new FileStats.Sidecars(fs, root)
-    mf.flatMap(m => manifestChunks(fs, new Path(root, m))) match {
+    val text = mf.map(m => readSmallFile(fs, new Path(root, m)))
+    val (opened, total) = text.flatMap(chunkHeader) match {
       case Some(chunks) =>
-        // chunk-level skip FIRST: a chunk whose merged stat excludes
-        // the range is never opened — on a clustered 10⁶-file table a
-        // narrow range parses the matching chunk(s) only
-        val open = chunks.filter(ch => ch.stats.get(column)
-          .forall(chunkStatMayContain(_, lower, upper)))
-        (pruneFileList(side, open.flatMap(ch => readChunk(fs, root, ch.name)),
-          column, lower, upper), chunks.map(_.nFiles).sum)
+        (chunks.flatMap(ch => narrow(ch, pred).map(readChunk(fs, root, ch.name) -> _)),
+          chunks.map(_.nFiles).sum)
       case None =>
-        val files = manifestFilesOrLegacy(fs, root, mf)
-        (pruneFileList(side, files, column, lower, upper), files.size)
+        val files = text.fold(listDataFiles(fs, root, root))(flatEntries)
+        (Seq(files -> pred), files.size)
     }
+    val side = new FileStats.Sidecars(fs, root)
+    lazy val stats = side.stats(opened.flatMap(_._1))
+    lazy val rows = side.rows(opened.flatMap(_._1))
+    val blooms = scala.collection.mutable.Map[String, Map[String, BloomIndex.FileBloom]]()
+    def bloom(f: String, c: String): Option[BloomIndex.FileBloom] = {
+      val v = FileStats.versionOf(f)
+      blooms.getOrElseUpdate(v, BloomIndex.read(fs, new Path(new Path(root, v), s"_bloom_$c")))
+        .get(f.substring(v.length + 1))
+    }
+    def mayHold(f: String, p: Pred): Boolean = p match {
+      case RangePred(c, lo, hi) =>
+        // a hive `c=value` path segment prunes too — the partition
+        // column is never IN the file, so footer stats can't see it;
+        // the path is its exact single-value stat
+        partitionValueMayContain(hiveSeg(f, c).flatMap(_.value), lo, hi) &&
+          stats.get(f).flatMap(_.get(c)).forall(FileStats.mayContain(_, lo, hi))
+      case InPred(c, vs) =>
+        val pv = hiveSeg(f, c).flatMap(_.value)
+        val cs = stats.get(f).flatMap(_.get(c))
+        lazy val fb = bloom(f, c)
+        vs.exists { v =>
+          partitionValueMayContain(pv, Some(v), Some(v)) &&
+          cs.forall(FileStats.mayContain(_, Some(v), Some(v))) &&
+          // blooms were keyed from Spark's cast-to-string at write
+          // time — only probe types whose toString is guaranteed to
+          // match that rendering (Long/Integer/Double/String; litValue
+          // normalizes all integrals to Long and floats to Double).
+          // Wrapper-typed probes (DateDays/Micros) have no matching key
+          // format, and java.math.BigDecimal — though a Number —
+          // renders scale/exponent differently from the write-side
+          // cast, so they must KEEP, never consult the filter.
+          (v match {
+            case _: java.lang.Long | _: java.lang.Integer |
+                 _: java.lang.Double | _: String =>
+              fb.forall(b => BloomIndex.mightContain(b.bits, b.k, v.toString))
+            case _ => true
+          })
+        }
+      case NullPred(c, isNull) =>
+        rows.get(f).forall(r => r.nullCounts.get(c).forall(nc =>
+          if (isNull) nc > 0 else nc < r.numRows))
+      case OrPred(_, parts) => parts.exists(mayHold(f, _))
+    }
+    (opened.flatMap { case (files, p) =>
+      files.filter(f => FileStats.versionOf(f).isEmpty || mayHold(f, p))
+    }, total)
+  }
+
+  /** What of `p` can still match inside chunk `ch`, from its header
+    * alone; None = the chunk is never opened. A range survives when
+    * the chunk's merged stat may overlap it. An IN keeps the values the
+    * stat admits: on a clustered layout a wide IN list (the join-skip
+    * payload is ≤128 keys) degrades per chunk to the one or two values
+    * that can live there, keeping the per-file sweep O(files ·
+    * survivingValues), not O(files · values) (ScaleProbe's
+    * prune_join128 leg). IS NULL is ruled out by a zero null sum, IS
+    * NOT NULL by an all-null chunk (nulls == rows, rows known). An OR
+    * keeps its surviving branches. A column the header does not know
+    * keeps everything.
+    */
+  private def narrow(ch: ChunkMeta, p: Pred): Option[Pred] = p match {
+    case RangePred(c, lo, hi) =>
+      Some(p).filter(_ => ch.stats.get(c).forall(chunkStatMayContain(_, lo, hi)))
+    case InPred(c, vs) =>
+      val left = ch.stats.get(c).fold(vs)(cs =>
+        vs.filter(v => chunkStatMayContain(cs, Some(v), Some(v))))
+      if (left.isEmpty) None else Some(InPred(c, left))
+    case NullPred(c, isNull) =>
+      val none = ch.nulls.get(c).exists(nc =>
+        if (isNull) nc == 0L else ch.rowSum >= 0 && nc == ch.rowSum)
+      if (none) None else Some(p)
+    case OrPred(c, parts) =>
+      val left = parts.flatMap(narrow(ch, _))
+      if (left.isEmpty) None else Some(OrPred(c, left))
+  }
+
+  /** The one pruned read: `prune`, the survivors through the
+    * deletion-vector-aware `readFilesMor` (an empty read of the full
+    * snapshot when nothing survives), and the partition type guard.
+    * The snapshot is resolved here once, unless the caller `captured`
+    * it already as (manifest, its full read). Callers apply their
+    * EXACT residual predicate on top (stats may be truncated or coarse
+    * — pruning is a fast path, never the correctness boundary).
+    *
+    * Type guard: schema truth is the FULL snapshot (plan-only: one
+    * footer + the path listing — no data scan). Hive partition column
+    * types are INFERRED from the surviving paths, so a pruned subset
+    * can infer a DIFFERENT type than the full table — drop the one
+    * non-numeric partition of a string column and the remainder looks
+    * numeric, flipping the residual from lexicographic to numeric
+    * comparison and silently dropping in-range rows (LayoutSpec pins
+    * the '9' ∈ ['10','95'] case). Casting the pruned read back to the
+    * full-table type keeps the residual's semantics identical to an
+    * unpruned scan. The guard ONLY applies to partition columns (data
+    * columns are typed by the parquet footers, identical in any
+    * subset) — skipping it otherwise keeps the pruned fast path free of
+    * the full-snapshot listing a chunked 10⁶-file manifest would have
+    * to concat.
+    */
+  private def prunedRead(name: String, pred: Pred,
+      captured: Option[(Option[String], DataFrame)] = None): DataFrame = {
+    val root = new Path(tablePath(name))
+    val fs = fileSystem(root)
+    val mf = captured.fold(currentManifest(fs, root))(_._1)
+    val (kept, _) = prune(name, mf, pred)
+    lazy val full = captured.fold(
+      readFiles(name, manifestFilesOrLegacy(fs, root, mf)))(_._2)
+    val c = pred.column
+    if (kept.isEmpty) full.where(lit(false))
+    else {
+      val pruned = readFilesMor(name, kept, mf)
+      if (!snapshotEncodesPartition(name, mf, kept, c)) pruned
+      else (full.schema.find(_.name == c), pruned.schema.find(_.name == c)) match {
+        case (Some(f), Some(p)) if f.dataType != p.dataType =>
+          pruned.withColumn(c, col(c).cast(f.dataType))
+        case _ => pruned
+      }
+    }
+  }
+
+  /** Range scan with data skipping: the current snapshot's pruned read
+    * for [lower, upper] with the exact range applied on top. On a
+    * range-clustered 100 TB table a narrow range reads a handful of
+    * files instead of the full listing.
+    */
+  def readSkipping(name: String, column: String, lower: Option[Any],
+      upper: Option[Any]): DataFrame = {
+    val c = col(column)
+    prunedRead(name, RangePred(column, lower, upper))
+      .where(lower.map(c >= lit(_)).getOrElse(lit(true)) &&
+        upper.map(c <= lit(_)).getOrElse(lit(true)))
+  }
+
+  /** Point-lookup scan: the pruned read for `values` (partition paths
+    * + min/max + blooms) with the exact IN applied on top — a Bloom
+    * false positive costs one extra file read, never a wrong row.
+    */
+  def readEquals(name: String, column: String, values: Seq[Any]): DataFrame =
+    prunedRead(name, InPred(column, values)).where(col(column).isin(values: _*))
+
+  /** IS NULL / IS NOT NULL scan with file skipping: `isNull = true`
+    * keeps only files whose null count is unknown or > 0; false keeps
+    * files with unknown counts or any non-null row. The exact
+    * predicate applies on the survivors.
+    */
+  def readSkippingIsNull(name: String, column: String,
+      isNull: Boolean): DataFrame = {
+    val c = col(column)
+    prunedRead(name, NullPred(column, isNull))
+      .where(if (isNull) c.isNull else c.isNotNull)
   }
 
   /** File list of an explicit manifest (or the legacy root listing
@@ -821,26 +960,6 @@ class Warehouse(spark: SparkSession, dir: String,
       mf: Option[String]): Seq[String] = mf match {
     case Some(m) => readManifest(fs, new Path(root, m))
     case None => listDataFiles(fs, root, root)
-  }
-
-  /** Per-file pruning over an explicit file list (one chunk or the
-    * whole flat snapshot): hive partition-path check + footer-stat
-    * check. Legacy root files (no version dir, no sidecar) are kept.
-    */
-  private def pruneFileList(side: FileStats.Sidecars, files: Seq[String],
-      column: String, lower: Option[Any], upper: Option[Any]): Seq[String] = {
-    val stats = side.stats(files)
-    files.filter { f =>
-      FileStats.versionOf(f).isEmpty ||
-      // a hive `column=value` path segment prunes too — the partition
-      // column is never IN the file, so footer stats can't see it; the
-      // path is its exact single-value stat
-      partitionValueMayContain(partitionValue(f, column), lower, upper) &&
-      (stats.get(f).flatMap(_.get(column)) match {
-        case Some(cs) => FileStats.mayContain(cs, lower, upper)
-        case None     => true
-      })
-    }
   }
 
   /** Decode a hive-escaped partition path value: %XX byte escapes
@@ -867,20 +986,36 @@ class Warehouse(spark: SparkSession, dir: String,
     Some(new String(bytes.toArray, "UTF-8"))
   }
 
-  /** The unescaped value of a file path's `column=value` hive segment;
-    * None when the layout doesn't encode the column, the value is
-    * `__HIVE_DEFAULT_PARTITION__` (null — never prunable) or its
-    * escapes are malformed. Split once per file, then compared against
-    * each probe value by `partitionValueMayContain`.
-    */
-  private def partitionValue(file: String, column: String): Option[String] =
-    file.split('/').collectFirst {
-      case seg if seg.startsWith(column + "=") &&
-          !seg.endsWith("=__HIVE_DEFAULT_PARTITION__") =>
-        unescapePathValue(seg.substring(column.length + 1))
-    }.flatten
+  /** The hive null partition's on-disk value. */
+  private val HiveNull = "__HIVE_DEFAULT_PARTITION__"
 
-  /** Can a file whose partition value is `value` (`partitionValue`)
+  /** One hive `column=value` path segment. `raw` is the value as the
+    * path spells it (still %XX-escaped); `value` decodes it — None for
+    * the hive null or a malformed escape, and callers then keep: they
+    * never prune on a value they cannot read.
+    */
+  private final case class HiveSeg(column: String, raw: String) {
+    def isNull: Boolean = raw == HiveNull
+    def value: Option[String] = if (isNull) None else unescapePathValue(raw)
+  }
+
+  /** The one hive-segment decoder: every `column=value` segment of a
+    * relative path, in path order. Segments match WHOLE, never by
+    * substring (a column `id` never matches a `uuid=…` segment), and
+    * the column ends at the first '=' (Spark escapes '=' in names and
+    * values alike).
+    */
+  private def hiveSegs(path: String): Iterator[HiveSeg] =
+    path.split('/').iterator.flatMap { seg =>
+      val i = seg.indexOf('=')
+      if (i < 0) None else Some(HiveSeg(seg.substring(0, i), seg.substring(i + 1)))
+    }
+
+  /** `column`'s hive segment in `path`, if the layout encodes it. */
+  private def hiveSeg(path: String, column: String): Option[HiveSeg] =
+    hiveSegs(path).find(_.column == column)
+
+  /** Can a file whose decoded partition value is `value` (`hiveSeg`)
     * hold a value in [lower, upper]? True (keep) when there is no
     * value or the comparison type is ambiguous.
     *
@@ -960,89 +1095,55 @@ class Warehouse(spark: SparkSession, dir: String,
     val fs = fileSystem(root)
     // chunked manifests: the header's merged per-chunk stats exist for
     // a column ONLY when every file in the chunk bounds it with one
-    // agreed type (manifestContent poisons partial columns), so
+    // agreed type (ChunkWriter.headerLines poisons partial columns), so
     // presence in EVERY chunk is exactly this method's completeness
     // contract — fold the O(chunks) header values, open nothing
-    currentManifest(fs, root)
+    foldMinMax(currentManifest(fs, root)
       .flatMap(m => manifestChunks(fs, new Path(root, m))) match {
-      case Some(chunks) if chunks.nonEmpty =>
-        val per = chunks.map(_.stats.get(column))
-        if (per.exists(_.isEmpty)) return None
-        val cs = per.flatten
-        if (cs.map(_.typ).distinct.size != 1) return None
-        return cs.head.typ match {
-          case "long" => Some((cs.map(_.min.toLong).min, cs.map(_.max.toLong).max))
-          case "double" => Some((cs.map(_.min.toDouble).min, cs.map(_.max.toDouble).max))
-          // temporal stats fold in their RAW integer space (days /
-          // micros — exact) and render once at the surface; ISO
-          // strings must not be compared (variable sub-second
-          // precision breaks lexicographic order)
-          case t @ ("date" | "ts" | "tsntz") =>
-            Some((renderTemporal(t, cs.map(_.min.toLong).min),
-              renderTemporal(t, cs.map(_.max.toLong).max)))
-          case "decimal" =>
-            Some((cs.map(s => new java.math.BigDecimal(s.min)).min.toPlainString,
-              cs.map(s => new java.math.BigDecimal(s.max)).max.toPlainString))
-          case "string" =>
-            val d = java.util.Base64.getDecoder
-            def lt(a: String, b: String) =
-              FileStats.cmpBytes(d.decode(a), d.decode(b)) < 0
-            Some((new String(d.decode(cs.map(_.min).reduce((a, b) =>
-                if (lt(a, b)) a else b)), "UTF-8"),
-              new String(d.decode(cs.map(_.max).reduce((a, b) =>
-                if (lt(a, b)) b else a)), "UTF-8")))
-          case _ => None
-        }
-      case _ => ()
-    }
-    val files = snapshotFiles(name)
-    val stats = new FileStats.Sidecars(fs, root).stats(files)
-    // raw typed fold space per family: Long for the integer families
-    // (plain/days/micros — rendered at the end for temporals),
-    // BigDecimal for decimals, UTF-8 String for strings
-    val perFile: Seq[Option[(String, Any, Any)]] = files.map { f =>
-      stats.get(f).flatMap(_.get(column)).map {
-        case FileStats.ColStat(t @ ("long" | "date" | "ts" | "tsntz"), mn, mx) =>
-          (t, mn.toLong, mx.toLong)
-        case FileStats.ColStat("double", mn, mx) =>
-          ("double", mn.toDouble, mx.toDouble)
-        case FileStats.ColStat("decimal", mn, mx) =>
-          ("decimal", new java.math.BigDecimal(mn), new java.math.BigDecimal(mx))
-        case FileStats.ColStat(t, mn, mx) =>
-          (t, new String(java.util.Base64.getDecoder.decode(mn), "UTF-8"),
-            new String(java.util.Base64.getDecoder.decode(mx), "UTF-8"))
-      }
-    }
-    if (perFile.isEmpty || perFile.exists(_.isEmpty)) None
-    else if (perFile.flatten.map(_._1).distinct.size != 1) None
-    else {
-      val typ = perFile.flatten.head._1
-      val vals = perFile.flatten.map(t => (t._2, t._3))
-      // string branch compares UTF-8 bytes (FileStats.cmpBytes), NOT
-      // Java String '<': per-file parquet stats were folded in unsigned
-      // UTF-8 byte order (= code-point order, Spark's string order);
-      // UTF-16 code-unit order disagrees for U+E000–U+FFFF vs
-      // supplementary-plane chars, so mixing orders could surface a
-      // non-extreme value. Exactness for strings additionally assumes
-      // untruncated binary stats — writeVersion writes with Spark's
-      // parquet defaults (no parquet.statistics.truncate.length), and
-      // a truncated stat would be caught as a bound, not an exact value.
-      def lt(a: Any, b: Any): Boolean = (a, b) match {
-        case (x: Long, y: Long)     => x < y
-        case (x: Double, y: Double) => x < y
-        case (x: java.math.BigDecimal, y: java.math.BigDecimal) =>
-          x.compareTo(y) < 0
-        case (x: String, y: String) =>
-          FileStats.cmpBytes(x.getBytes("UTF-8"), y.getBytes("UTF-8")) < 0
-        case (x, y)                 => x.toString < y.toString
-      }
-      def render(v: Any): Any = typ match {
-        case "date" | "ts" | "tsntz" => renderTemporal(typ, v.asInstanceOf[Long])
-        case "decimal" => v.asInstanceOf[java.math.BigDecimal].toPlainString
-        case _ => v
-      }
-      Some((render(vals.map(_._1).reduce((a, b) => if (lt(a, b)) a else b)),
-        render(vals.map(_._2).reduce((a, b) => if (lt(a, b)) b else a))))
+      case Some(chunks) => chunks.map(_.stats.get(column))
+      case None =>
+        val files = snapshotFiles(name)
+        val stats = new FileStats.Sidecars(fs, root).stats(files)
+        files.map(f => stats.get(f).flatMap(_.get(column)))
+    })
+  }
+
+  /** The exact (min, max) over per-chunk or per-file stats: None unless
+    * every entry is present and all share one footer type. Each family
+    * folds in its raw typed space — Long for the integer families
+    * (plain, days, micros: temporals render once at the surface),
+    * BigDecimal for decimals, UTF-8 bytes for strings — and partition
+    * p-stats (path values typed by parse, not footer values typed as
+    * stored) never answer.
+    *
+    * Strings compare UTF-8 bytes (FileStats.cmpBytes), NOT Java String
+    * '<': parquet stats were folded in unsigned UTF-8 byte order
+    * (= code-point order, Spark's string order); UTF-16 code-unit
+    * order disagrees for U+E000–U+FFFF vs supplementary-plane chars,
+    * so mixing orders could surface a non-extreme value. Exactness for
+    * strings additionally assumes untruncated binary stats —
+    * writeVersion writes with Spark's parquet defaults (no
+    * parquet.statistics.truncate.length), and a truncated stat would
+    * be caught as a bound, not an exact value.
+    */
+  private def foldMinMax(per: Seq[Option[FileStats.ColStat]]): Option[(Any, Any)] = {
+    if (per.isEmpty || per.exists(_.isEmpty)) return None
+    val cs = per.flatten
+    val typ = cs.head.typ
+    if (cs.exists(_.typ != typ)) return None
+    def fold[T](parse: String => T, lt: (T, T) => Boolean, render: T => Any) =
+      Some((render(cs.map(s => parse(s.min)).reduce((a, b) => if (lt(a, b)) a else b)),
+        render(cs.map(s => parse(s.max)).reduce((a, b) => if (lt(a, b)) b else a))))
+    typ match {
+      case "long" => fold[Long](_.toLong, _ < _, identity)
+      case "date" | "ts" | "tsntz" =>
+        fold[Long](_.toLong, _ < _, renderTemporal(typ, _))
+      case "double" => fold[Double](_.toDouble, _ < _, identity)
+      case "decimal" => fold[java.math.BigDecimal](new java.math.BigDecimal(_),
+        _.compareTo(_) < 0, _.toPlainString)
+      case "string" => fold[Array[Byte]](java.util.Base64.getDecoder.decode(_),
+        FileStats.cmpBytes(_, _) < 0, new String(_, "UTF-8"))
+      case _ => None
     }
   }
 
@@ -1120,127 +1221,13 @@ class Warehouse(spark: SparkSession, dir: String,
     }
   }
 
-  /** IS NULL / IS NOT NULL scan with file skipping: `isNull = true`
-    * keeps only files whose null count is unknown or > 0; false keeps
-    * files with unknown counts or any non-null row. The exact
-    * predicate still applies on the survivors — skipping is a fast
-    * path, never the correctness boundary.
-    */
-  def readSkippingIsNull(name: String, column: String,
-      isNull: Boolean): DataFrame = {
-    val root = new Path(tablePath(name))
-    val fs = fileSystem(root)
-    // single-resolution read — see readSkipping
-    val mfC = currentManifest(fs, root)
-    val (kept, _) = pruneFilesIsNullFrom(name, mfC, column, isNull)
-    val c = col(column)
-    val base =
-      if (kept.nonEmpty) readFilesMor(name, kept, mfC)
-      else readFiles(name, manifestFilesOrLegacy(fs, root, mfC))
-        .where(lit(false))
-    base.where(if (isNull) c.isNull else c.isNotNull)
-  }
-
-  /** The IS [NOT] NULL file prune against an explicit manifest — the
-    * kept-list half of `readSkippingIsNull`, factored so the auto-skip
-    * rule (graft.plans.AutoSkip, NullPred) shares the one
-    * implementation. Chunk-header null sums skip whole chunks; the row
-    * sidecars decide per file; unknown counts always keep.
-    */
-  private def pruneFilesIsNullFrom(name: String, mfC: Option[String],
-      column: String, isNull: Boolean): (Seq[String], Int) = {
-    val root = new Path(tablePath(name))
-    val fs = fileSystem(root)
-    val side = new FileStats.Sidecars(fs, root)
-    def keep(files: Seq[String]): Seq[String] = {
-      val rows = side.rows(files)
-      files.filter(f => rows.get(f).forall { r =>
-        r.nullCounts.get(column) match {
-          case None     => true // unknown ⇒ keep, as always
-          case Some(nc) => if (isNull) nc > 0 else nc < r.numRows
-        }
-      })
-    }
-    mfC
-      .flatMap(m => manifestChunks(fs, new Path(root, m))) match {
-      case Some(chunks) =>
-        // chunk-level skip from the header null sums: zero nulls ⇒ no
-        // IS NULL rows anywhere in the chunk; all-null (nulls == rows,
-        // rows known) ⇒ no IS NOT NULL rows — either way the chunk is
-        // never opened. Unknown sums open the chunk for per-file logic.
-        val open = chunks.filterNot(ch => ch.nulls.get(column) match {
-          case Some(nc) if isNull => nc == 0L
-          case Some(nc)           => ch.rowSum >= 0 && nc == ch.rowSum
-          case None               => false
-        })
-        (keep(open.flatMap(ch => readChunk(fs, root, ch.name))),
-          chunks.map(_.nFiles).sum)
-      case None =>
-        val files = manifestFilesOrLegacy(fs, root, mfC)
-        (keep(files), files.size)
-    }
-  }
-
-  /** Range scan with data skipping: prune files by footer stats, read
-    * the survivors, and apply the EXACT residual predicate on top (stats
-    * may be truncated or coarse — pruning is a fast-path, never the
-    * correctness boundary). The planned scan's file list shrinks with
-    * the selectivity of the range: on a range-clustered 100 TB table a
-    * narrow range reads a handful of files instead of the full listing.
-    */
-  def readSkipping(name: String, column: String, lower: Option[Any],
-      upper: Option[Any]): DataFrame = {
-    // ONE manifest resolution for the whole read: prune, the type
-    // guard's full-schema probe, and the DV subtraction all answer
-    // from the same snapshot — a commit racing this read can never
-    // pair one snapshot's files with another's vector or schema
-    val rootC = new Path(tablePath(name))
-    val mfC = currentManifest(fileSystem(rootC), rootC)
-    val (kept, _) = pruneFilesFrom(name, mfC, column, lower, upper)
-    // schema truth is the FULL snapshot (plan-only: one footer + the
-    // path listing already in hand — no data scan): hive partition
-    // column types are INFERRED from the surviving paths, so a pruned
-    // subset can infer a DIFFERENT type than the full table — drop the
-    // one non-numeric partition of a string column and the remainder
-    // looks numeric, flipping the residual from lexicographic to
-    // numeric comparison and silently dropping in-range rows
-    // (LayoutSpec pins the '9' ∈ ['10','95'] case). Casting the
-    // pruned read back to the full-table type keeps the residual's
-    // semantics identical to an unpruned scan. The guard ONLY applies
-    // to partition columns (data columns are typed by the parquet
-    // footers, identical in any subset) — skipping it otherwise keeps
-    // the pruned fast path free of the full-snapshot listing a
-    // chunked 10⁶-file manifest would have to concat.
-    lazy val fullFiles = manifestFilesOrLegacy(fileSystem(rootC), rootC, mfC)
-    val base =
-      if (kept.isEmpty) readFiles(name, fullFiles).where(lit(false))
-      else {
-        val pruned = readFilesMor(name, kept, mfC)
-        if (!snapshotEncodesPartition(name, mfC, kept, column)) pruned
-        else {
-          val full = readFiles(name, fullFiles)
-          (full.schema.find(_.name == column),
-            pruned.schema.find(_.name == column)) match {
-            case (Some(f), Some(p)) if f.dataType != p.dataType =>
-              pruned.withColumn(column, col(column).cast(f.dataType))
-            case _ => pruned
-          }
-        }
-      }
-    val c = col(column)
-    val lo = lower.map(v => c >= lit(v)).getOrElse(lit(true))
-    val hi = upper.map(v => c <= lit(v)).getOrElse(lit(true))
-    base.where(lo && hi)
-  }
-
   /** Does the snapshot's layout encode `column` as a hive partition
     * path segment anywhere — i.e. must a pruned read apply the
     * full-table type guard? Two past traps, both pinned in LayoutSpec:
     *
-    *  - the match is by WHOLE path segment (`split('/')` +
-    *    `startsWith(column + "=")`), never substring — a column named
-    *    `id` must not match a `uuid=...` segment and spuriously pay
-    *    (or worse, mis-resolve) the guard;
+    *  - the match is by WHOLE path segment (`hiveSeg`), never
+    *    substring — a column named `id` must not match a `uuid=...`
+    *    segment and spuriously pay (or worse, mis-resolve) the guard;
     *  - the decision consults the FULL snapshot, not just the pruned
     *    subset: on a mixed evolved/flat layout a pruned subset that
     *    happens to contain only flat-vintage files would skip the
@@ -1251,7 +1238,7 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   private def snapshotEncodesPartition(name: String, mf: Option[String],
       kept: Seq[String], column: String): Boolean = {
-    def hasSeg(f: String) = f.split('/').exists(_.startsWith(column + "="))
+    def hasSeg(f: String) = hiveSeg(f, column).isDefined
     if (kept.exists(hasSeg)) return true
     val root = new Path(tablePath(name))
     val fs = fileSystem(root)
@@ -1260,8 +1247,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // table (s27 pins chunk opens). A chunk whose pcols is
     // unrepresentable (`!`) or a pre-pcols header falls back to the
     // list, the conservative direction. The manifest comes from the
-    // CALLER's single resolution (snapshot consistency, see
-    // pruneFilesFrom).
+    // CALLER's single resolution (snapshot consistency, see prune).
     mf.flatMap(m => manifestChunks(fs, new Path(root, m))) match {
       case Some(chunks) if chunks.nonEmpty && chunks.forall(_.pcols.isDefined) =>
         chunks.exists(_.pcols.get.contains(column))
@@ -1544,123 +1530,6 @@ class Warehouse(spark: SparkSession, dir: String,
     }
   }
 
-  /** Point-lookup file pruning: the snapshot's file list filtered to
-    * files that may contain AT LEAST ONE of `values` in `column`,
-    * combining every metadata axis — hive partition-path values, footer
-    * min/max, and the Bloom sidecars when `buildBloom` has run. Files
-    * without stats or blooms are always kept; pruning only ever removes
-    * files proven empty for every probe value.
-    */
-  def pruneFilesEquals(name: String, column: String,
-      values: Seq[Any]): (Seq[String], Int) = {
-    val root = new Path(tablePath(name))
-    pruneFilesEqualsFrom(name, currentManifest(fileSystem(root), root),
-      column, values)
-  }
-
-  /** `pruneFilesEquals` against an explicit manifest — see
-    * `pruneFilesFrom` for the snapshot-consistency rationale.
-    */
-  private def pruneFilesEqualsFrom(name: String, mf: Option[String],
-      column: String, values: Seq[Any]): (Seq[String], Int) = {
-    val root = new Path(tablePath(name))
-    val fs = fileSystem(root)
-    val side = new FileStats.Sidecars(fs, root)
-    val bloomCache = scala.collection.mutable.Map[String, Map[String, BloomIndex.FileBloom]]()
-    def perFile(files: Seq[String], probeVals: Seq[Any],
-        stats: Map[String, Map[String, FileStats.ColStat]]): Seq[String] =
-      files.groupBy(FileStats.versionOf).toSeq.sortBy(_._1).flatMap { case (v, fl) =>
-        if (v.isEmpty) fl
-        else {
-          val blooms = bloomCache.getOrElseUpdate(v,
-            BloomIndex.read(fs, new Path(new Path(root, v), s"_bloom_$column")))
-          fl.filter { f =>
-            val inner = f.substring(v.length + 1)
-            val pv = partitionValue(f, column)
-            probeVals.exists { value =>
-              partitionValueMayContain(pv, Some(value), Some(value)) &&
-              (stats.get(f).flatMap(_.get(column)) match {
-                case Some(cs) => FileStats.mayContain(cs, Some(value), Some(value))
-                case None     => true
-              }) &&
-              (blooms.get(inner) match {
-                // blooms were keyed from Spark's cast-to-string at
-                // write time — only probe types whose toString is
-                // guaranteed to match that rendering (Long/Integer/
-                // Double/String; litValue normalizes all integrals
-                // to Long and floats to Double). Wrapper-typed
-                // probes (DateDays/Micros) have no matching key
-                // format, and java.math.BigDecimal — though a
-                // Number — renders scale/exponent differently from
-                // the write-side cast, so they must KEEP, never
-                // consult the filter.
-                case Some(fb) if value.isInstanceOf[java.lang.Long] ||
-                    value.isInstanceOf[java.lang.Integer] ||
-                    value.isInstanceOf[java.lang.Double] ||
-                    value.isInstanceOf[String] =>
-                  BloomIndex.mightContain(fb.bits, fb.k, value.toString)
-                case _ => true
-              })
-            }
-          }
-        }
-      }
-    mf.flatMap(m => manifestChunks(fs, new Path(root, m))) match {
-      case Some(chunks) =>
-        // a chunk is skipped only when its merged stat excludes EVERY
-        // probe value — one surviving value opens it. The per-file
-        // pass inside an opened chunk then probes ONLY the values the
-        // chunk's own stat admits: on a clustered layout a wide IN
-        // list (the join-skip payload is ≤128 keys) degrades per
-        // chunk to the one or two values that can live there, keeping
-        // the sweep O(files · survivingValues), not O(files · values)
-        // (ScaleProbe's prune_join128 leg pins this at 1M files)
-        val open = chunks.flatMap { ch =>
-          val vs = ch.stats.get(column).fold(values)(cs =>
-            values.filter(v => chunkStatMayContain(cs, Some(v), Some(v))))
-          if (vs.isEmpty) None else Some((readChunk(fs, root, ch.name), vs))
-        }
-        val stats = side.stats(open.flatMap(_._1))
-        (open.flatMap { case (fl, vs) => perFile(fl, vs, stats) },
-          chunks.map(_.nFiles).sum)
-      case None =>
-        val files = manifestFilesOrLegacy(fs, root, mf)
-        (perFile(files, values, side.stats(files)), files.size)
-    }
-  }
-
-  /** Point-lookup scan: prune files via `pruneFilesEquals` (partition
-    * paths + min/max + blooms), read the survivors, and apply the exact
-    * IN residual on top — a Bloom false positive costs one extra file
-    * read, never a wrong row. The same full-snapshot type guard as
-    * `readSkipping` keeps a pruned read's residual semantics identical
-    * to an unpruned scan.
-    */
-  def readEquals(name: String, column: String, values: Seq[Any]): DataFrame = {
-    // single-resolution read, like readSkipping
-    val rootC = new Path(tablePath(name))
-    val mfC = currentManifest(fileSystem(rootC), rootC)
-    val (kept, _) = pruneFilesEqualsFrom(name, mfC, column, values)
-    lazy val fullFiles = manifestFilesOrLegacy(fileSystem(rootC), rootC, mfC)
-    val base =
-      if (kept.isEmpty) readFiles(name, fullFiles).where(lit(false))
-      else {
-        val pruned = readFilesMor(name, kept, mfC)
-        // partition-column type guard only — see readSkipping
-        if (!snapshotEncodesPartition(name, mfC, kept, column)) pruned
-        else {
-          val full = readFiles(name, fullFiles)
-          (full.schema.find(_.name == column),
-            pruned.schema.find(_.name == column)) match {
-            case (Some(f), Some(p)) if f.dataType != p.dataType =>
-              pruned.withColumn(column, col(column).cast(f.dataType))
-            case _ => pruned
-          }
-        }
-      }
-    base.where(col(column).isin(values: _*))
-  }
-
   /** A table exists once a commit has landed on it: its `_CURRENT`
     * pointer names a manifest, or (a table written before manifests
     * existed) its directory holds data files. What a killed first
@@ -1701,13 +1570,6 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   private def pastGrace(mtime: Long): Boolean =
     System.currentTimeMillis() - mtime >= InflightGraceMs
-
-  /** Version `num`'s in-flight marker: Some(past the grace?) while it
-    * exists, None once it is gone.
-    */
-  private def markerStale(fs: FileSystem, root: Path, num: String): Option[Boolean] =
-    try Some(pastGrace(fs.getFileStatus(new Path(root, s"_inflight_v$num")).getModificationTime))
-    catch { case _: java.io.IOException => None }
 
   /** Data files (relative to the table root) of the current snapshot.
     * Resolution: `_CURRENT` pointer → manifest file. The pointer store
@@ -1904,6 +1766,11 @@ class Warehouse(spark: SparkSession, dir: String,
 
     def rows(files: Seq[String]): Map[String, FileStats.RowStat] = side.rows(files)
 
+    /** Ask for a whole list's footer and row stats once, so later
+      * requests for parts of it are answered from the reader's memo.
+      */
+    def prefetch(files: Seq[String]): Unit = { side.rows(files); side.stats(files) }
+
     /** Footer stats ++ hive partition-path single-value stats, per file.
       * Partition values get DISTINCT stat types (plong/pstring, never
       * long/string): a path value types by how it PARSES, but pruning
@@ -1921,37 +1788,34 @@ class Warehouse(spark: SparkSession, dir: String,
     }
 
     private def partStats(f: String): Map[String, FileStats.ColStat] =
-      f.split('/').toSeq.flatMap {
-        case seg if seg.contains('=') && !seg.endsWith("=__HIVE_DEFAULT_PARTITION__") &&
-            !seg.contains('\t') =>
-          val c = seg.takeWhile(_ != '=')
-          // undecodable values get NO partition stat (the chunk then
-          // never prunes on this column — keep, the safe direction)
-          unescapePathValue(seg.substring(c.length + 1)).map { raw =>
-            c -> (raw.toLongOption match {
-              case Some(l) => FileStats.ColStat("plong", l.toString, l.toString)
-              case None =>
-                // a strict-ISO value gets the DATE p-type (epoch days):
-                // date bounds then skip whole chunks of a
-                // date-partitioned decade at the header. Strict ISO
-                // round-trips exactly (LocalDate.toString == raw), so
-                // string-bound probes lose nothing — chunkStatMayContain
-                // re-renders for the lexicographic compare, and ISO
-                // order IS chronological order
-                (try {
-                  val d = java.time.LocalDate.parse(raw)
-                  if (d.toString == raw)
-                    Some(FileStats.ColStat("pdate",
-                      d.toEpochDay.toString, d.toEpochDay.toString))
-                  else None
-                } catch {
-                  case _: java.time.format.DateTimeParseException => None
-                }).getOrElse(FileStats.ColStat("pstring",
-                  java.util.Base64.getEncoder.encodeToString(raw.getBytes("UTF-8")),
-                  java.util.Base64.getEncoder.encodeToString(raw.getBytes("UTF-8"))))
-            })
-          }
-        case _ => None
+      hiveSegs(f).flatMap { seg =>
+        // the hive null and undecodable values get NO partition stat
+        // (the chunk then never prunes on this column — keep, the
+        // safe direction)
+        seg.value.map { raw =>
+          seg.column -> (raw.toLongOption match {
+            case Some(l) => FileStats.ColStat("plong", l.toString, l.toString)
+            case None =>
+              // a strict-ISO value gets the DATE p-type (epoch days):
+              // date bounds then skip whole chunks of a
+              // date-partitioned decade at the header. Strict ISO
+              // round-trips exactly (LocalDate.toString == raw), so
+              // string-bound probes lose nothing — chunkStatMayContain
+              // re-renders for the lexicographic compare, and ISO
+              // order IS chronological order
+              (try {
+                val d = java.time.LocalDate.parse(raw)
+                if (d.toString == raw)
+                  Some(FileStats.ColStat("pdate",
+                    d.toEpochDay.toString, d.toEpochDay.toString))
+                else None
+              } catch {
+                case _: java.time.format.DateTimeParseException => None
+              }).getOrElse(FileStats.ColStat("pstring",
+                java.util.Base64.getEncoder.encodeToString(raw.getBytes("UTF-8")),
+                java.util.Base64.getEncoder.encodeToString(raw.getBytes("UTF-8"))))
+          })
+        }
       }.toMap
 
     /** Columns with an `_ndv_<col>` sidecar in EVERY version dir the
@@ -2043,8 +1907,7 @@ class Warehouse(spark: SparkSession, dir: String,
       val vds = files.map(vdirOf).distinct
       if (vds.forall(v => !v.contains(',') && !v.contains('\t')))
         out += s"vdirs\t$name\t${vds.mkString(",")}"
-      val pcs = files.flatMap(_.split('/').toSeq.filter(_.contains('='))
-        .map(_.takeWhile(_ != '='))).distinct.sorted
+      val pcs = files.flatMap(hiveSegs(_).map(_.column)).distinct.sorted
       out += (if (pcs.exists(c => c.contains(',') || c.contains('\t')))
         s"pcols\t$name\t!"
       else if (pcs.isEmpty) s"pcols\t$name\t-"
@@ -2131,6 +1994,11 @@ class Warehouse(spark: SparkSession, dir: String,
     if (files.size <= manifestChunkSize)
       return BuiltManifest(files.mkString("\n") + "\n", Nil)
     val sorted = files.sortBy(sortKey)
+    // one request for the whole list first: the shard rule then sees
+    // every version's full width (a version covered whole is parsed
+    // whole once, not opened shard by shard), and each chunk's request
+    // below is answered from the reader's memo
+    meta.prefetch(sorted)
     val writer = new ChunkWriter(fs, root, n, meta)
     val header = new StringBuilder(ChunkedHeader).append('\n')
     sorted.grouped(manifestChunkSize).foreach { chunk =>
@@ -2382,6 +2250,14 @@ class Warehouse(spark: SparkSession, dir: String,
     */
   private[graft] var casTestHook: String => Unit = _ => ()
 
+  /** Third test seam: invoked after this commit's pointer CAS and
+    * marker release, immediately before its `sweep` — a commit
+    * injected here lands ABOVE the sweeping commit's manifest with its
+    * own marker already released, the shape the sweep's keep-set must
+    * still protect.
+    */
+  private[graft] var sweepTestHook: String => Unit = _ => ()
+
   /** Commit a snapshot with optimistic concurrency control:
     *
     *  1. write `_manifest_v<n>` create-if-absent (two writers that
@@ -2598,6 +2474,7 @@ class Warehouse(spark: SparkSession, dir: String,
     // delete's entries for files a racing rewrite had removed were
     // silently dropped by the carry filter (round-12 multi-process
     // fuzz find).
+    sweepTestHook(name)
     sweep(fs, root, name, Some(mf.getName), expectedPrev)
   }
 
@@ -2638,8 +2515,10 @@ class Warehouse(spark: SparkSession, dir: String,
     * its slot, and a manifest off the walked chain is a crashed writer's
     * orphan whatever its marker says. Below the oldest walkable member
     * (pre-label manifests, or a GC'd parent) a manifest counts as
-    * committed unless its marker is stale. Numbers above `current` are
-    * in flight or aborted: only their markers shield them.
+    * committed unless its marker is stale. Above `current` a manifest
+    * is a newer commit or in flight and stays, unless a stale marker
+    * marks it a crashed writer's debris. Markers are judged as the
+    * listing saw them.
     */
   private def sweep(fs: FileSystem, root: Path, name: String,
       current: Option[String], alsoKeep: Option[String]): Seq[String] = {
@@ -2656,9 +2535,14 @@ class Warehouse(spark: SparkSession, dir: String,
       if (dangling) { fs.delete(new Path(root, b), false); deleted += b }
       m.filterNot(_ => dangling)
     }
-    val fresh = scala.collection.mutable.Map[String, Boolean]()
-    def isFresh(num: String) =
-      fresh.getOrElseUpdate(num, markerStale(fs, root, num).contains(false))
+    // in-flight markers as the listing saw them (number → past the
+    // grace?): a marker its writer releases during this sweep still
+    // shields its number until the next one
+    val stale = listing.flatMap(st => st.getPath.getName match {
+      case InflightRe(num) if st.isFile => Some(num -> pastGrace(st.getModificationTime))
+      case _ => None
+    }).toMap
+    def isFresh(num: String) = stale.get(num).contains(false)
     val texts = scala.collection.mutable.Map[String, Option[String]]()
     def text(m: String) = texts.getOrElseUpdate(m,
       try Some(readSmallFile(fs, new Path(root, m)))
@@ -2685,7 +2569,7 @@ class Warehouse(spark: SparkSession, dir: String,
             .getOrElse(cv.toLong + 1)
         listing.flatMap(st => st.getPath.getName match {
           case m @ ManifestRe(v) if v.toLong <= cv.toLong && (chain.contains(m) ||
-              v.toLong < floor && !markerStale(fs, root, v).contains(true)) =>
+              v.toLong < floor && !stale.get(v).contains(true)) =>
             Some((v.toLong, m, st.getModificationTime))
           case _ => None
         }).sortBy(-_._1)
@@ -2697,8 +2581,18 @@ class Warehouse(spark: SparkSession, dir: String,
     // so window membership tracks commit time
     val window = tableProp(name, "retain_ms").flatMap(_.toLongOption).filter(_ > 0)
       .map(w => committed.filter(c => System.currentTimeMillis() - c._3 <= w))
+    // above `current`, a manifest without a stale marker stays with
+    // everything it references: with no marker it is a commit that
+    // landed after `current` (its writer released the marker right
+    // after its own CAS), with a fresh one it is still in flight
+    val newer = current match {
+      case Some(ManifestRe(cv)) => names.collect {
+        case m @ ManifestRe(v) if v.toLong > cv.toLong && !stale.get(v).contains(true) => m
+      }
+      case _ => Set.empty[String]
+    }
     val keep = (committed.take(retain) ++ window.getOrElse(Nil)).map(_._2).toSet ++
-      current ++ alsoKeep ++ branchKeep
+      current ++ alsoKeep ++ branchKeep ++ newer
     val refs = keep.toSeq.flatMap(text).map(manifestRefs(fs, root, _))
     val chunks = refs.flatMap(_._1).toSet
     val live = refs.flatMap(_._2).toSet
@@ -2873,8 +2767,7 @@ class Warehouse(spark: SparkSession, dir: String,
     * file's relative path (empty for unpartitioned layouts).
     */
   private def partitionColsFrom(file: Option[String]): Seq[String] =
-    file.toSeq.flatMap(f => partitionRel(f).split('/').toSeq
-      .filter(_.contains('=')).map(_.takeWhile(_ != '=')))
+    file.toSeq.flatMap(f => hiveSegs(partitionRel(f)).map(_.column))
 
   /** Partition layout of the current snapshot. */
   private def partitionColsOf(name: String): Seq[String] =
@@ -4748,30 +4641,13 @@ class Warehouse(spark: SparkSession, dir: String,
             // parseable value — fall back to the (null-safe) semi-join
             // alone, which still scopes the merge
             .filter(!_.contains(null))
-        val pruned = touchedVals match {
-          case None => existing
-          case Some(vals) =>
-            // prune against the CAPTURED manifest (snapshot
-            // consistency with the merge's file list)
-            val (kept, _) = pruneFilesEqualsFrom(name, mfCap,
-              partitionCols.head, vals)
-            if (kept.isEmpty) existing.where(lit(false))
-            else {
-              // DV-aware like `read`, against the CAPTURED manifest:
-              // the touched partitions are REWRITTEN from this scan,
-              // so a deleted row served here would be physically
-              // resurrected into the new files
-              val pr = readFilesMor(name, kept, mfCap)
-              // same type guard as readEquals: hive path inference on a
-              // pruned subset can flip the partition column's type
-              val c = partitionCols.head
-              (existing.schema.find(_.name == c), pr.schema.find(_.name == c)) match {
-                case (Some(f), Some(p)) if f.dataType != p.dataType =>
-                  pr.withColumn(c, col(c).cast(f.dataType))
-                case _ => pr
-              }
-            }
-        }
+        // the pruned read runs against the CAPTURED manifest and full
+        // read: snapshot consistency with the merge's file list, and
+        // DV-aware like `read` — the touched partitions are REWRITTEN
+        // from this scan, so a deleted row served here would be
+        // physically resurrected into the new files
+        val pruned = touchedVals.fold(existing)(vals => prunedRead(name,
+          InPred(partitionCols.head, vals), Some((mfCap, existing))))
         // NULL-SAFE semi-join (<=>), found round 13: a plain equi-join
         // never matches null = null, so base rows whose partition
         // value is null were silently EXCLUDED from the merge — and
@@ -4890,16 +4766,12 @@ class Warehouse(spark: SparkSession, dir: String,
     * layout look like" (the streaming re-grain's crash repair asks it;
     * opening a data file for that question was the old, NPE-prone
     * way). Hive-encoded dirs come back verbatim, including
-    * `__HIVE_DEFAULT_PARTITION__` for null.
+    * the hive null's `HiveNull` for null.
     */
   private[graft] def snapshotPartitionValues(name: String,
-      column: String): Seq[String] = {
-    val pre = column + "="
+      column: String): Seq[String] =
     snapshotFiles(name).iterator.flatMap(f =>
-      partitionRel(f).split('/').collectFirst {
-        case seg if seg.startsWith(pre) => seg.substring(pre.length)
-      }).toSeq.distinct
-  }
+      hiveSeg(partitionRel(f), column).map(_.raw)).toSeq.distinct
 
   /** S9: delete-by-key as one anti-join. The base snapshot is captured
     * once so the publish CAS covers the whole read-filter-publish span

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.StringType
   * column and not at all on any other; interleaving the BITS of
   * per-column quantile ranks gives every clustered column locality
   * proportional to 2^-(bits/k), so the footer-stats skipping layer
-  * (Warehouse.readSkipping) prunes on ANY of them. This is the same
+  * (Warehouse's one `prune`, behind every pruned read and the
+  * auto-skip rule) prunes on ANY of them. This is the same
   * layout idea Delta OSS's OPTIMIZE ZORDER BY implements.
   *
   * Scale shape: one `approxQuantile` pass for the numeric columns (a
@@ -27,7 +28,7 @@ import org.apache.spark.sql.types.StringType
   *
   * String columns (url_host, lang, source) rank by boundaries in
   * UNSIGNED BYTE order — the same order parquet writes binary footer
-  * stats and readSkipping compares with (FileStats.cmpBytes), so the
+  * stats and the prune compares with (FileStats.cmpBytes), so the
   * layout's clustering and the reader's pruning agree exactly.
   * Boundaries come from a deterministic value-level sample: keep the
   * values whose xxhash64 falls in the smallest ~cap/rows slice of hash

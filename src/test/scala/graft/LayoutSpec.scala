@@ -1004,37 +1004,99 @@ class LayoutSpec extends SparkSpec {
   test("chunked pruning fuzz: random ranges and probes — pruned results always equal exact") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
-    // unpartitioned, range-clustered on long + string, 32 files / 8 chunks
-    val tmp1 = java.nio.file.Files.createTempDirectory("graft-fuzz1").toString
-    val wh1 = new Warehouse(spark, tmp1, manifestChunkSize = 4)
+    // draws for the null and OR probes, apart so the range and point
+    // probes see the same sequence as ever
+    val rnd2 = new scala.util.Random(11)
+    // unpartitioned, range-clustered on long + string, 32 files; `n` is
+    // all-null below k = 2000, null-free up to 6000 and null on every
+    // fifth k above, so IS NULL and IS NOT NULL both prune
     val base = spark.range(0, 10000).toDF("k")
       .withColumn("s", format_string("s%05d", $"k"))
+      .withColumn("n", when($"k" < 2000L || $"k" >= 6000L && $"k" % 5 === 0L,
+        lit(null).cast("long")).otherwise($"k"))
       .repartitionByRange(32, $"k").sortWithinPartitions($"k")
       .persist()
-    wh1.atomicPublish("t", base)
-    // partitioned by a string date over 16 values, 1 file each / 16 chunks
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft-fuzz2").toString
-    val wh2 = new Warehouse(spark, tmp2, manifestChunkSize = 1)
-    wh2.atomicPublish("t", spark.range(0, 3200).toDF("id")
+    // partitioned by a string date over 16 values, 1 file each
+    val parts = spark.range(0, 3200).toDF("id")
       .withColumn("d", format_string("2024-%02d", $"id" % 16 + 1))
-      .repartition($"d"), partitionCols = Seq("d"))
+      .repartition($"d")
+    // both layouts in both manifest formats: chunked (8 chunks of 4
+    // files, 16 chunks of one) and flat at the default chunk size — the
+    // prune must not depend on the format
+    def publish(chunk: Option[Int]): (Warehouse, Warehouse) = {
+      def mkWh(tag: String) = {
+        val tmp = java.nio.file.Files.createTempDirectory(tag).toString
+        chunk.fold(new Warehouse(spark, tmp))(c =>
+          new Warehouse(spark, tmp, manifestChunkSize = c))
+      }
+      val wh1 = mkWh("graft-fuzz1")
+      wh1.atomicPublish("t", base)
+      val wh2 = mkWh("graft-fuzz2")
+      wh2.atomicPublish("t", parts, partitionCols = Seq("d"))
+      (wh1, wh2)
+    }
+    val (c1, c2) = publish(Some(4))
+    val (f1, f2) = publish(None)
     for (i <- 1 to 25) {
       val lo = rnd.nextInt(11000) - 500L // ranges beyond both edges too
       val hi = lo + rnd.nextInt(4000)
       val exactK = base.filter($"k" >= lo && $"k" <= hi).count()
-      assert(wh1.readSkipping("t", "k", Some(lo), Some(hi)).count() === exactK,
-        s"iter $i long range [$lo,$hi]")
       val (sl, sh) = (f"s${math.max(lo, 0)}%05d", f"s${math.max(hi, 0)}%05d")
       val exactS = base.filter($"s" >= sl && $"s" <= sh).count()
-      assert(wh1.readSkipping("t", "s", Some(sl), Some(sh)).count() === exactS,
-        s"iter $i string range [$sl,$sh]")
       // point probes on the partitioned layout, present and absent
       val probe = f"2024-${rnd.nextInt(20) + 1}%02d" // months 17-20 absent
       val exactP = if (probe > "2024-16") 0L else 200L
-      assert(wh2.readEquals("t", "d", Seq(probe)).count() === exactP,
-        s"iter $i partition probe $probe")
+      val isNull = rnd2.nextBoolean()
+      val nullCol = if (rnd2.nextInt(4) == 0) "s" else "n"
+      val exactN = base.filter(if (isNull) col(nullCol).isNull else col(nullCol).isNotNull).count()
+      val orK = $"k" < lo || $"k" > hi
+      val exactOrK = base.filter(orK).count()
+      val orS = $"s" === sl || $"s" > sh || $"s".isNull
+      val exactOrS = base.filter(orS).count()
+      val orD = $"d" < probe || $"d" === "2024-16"
+      val exactOrD = parts.filter(orD).count()
+      for ((wh1, wh2, fmt) <- Seq((c1, c2, "chunked"), (f1, f2, "flat"))) {
+        assert(wh1.readSkipping("t", "k", Some(lo), Some(hi)).count() === exactK,
+          s"iter $i long range [$lo,$hi]")
+        assert(wh1.readSkipping("t", "s", Some(sl), Some(sh)).count() === exactS,
+          s"iter $i string range [$sl,$sh]")
+        assert(wh2.readEquals("t", "d", Seq(probe)).count() === exactP,
+          s"iter $i partition probe $probe")
+        assert(wh1.readSkippingIsNull("t", nullCol, isNull).count() === exactN,
+          s"iter $i $fmt $nullCol IS ${if (isNull) "" else "NOT "}NULL")
+        assert(wh1.read("t").where(orK).count() === exactOrK,
+          s"iter $i $fmt k < $lo OR k > $hi")
+        assert(wh1.read("t").where(orS).count() === exactOrS,
+          s"iter $i $fmt s = $sl OR s > $sh OR s IS NULL")
+        assert(wh2.read("t").where(orD).count() === exactOrD,
+          s"iter $i $fmt d < $probe OR d = 2024-16")
+      }
     }
     base.unpersist()
+  }
+
+  test("commit sweep: a commit landing between another commit's CAS and its sweep survives") {
+    import spark.implicits._
+    val (wh, tmp) = mk("graft-sweep-race")
+    val whB = new Warehouse(spark, tmp)
+    wh.atomicPublish("t", spark.range(0, 100).toDF("k"))
+    // B commits after A's pointer CAS and marker release, right before
+    // A's sweep: B's manifest sits above A's with no marker left, and
+    // A's sweep must not reap it, its version dir or its chunks
+    var fired = false
+    wh.sweepTestHook = _ => if (!fired) {
+      fired = true
+      whB.append("t", spark.range(200, 250).toDF("k"))
+    }
+    try wh.append("t", spark.range(100, 150).toDF("k"))
+    finally wh.sweepTestHook = _ => ()
+    assert(fired)
+    assert(wh.fsck("t").isEmpty, s"fsck: ${wh.fsck("t")}")
+    assert(wh.read("t").select(sum($"k")).head.getLong(0) ===
+      (0L until 150).sum + (200L until 250).sum, "B's rows must read back")
+    // the same window through vacuumOrphans: nothing of B's is debris
+    assert(whB.vacuumOrphans("t").isEmpty)
+    assert(wh.read("t").count() === 200)
   }
 
   test("maintain: small-file pressure triggers one compaction + vacuum; healthy tables untouched") {

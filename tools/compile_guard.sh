@@ -6,8 +6,8 @@
 #
 # Run this before ANY end-of-round / milestone commit:
 #   tools/compile_guard.sh && git commit ...
-# Exit 0 = no stray session builder, thread pool, sidecar file name or
-# in-flight grace check in main code,
+# Exit 0 = no stray session builder, thread pool, sidecar file name,
+# in-flight grace check or hand-decoded hive segment in main code,
 # `sbt compile` (main + test sources) is green and the benchmark harness
 # (perfbench/build.py: src/main compiled together with perfbench/src)
 # builds; nonzero otherwise, with the offending lines or the tail of the
@@ -62,6 +62,17 @@ graces=$(code_lines 'InflightGraceMs')
 if [ "$(printf '%s' "$graces" | grep -c .)" -gt 2 ]; then
   echo "compile_guard: RED — InflightGraceMs named outside its definition and pastGrace (age checks go through pastGrace):" >&2
   echo "$graces" >&2
+  exit 1
+fi
+# One hive-segment decoder: partition path segments are decoded only
+# by `hiveSegs` in Warehouse.scala (its `HiveNull` names the hive null
+# value); no other main code names the hive null or matches a
+# `column=` segment by hand.
+hivesegs=$(code_lines '__HIVE_DEFAULT_PARTITION__|startsWith\([^)]*\+ *"="' \
+  | grep -Ev '^src/main/scala/graft/sources/Warehouse\.scala:[0-9]+: *private val HiveNull = "__HIVE_DEFAULT_PARTITION__"$')
+if [ -n "$hivesegs" ]; then
+  echo "compile_guard: RED — hive partition segment decoded outside Warehouse.hiveSegs (use hiveSeg/hiveSegs):" >&2
+  echo "$hivesegs" >&2
   exit 1
 fi
 log=$(mktemp /tmp/compile_guard.XXXXXX.log)
