@@ -774,10 +774,11 @@ class Warehouse(spark: SparkSession, dir: String,
     *  2. Per chunk, `narrow` tests the header and keeps the part of
     *     `pred` that can still match there; a chunk left with nothing
     *     is never opened.
-    *  3. Per opened file, `mayHold` tests what survived: the hive
-    *     partition value and the footer stat for a range, the same per
-    *     value plus the bloom for IN, the row sidecar's null count for
-    *     IS [NOT] NULL, any branch for OR.
+    *  3. Per opened chunk, `holds` turns what survived into one file
+    *     test, run on each of its files: the hive partition value and
+    *     the footer stat for a range, the same per value plus the
+    *     bloom for IN, the row sidecar's null count for IS [NOT] NULL,
+    *     any branch for OR.
     *
     * Files without metadata (legacy root files, pre-sidecar versions,
     * unsupported types) are always kept: pruning only removes files
@@ -809,14 +810,14 @@ class Warehouse(spark: SparkSession, dir: String,
       blooms.getOrElseUpdate(v, BloomIndex.read(fs, new Path(new Path(root, v), s"_bloom_$c")))
         .get(f.substring(v.length + 1))
     }
-    def mayHold(f: String, p: Pred): Boolean = p match {
-      case RangePred(c, lo, hi) =>
+    def holds(p: Pred): String => Boolean = p match {
+      case RangePred(c, lo, hi) => f =>
         // a hive `c=value` path segment prunes too — the partition
         // column is never IN the file, so footer stats can't see it;
         // the path is its exact single-value stat
         partitionValueMayContain(hiveSeg(f, c).flatMap(_.value), lo, hi) &&
           stats.get(f).flatMap(_.get(c)).forall(FileStats.mayContain(_, lo, hi))
-      case InPred(c, vs) =>
+      case InPred(c, vs) => f =>
         val pv = hiveSeg(f, c).flatMap(_.value)
         val cs = stats.get(f).flatMap(_.get(c))
         lazy val fb = bloom(f, c)
@@ -838,13 +839,16 @@ class Warehouse(spark: SparkSession, dir: String,
             case _ => true
           })
         }
-      case NullPred(c, isNull) =>
+      case NullPred(c, isNull) => f =>
         rows.get(f).forall(r => r.nullCounts.get(c).forall(nc =>
           if (isNull) nc > 0 else nc < r.numRows))
-      case OrPred(_, parts) => parts.exists(mayHold(f, _))
+      case OrPred(_, parts) =>
+        val tests = parts.map(holds)
+        f => tests.exists(_(f))
     }
     (opened.flatMap { case (files, p) =>
-      files.filter(f => FileStats.versionOf(f).isEmpty || mayHold(f, p))
+      val test = holds(p)
+      files.filter(f => FileStats.versionOf(f).isEmpty || test(f))
     }, total)
   }
 

@@ -93,6 +93,24 @@ class LayoutSpec extends SparkSpec {
     assert(wh.read("t").count() === 20000)
   }
 
+  test("point pruning: legacy root files in a flat manifest are kept, even for an empty IN") {
+    import spark.implicits._
+    val (wh, tmp) = mk("graft-legacy-in")
+    // a pre-manifest table: one parquet file at the table root, no sidecars
+    Seq(1L, 2L).toDF("k").coalesce(1).write.parquet(s"$tmp/t")
+    // the first commit lists the root file next to its own _v1 file
+    wh.append("t", Seq(10L, 11L).toDF("k").coalesce(1))
+    val (none, total) = wh.pruneFilesEquals("t", "k", Seq.empty)
+    assert(total === 2, s"root file + _v1 file expected, saw $total")
+    // no metadata proves the root file empty, whatever the probe; the
+    // _v1 file's stats rule out every value of an empty IN
+    assert(none.size === 1 && !none.head.startsWith("_v"), s"kept $none")
+    assert(wh.pruneFilesEquals("t", "k", Seq(99L))._1 === none)
+    assert(wh.pruneFilesEquals("t", "k", Seq(10L))._1.size === 2)
+    assert(wh.readEquals("t", "k", Seq.empty).count() === 0)
+    assert(wh.readEquals("t", "k", Seq(1L, 10L)).count() === 2)
+  }
+
   test("statsMinMax: exact metadata-only min/max, None when stats incomplete") {
     import spark.implicits._
     val (wh, _) = mk("graft-mm")
@@ -1023,20 +1041,20 @@ class LayoutSpec extends SparkSpec {
     // both layouts in both manifest formats: chunked (8 chunks of 4
     // files, 16 chunks of one) and flat at the default chunk size — the
     // prune must not depend on the format
-    def publish(chunk: Option[Int]): (Warehouse, Warehouse) = {
-      def mkWh(tag: String) = {
+    def publish(chunk1: Option[Int], chunk2: Option[Int]): (Warehouse, Warehouse) = {
+      def mkWh(tag: String, chunk: Option[Int]) = {
         val tmp = java.nio.file.Files.createTempDirectory(tag).toString
         chunk.fold(new Warehouse(spark, tmp))(c =>
           new Warehouse(spark, tmp, manifestChunkSize = c))
       }
-      val wh1 = mkWh("graft-fuzz1")
+      val wh1 = mkWh("graft-fuzz1", chunk1)
       wh1.atomicPublish("t", base)
-      val wh2 = mkWh("graft-fuzz2")
+      val wh2 = mkWh("graft-fuzz2", chunk2)
       wh2.atomicPublish("t", parts, partitionCols = Seq("d"))
       (wh1, wh2)
     }
-    val (c1, c2) = publish(Some(4))
-    val (f1, f2) = publish(None)
+    val (c1, c2) = publish(Some(4), Some(1))
+    val (f1, f2) = publish(None, None)
     for (i <- 1 to 25) {
       val lo = rnd.nextInt(11000) - 500L // ranges beyond both edges too
       val hi = lo + rnd.nextInt(4000)
