@@ -1,5 +1,9 @@
 package graft
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.LocalFileSystem
+import org.apache.hadoop.fs.local.LocalFs
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
@@ -40,10 +44,28 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * use. Limit: if anything in the JVM generated code before the first
   * graft session was built, the cache already exists and keeps the
   * size it was built with.
+  *
+  * It also installs the engine's `file://` FileSystem on the active
+  * `SparkContext`'s Hadoop configuration: `fs.file.impl` names
+  * `graft.sources.NioLocalFileSystem` and
+  * `fs.AbstractFileSystem.file.impl` (FileContext, through which
+  * Spark's streaming checkpoint manager renames) names
+  * `graft.sources.NioLocalFs`. With no native Hadoop library loaded,
+  * Hadoop's own local FileSystem starts a `chmod` process for every
+  * create and mkdir and a `readlink` process for every link probe,
+  * about 420 per catalog pass; these classes do the same through
+  * java.nio, with the same permission bits and `.crc` sidecars. A key
+  * the configuration already sets to a class of its own (e.g.
+  * `spark.hadoop.fs.file.impl`) is left alone. Limit: Hadoop caches a
+  * FileSystem per scheme for the JVM, so if anything opened a
+  * `file://` FileSystem before the first graft session was built, the
+  * JVM keeps Hadoop's class.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.codegenCacheSized
+    // applyExtensions runs after the session's SparkContext is active
+    GraftExtensions.installLocalFs(SparkContext.getOrCreate().hadoopConfiguration)
     graft.functions.NativeExprs.builders.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(classOf[GraftExtensions].getName, name), builder))
@@ -104,5 +126,15 @@ object GraftExtensions {
     val conf = new SQLConf
     conf.setConf(StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES, CodegenCacheEntries)
     SQLConf.withExistingConf(conf)(CodeGenerator.compileTime)
+  }
+
+  /** Names the engine's `file://` classes (see the class doc) under each
+    * key that is unset or names Hadoop's default.
+    */
+  private[graft] def installLocalFs(conf: Configuration): Unit = Seq(
+    "fs.file.impl" -> (classOf[LocalFileSystem], classOf[graft.sources.NioLocalFileSystem]),
+    "fs.AbstractFileSystem.file.impl" -> (classOf[LocalFs], classOf[graft.sources.NioLocalFs])
+  ).foreach { case (key, (hadoop, nio)) =>
+    if (Option(conf.get(key)).forall(_ == hadoop.getName)) conf.set(key, nio.getName)
   }
 }

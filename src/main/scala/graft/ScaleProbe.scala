@@ -186,7 +186,14 @@ object ScaleProbe {
     *    must stay ≪ the snapshot resolution the read already does;
     *  - `meta_count` / `meta_minmax`: the `_rows` / `_stats` sidecar
     *    sweeps behind MetaAggRule's collapse — O(files) driver
-    *    metadata vs a data scan.
+    *    metadata vs a data scan;
+    *  - `prune_join128`: a JoinSkip-sized IN over spread keys.
+    *
+    * All legs run in `AutoskipWarmups` untimed passes, then in
+    * `AutoskipTimed` timed ones, in one JVM; a leg prints the median
+    * (`sec`) and the min–max of its timed passes. A single timing in a
+    * fresh JVM spread 30–65% across runs at 100k files and included
+    * JIT warm-up.
     */
   def autoskipSweep(spark: SparkSession, workDir: String,
       sizes: Seq[Int]): Unit = {
@@ -217,52 +224,67 @@ object ScaleProbe {
       }
       val mf = wh.currentVersion("t").map(v => s"_manifest_v$v")
       val mid = nf / 2 * 100L
-      var kept = 0
-      val tNarrow = time {
-        kept = wh.pruneForPreds("t", mf, Seq(graft.plans.AutoSkip
-          .RangePred("k", Some(mid), Some(mid + 50L)))).map(_.size).getOrElse(-1)
-      }
-      val tWide = time {
-        wh.pruneForPreds("t", mf, Seq(graft.plans.AutoSkip
-          .RangePred("k", Some(0L), Some(nf * 100L))))
-      }
-      val tEnroll = time {
-        // the rule's ONE-TIME per-index normalization (memoized by
-        // normFiles): the O(files) Path/URI cost the first filtered
-        // query on this scan pays; registration itself is O(1) per
-        // relation (endpoint checks)
-        var i = 0
-        while (i < files.length) {
-          graft.plans.AutoSkip.norm(s"$dir/t/${files(i)}"); i += 1
-        }
-      }
-      val tCount = time(require(wh.statsRowCount("t").contains(nf * 100L)))
-      val tMinMax = time(require(
-        wh.statsMinMax("t", "k").contains((0L, nf * 100L - 1L))))
       // the JoinSkipRule payload: a maxKeys-sized InPred over spread
       // keys — bounds the per-query prune cost of a dim-driven star
       // join at this file count (the dim collect itself is dim-sized,
       // not files-sized, so it doesn't belong in this sweep)
-      var keptJ = 0
       val joinKeys: Seq[Any] = (0 until graft.plans.JoinSkip.maxKeys)
         .map(i => java.lang.Long.valueOf(i.toLong * (nf.toLong * 100 / graft.plans.JoinSkip.maxKeys)))
-      val tJoin = time {
-        keptJ = wh.pruneForPreds("t", mf,
-          Seq(graft.plans.AutoSkip.InPred("k", joinKeys)))
-          .map(_.size).getOrElse(-1)
+      var kept = 0
+      var keptJ = 0
+      // one pass times every leg once, on a fresh Warehouse, so no
+      // reader memo carries over from the pass before
+      def pass(): Seq[(String, Double)] = {
+        val w = new graft.sources.Warehouse(spark, dir)
+        Seq(
+          "prune_narrow" -> time {
+            kept = w.pruneForPreds("t", mf, Seq(graft.plans.AutoSkip
+              .RangePred("k", Some(mid), Some(mid + 50L)))).map(_.size).getOrElse(-1)
+          },
+          "prune_wide" -> time {
+            w.pruneForPreds("t", mf, Seq(graft.plans.AutoSkip
+              .RangePred("k", Some(0L), Some(nf * 100L))))
+          },
+          // the rule's ONE-TIME per-index normalization (memoized by
+          // normFiles): the O(files) Path/URI cost the first filtered
+          // query on this scan pays; registration itself is O(1) per
+          // relation (endpoint checks)
+          "enroll" -> time {
+            var i = 0
+            while (i < files.length) {
+              graft.plans.AutoSkip.norm(s"$dir/t/${files(i)}"); i += 1
+            }
+          },
+          "meta_count" -> time(require(w.statsRowCount("t").contains(nf * 100L))),
+          "meta_minmax" -> time(require(
+            w.statsMinMax("t", "k").contains((0L, nf * 100L - 1L)))),
+          "prune_join128" -> time {
+            keptJ = w.pruneForPreds("t", mf,
+              Seq(graft.plans.AutoSkip.InPred("k", joinKeys)))
+              .map(_.size).getOrElse(-1)
+          })
       }
-      Seq("prune_narrow" -> tNarrow, "prune_wide" -> tWide,
-        "enroll" -> tEnroll, "meta_count" -> tCount,
-        "meta_minmax" -> tMinMax, "prune_join128" -> tJoin)
-        .foreach { case (op, s) =>
-          println(f"""{"op":"$op","files":$nf,"sec":$s%.4f}""")
-        }
-      System.err.println(f"[scaleprobe] autoskip n=$nf: narrow=$tNarrow%.4fs " +
-        f"(kept=$kept) wide=$tWide%.3fs enroll=$tEnroll%.3fs " +
-        f"count=$tCount%.4fs minmax=$tMinMax%.4fs join128=$tJoin%.3fs " +
-        f"(keptJ=$keptJ)")
+      (1 to AutoskipWarmups).foreach(_ => pass())
+      val timed = Seq.fill(AutoskipTimed)(pass())
+      val legs = timed.head.map(_._1).map { op =>
+        val s = timed.map(_.toMap.apply(op)).sorted
+        (op, s(s.size / 2), s.head, s.last)
+      }
+      legs.foreach { case (op, med, lo, hi) =>
+        println(f"""{"op":"$op","files":$nf,"sec":$med%.4f,"min":$lo%.4f,"max":$hi%.4f}""")
+      }
+      System.err.println(s"[scaleprobe] autoskip n=$nf (kept=$kept keptJ=$keptJ), " +
+        s"median of $AutoskipTimed passes after $AutoskipWarmups warm-ups: " +
+        legs.map { case (op, med, lo, hi) => f"$op=$med%.4fs ($lo%.4f–$hi%.4f)" }.mkString(" "))
     }
   }
+
+  /** Passes of the autoskip sweep: the warm-up passes train the JIT and
+    * are not reported; each leg then reports the median and the min–max
+    * of the timed passes.
+    */
+  private val AutoskipWarmups = 3
+  private val AutoskipTimed = 7
 
   /** Hub-skew sweep (`runMain graft.ScaleProbe skew <workDir>
     * <d1,d2,...>`): a synthetic co-purchase corpus — 5000 ordinary

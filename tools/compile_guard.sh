@@ -7,7 +7,8 @@
 # Run this before ANY end-of-round / milestone commit:
 #   tools/compile_guard.sh && git commit ...
 # Exit 0 = no stray session builder, thread pool, sidecar file name,
-# in-flight grace check or hand-decoded hive segment in main code,
+# in-flight grace check, hand-decoded hive segment or local FileSystem
+# key (`fs.file.impl`, `fs.AbstractFileSystem.file.impl`) in main code,
 # `sbt compile` (main + test sources) is green and the benchmark harness
 # (perfbench/build.py: src/main compiled together with perfbench/src)
 # builds; nonzero otherwise, with the offending lines or the tail of the
@@ -73,6 +74,16 @@ hivesegs=$(code_lines '__HIVE_DEFAULT_PARTITION__|startsWith\([^)]*\+ *"="' \
 if [ -n "$hivesegs" ]; then
   echo "compile_guard: RED — hive partition segment decoded outside Warehouse.hiveSegs (use hiveSeg/hiveSegs):" >&2
   echo "$hivesegs" >&2
+  exit 1
+fi
+# One installer of the local FileSystem: GraftExtensions names the
+# graft `file://` classes on the session's Hadoop conf (unless the conf
+# names its own); no other main code sets or reads either key.
+localfs=$(code_lines 'fs\.(AbstractFileSystem\.)?file\.impl' \
+  | grep -v '^src/main/scala/graft/GraftExtensions\.scala:')
+if [ -n "$localfs" ]; then
+  echo "compile_guard: RED — local FileSystem key named outside GraftExtensions.scala (GraftExtensions installs it):" >&2
+  echo "$localfs" >&2
   exit 1
 fi
 log=$(mktemp /tmp/compile_guard.XXXXXX.log)
