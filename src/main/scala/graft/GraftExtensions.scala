@@ -54,7 +54,8 @@ import org.apache.spark.sql.internal.{SQLConf, StaticSQLConf}
   * Hadoop's own local FileSystem starts a `chmod` process for every
   * create and mkdir and a `readlink` process for every link probe,
   * about 420 per catalog pass; these classes do the same through
-  * java.nio, with the same permission bits and `.crc` sidecars. A key
+  * java.nio, with the same permission bits, `.crc` sidecars and rename
+  * contract as the classes they replace. A key
   * the configuration already sets to a class of its own (e.g.
   * `spark.hadoop.fs.file.impl`) is left alone. Limit: Hadoop caches a
   * FileSystem per scheme for the JVM, so if anything opened a
